@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Canon, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -37,10 +37,14 @@ object EmbeddingOps {
     * sampling weights. Lloyd's algorithm, made exactly reproducible
     * cross-engine:
     *
-    *  - everything is RELATIONAL on the exploded (vec_id, dim, v)
-    *    stream — distances and centroid sums are per-dimension rows,
-    *    so the same SQL runs in DuckDB and the oracle covers the whole
-    *    iteration, not just the final labels;
+    *  - the k·dim centroid table is a tiny MODEL, so every round
+    *    collects it and broadcasts it back as a k-row table (the
+    *    small-side broadcast of "MapReduce Algorithms for Big Data
+    *    Analysis", VLDB 2012): assignment is one dim-term distance
+    *    expression per (vector, centroid) row — no join on `dim`, no
+    *    explode — and the DuckDB oracle unrolls the same iterations as
+    *    per-dimension CTEs, so it covers the whole iteration, not just
+    *    the final labels;
     *  - the squared-distance contribution of each dimension is
     *    DECIMAL(30,6)-canonicalized BEFORE summation (the [[graft.Canon]]
     *    discipline): the per-vector distance is an exact,
@@ -48,20 +52,21 @@ object EmbeddingOps {
     *    partial-aggregation-order-dependent and could flip an argmin
     *    near a tie;
     *  - assignment ties break on cluster id; seeds are the k smallest
-    *    vec_ids (k-means++ is the quality swap, same plan shape);
+    *    vec_ids (k-means++ is the quality swap, same kernel);
     *    iteration count is FIXED ([[KmeansIters]]) — a convergence test
     *    would make the iteration count data-dependent and the oracle
     *    unmirrorable;
     *  - a centroid that loses all members simply vanishes (k shrinks) —
-    *    deterministic in both engines.
+    *    deterministic in both engines;
+    *  - a null or zero-length embedding has no distance to anything: it
+    *    takes no label and never seeds (the oracle's unnest drops it).
     *
-    * Scale: per iteration, ONE pts×centroids equi-join on `dim` (k·dim
-    * rows broadcast — centroids are always tiny), one map-side-combining
-    * aggregate per (vec, cid), the argmin as a min-of-struct AGGREGATE
-    * (k rows per vec — never a corpus-keyed window), and one (cid, dim)
-    * centroid aggregate. Work per iteration is O(n·k·dim) row
-    * operations, embarrassingly parallel; the corpus never shuffles by
-    * anything other than (vec_id) / (cid, dim) keys. */
+    * Scale: per iteration, one broadcast cross join of the corpus with
+    * the k-row centroid table (n·k distance rows, codegen'd), the argmin
+    * as a min-of-struct AGGREGATE per vector (never a corpus-keyed
+    * window), and one k-row mean aggregate collected as the next model.
+    * Work per iteration is O(n·k·dim) arithmetic, embarrassingly
+    * parallel; the corpus only ever shuffles by vec_id. */
   val KmeansK = 8
   val KmeansIters = 3
 
@@ -96,233 +101,204 @@ object EmbeddingOps {
     * [[kmeansOver]] — the labeling surface [[clusterSemdedup]] (d60)
     * composes with; split out so the cluster-scoped consumers share
     * the exact iteration chain the d59 oracle unrolls. */
-  private[graft] def kmeansLabels(emb: DataFrame, k: Int, iters: Int): DataFrame =
-    if (arrayDistOn(emb)) {
-      val ea = persistCorpus(arraysOf(emb))
-      assignToLits(ea, lloydCentroidArrays(ea, emb, k, iters))
-    } else {
-      val pts = persistCorpus(emb.select(col("vec_id"),
-        posexplode(asDouble(col("embedding")))).toDF("vec_id", "dim", "v"))
-      assignOver(pts, lloydCentroids(emb, pts, k, iters))
-    }
-
-  // ——— the ARRAY-DISTANCE Lloyd path (round 19, guide §1.2/§2.4) ———
-  //
-  // The exploded kernel's per-iteration assignment is a broadcast join
-  // on `dim` that materializes n·dim·k rows and shuffles an n·k decimal
-  // aggregate — at sf0.1 that is ~20M joined rows per Lloyd round for
-  // 5 000 vectors. But the centroid table is a k·dim MODEL (≤ 512
-  // doubles): collecting it to the driver (the s26/ivfCells
-  // centroid-collect discipline — "driver collects are centroid-sized")
-  // turns assignment into a PURE MAP: per centroid, dist² is a fixed
-  // dim-term codegen'd expression over literal centroid components, and
-  // the argmin is `least` over k (dist2, cid) structs — ZERO joins,
-  // ZERO shuffles, no interpreted higher-order folds (the minhash
-  // lesson: HOF folds run interpreted). Values are BIT-IDENTICAL to the
-  // exploded chain: each term is the same dec((v_i − c_i)²) decimal,
-  // decimal addition is exact and order-independent (the reduce's left
-  // fold ≡ the aggregate's partial sums), the (38,6) result type
-  // matches Sum's, and `least(struct(dist2, cid)…)` is the same
-  // (dist2, cid) ordering as `min(struct(dist2, cid))`. The per-round
-  // mean recompute keeps the d59 expression shape — sum(dec(x)) /
-  // count per (cid, dim), now as dim parallel aggregate columns over
-  // the array frame with the k-row result collected per round (the
-  // lloydCentroids round-materialization discipline, minus the cache).
-  // `spark.graft.kmeansArrayDist=false` restores the exploded kernel
-  // (LlmOpsSpec pins the planted-cluster fixtures and determinism on
-  // the default path; the d59/d61/s18/d60 oracles gate equivalence).
-
-  private def arrayDistOn(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("spark.graft.kmeansArrayDist", "true").toBoolean
-
-  private def arraysOf(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-
-  /** Assignment of an array frame (vec_id, v) to an in-memory centroid
-    * set: (vec_id, cid, dist2), argmin by (dist2, cid). The k·dim
-    * centroids broadcast as a k-row (cid, carr) local table; dist² is
-    * ONE dim-term decimal expression per (vector, centroid) row —
-    * n·k rows instead of the exploded kernel's n·dim·k joined rows —
-    * and the argmin is [[assignOver]]'s min(struct) aggregate verbatim.
-    * (The first cut inlined all k distance chains into one projection:
-    * k·dim decimal terms blew Janino's 64 KB method limit and the whole
-    * stage fell back to INTERPRETED — d61 +28%, s18 +69%. One chain per
-    * row keeps the generated method compilable.) Empty centroid set ⇒
-    * empty labels (the exploded path's empty-join semantics). */
-  private def assignToLits(ea: DataFrame,
-      cents: Seq[(Long, Array[Double])]): DataFrame = {
-    val s = ea.sparkSession
-    import s.implicits._
-    if (cents.isEmpty)
-      return ea.select(col("vec_id"), col("vec_id").as("cid"),
-        lit(java.math.BigDecimal.ZERO).cast("decimal(38,6)").as("dist2"))
-        .limit(0)
-    val dim = cents.head._2.length
-    val centTbl = cents.map { case (cid, cv) => (cid, cv.toSeq) }
-      .toDF("cid", "carr")
-    val d2 = (0 until dim).map { i =>
-      val d = element_at(col("v"), i + 1) - element_at(col("carr"), i + 1)
-      graft.Canon.dec(d * d)
-    }.reduceLeft(_ + _)
-    ea.crossJoin(broadcast(centTbl))
-      .select(col("vec_id"), col("cid"), d2.as("dist2"))
-      .groupBy("vec_id")
-      .agg(min(struct(col("dist2"), col("cid"))).as("w"))
-      .select(col("vec_id"), col("w.cid").as("cid"), col("w.dist2").as("dist2"))
+  private[graft] def kmeansLabels(emb: DataFrame, k: Int, iters: Int): DataFrame = {
+    val ea = persistCorpus(arraysOf(emb))
+    assignArr(ea, kmeansModel(ea, k, iters)).drop("m")
   }
 
-  /** [[assignToLits]] against a (cid, dim, c) centroid RELATION (the
-    * published-model read path): collects the k·dim model rows. */
-  private[graft] def assignToCentroids(ea: DataFrame, c: DataFrame): DataFrame =
-    assignToLits(ea, collectCentroids(c))
-
-  private def collectCentroids(c: DataFrame): Seq[(Long, Array[Double])] =
-    Sources.labeled(c.sparkSession, "kmeans-centroid-collect") {
-      c.select(col("cid").cast("long"), col("dim").cast("int"),
-          col("c").cast("double")).collect()
-    }.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
-      .map { case (cid, rows) =>
-        val byDim = rows.map(r => r.getInt(1) -> r.getDouble(2)).toMap
-        (cid, Array.tabulate(byDim.size)(byDim))
-      }
-
-  /** The Lloyd loop over the array frame: literal-centroid assignment
-    * per round, per-(cid, dim) decimal mean as dim parallel aggregate
-    * columns, k-row collect per round. Returns the final centroids. */
-  private[graft] def lloydCentroidArrays(ea: DataFrame, emb: DataFrame,
-      k: Int, iters: Int): Seq[(Long, Array[Double])] = {
-    val plusPlus = ea.sparkSession.conf
-      .get("spark.graft.kmeansPlusPlus", "false").toBoolean
-    val seedRows =
-      if (plusPlus) {
-        val pts = persistCorpus(emb.select(col("vec_id"),
-          posexplode(asDouble(col("embedding")))).toDF("vec_id", "dim", "v"))
-        try ea.join(farthestPointSeeds(emb, pts, k), Seq("vec_id"), "left_semi")
-          .collect()
-        finally pts.unpersist(blocking = false)
-      } else ea.orderBy("vec_id").limit(k).collect()
-    var cents = seedRows.toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    if (cents.isEmpty) return cents
-    val dim = cents.head._2.length
-    val meanCols = (0 until dim).map(i =>
-      (dsum(element_at(col("v"), i + 1)) / count(lit(1))).as(s"c$i"))
-    for (_ <- 1 to iters) {
-      val asg = assignToLits(ea, cents).select(col("vec_id"), col("cid"))
-      val rows = Sources.labeled(ea.sparkSession, "kmeans-lloyd-round") {
-        ea.join(asg, "vec_id").groupBy("cid")
-          .agg(meanCols.head, meanCols.tail: _*).collect() }
-      cents = rows.toSeq
-        .map(r => (r.getLong(0), Array.tabulate(dim)(i => r.getDouble(i + 1))))
-        .sortBy(_._1)
-    }
-    cents
-  }
-
-  /** The (cid, dim, c) relation of a literal centroid set — what the
-    * model-table publishers (d61 batch-0 centroids, s18) stage. */
-  private def centroidRelation(s: SparkSession,
-      cents: Seq[(Long, Array[Double])]): DataFrame = {
+  /** The Lloyd-refined centroid RELATION (cid, dim, c) behind
+    * [[kmeansLabels]] — what s18 trains ONCE on its reference batch,
+    * publishes, and freezes. */
+  private[graft] def lloydCentroids(emb: DataFrame, k: Int, iters: Int): DataFrame = {
+    val s = emb.sparkSession
     import s.implicits._
-    cents.flatMap { case (cid, cv) =>
+    val ea = persistCorpus(arraysOf(emb))
+    try kmeansModel(ea, k, iters).flatMap { case (_, cid, cv) =>
       cv.zipWithIndex.map { case (c, i) => (cid, i, c) }
     }.toDF("cid", "dim", "c")
+    finally ea.unpersist(blocking = false)
   }
 
-  /** Assignment of an exploded (vec_id, dim, v) point set to a
-    * broadcast (cid, dim, c) centroid table — the one shared kernel
-    * behind [[kmeansLabels]]' final pass AND the s18 incremental
-    * maintenance (new vectors against FROZEN centroids). */
-  private[graft] def assignOver(pts: DataFrame, c: DataFrame): DataFrame =
-    pts.join(broadcast(c), "dim")
-      .groupBy(col("vec_id"), col("cid"))
-      .agg(sum(dec((col("v") - col("c")) * (col("v") - col("c")))).as("dist2"))
-      .groupBy("vec_id")
-      .agg(min(struct(col("dist2"), col("cid"))).as("w"))
-      .select(col("vec_id"), col("w.cid").as("cid"), col("w.dist2").as("dist2"))
-
-  /** [[assignOver]] from a raw (vec_id, embedding) frame — the s18
-    * read path for a new micro-batch. Under the array-distance knob the
-    * k·dim centroid RELATION (frozen, published) is collected and the
-    * assignment is the literal-centroid map — same values, no join. */
+  /** New vectors of a (vec_id, embedding) frame against a published
+    * (cid, dim, c) centroid relation — the s18 admission path. */
   private[graft] def assignEmbeddings(emb: DataFrame, c: DataFrame): DataFrame =
-    if (arrayDistOn(emb)) assignToCentroids(arraysOf(emb), c)
-    else assignOver(emb.select(col("vec_id"),
-      posexplode(asDouble(col("embedding")))).toDF("vec_id", "dim", "v"), c)
+    assignToCentroids(arraysOf(emb), c)
 
-  /** The Lloyd-refined centroid table (cid, dim, c) behind
-    * [[kmeansLabels]], split out so s18 can train ONCE on the reference
-    * slice and freeze. `pts` is the already-exploded form of `emb`. */
-  private[graft] def lloydCentroids(emb: DataFrame, pts: DataFrame,
-      k: Int, iters: Int): DataFrame = {
-    // array-distance path (round 19): train via literal-centroid maps
-    // and return the SAME (cid, dim, c) relation as a local table —
-    // the s18 publisher stages identical model rows. `pts` is left
-    // unevaluated (it is the exploded form this path exists to avoid).
-    if (arrayDistOn(emb)) {
-      val ea = persistCorpus(arraysOf(emb))
-      try return centroidRelation(emb.sparkSession,
-        lloydCentroidArrays(ea, emb, k, iters))
-      finally ea.unpersist(blocking = false)
+  /** An array frame (vec_id, v) against a (cid, dim, c) centroid
+    * relation: (vec_id, cid, dist2). */
+  private[graft] def assignToCentroids(ea: DataFrame, c: DataFrame): DataFrame =
+    assignArr(ea, collectModel(c, "kmeans-centroid-collect")).drop("m")
+
+  // ——— the ONE assignment kernel and Lloyd loop of k-means and PQ ———
+  //
+  // A model is a set of (m, cid, c) centroids: sub-space m of a vector
+  // covers positions m·w … m·w+w−1 (w = the centroid width). k-means is
+  // the single sub-space m = 0 with w = dim; PQ splits the vector into m
+  // sub-spaces and trains all codebooks in one chain, because keying the
+  // argmin and the mean by m computes the same per-sub-space answers as
+  // m separate k-means runs (LlmOpsSpec pins it).
+
+  /** (sub-space m, cid, centroid slice) — see the kernel note above. */
+  private type Model = Seq[(Int, Long, Array[Double])]
+
+  /** (vec_id, v: array<double>) of a (vec_id, embedding) frame. */
+  private def arraysOf(emb: DataFrame): DataFrame =
+    usable(emb.select(col("vec_id"), asDouble(col("embedding")).as("v")))
+
+  /** Drops null and zero-length vectors — they have no distance to any
+    * centroid, so they get no label and must never seed. */
+  private def usable(ea: DataFrame): DataFrame = ea.filter(size(col("v")) > 0)
+
+  /** Assignment of an array frame (vec_id, v) to an in-memory model:
+    * (vec_id, m, cid, dist2), argmin by (dist2, cid) per (vector,
+    * sub-space). The model broadcasts as a |model|-row table and dist²
+    * is ONE w-term decimal expression per (vector, centroid) row, each
+    * term dec((v_i − c_i)²): decimal addition is exact, so the distance
+    * equals the oracle's per-dimension SUM whatever the order. (Inlining
+    * all k distance chains into one projection blew Janino's 64 KB
+    * method limit and the stage fell back to INTERPRETED; one chain per
+    * row compiles.) An empty model gives empty labels. */
+  private def assignArr(ea: DataFrame, model: Model): DataFrame = {
+    val s = ea.sparkSession
+    import s.implicits._
+    if (model.isEmpty)
+      return ea.select(col("vec_id"), lit(0).as("m"), col("vec_id").as("cid"),
+        lit(java.math.BigDecimal.ZERO).cast("decimal(38,6)").as("dist2"))
+        .limit(0)
+    val tbl = model.map { case (mi, cid, cv) => (mi, cid, cv.toSeq) }
+      .toDF("m", "cid", "carr")
+    val d2 = model.head._3.indices.map { i =>
+      val d = element_at(col("v"), pos(model, i)) - element_at(col("carr"), i + 1)
+      dec(d * d)
+    }.reduceLeft(_ + _)
+    // one sub-space (k-means) argmins per vector alone: the output then
+    // stays hash-partitioned by vec_id, so vec_id-keyed consumers (the
+    // Lloyd join, s18's dedup) add no shuffle; m rides the struct
+    val keys = if (subspaced(model)) Seq("vec_id", "m") else Seq("vec_id")
+    ea.crossJoin(broadcast(tbl))
+      .select(col("vec_id"), col("m"), col("cid"), d2.as("dist2"))
+      .groupBy(keys.map(col): _*)
+      .agg(min(struct(col("dist2"), col("cid"), col("m"))).as("w"))
+      .select(col("vec_id"), col("w.m").as("m"), col("w.cid").as("cid"),
+        col("w.dist2").as("dist2"))
+  }
+
+  /** Whether a model spans several sub-spaces (PQ). */
+  private def subspaced(model: Model): Boolean =
+    model.exists(_._1 != model.head._1)
+
+  /** The 1-based position in v of element i of a model's centroids. A
+    * single sub-space (k-means) gets a literal: the per-row `m` offset
+    * made a 2-vector s18 admission ~15–20% slower on a 4-CPU host, a
+    * fixed per-query cost, not a per-row one. */
+  private def pos(model: Model, i: Int): Column = {
+    val w = model.head._3.length
+    if (subspaced(model)) col("m") * w + (i + 1) else lit(model.head._1 * w + i + 1)
+  }
+
+  /** Per-position decimal means sum(dec(x)) / count of `w` positions of
+    * v — the centroid update of every Lloyd loop, as w parallel
+    * aggregate columns. */
+  private def meanCols(w: Int)(pos: Int => Column): Seq[Column] =
+    (0 until w).map(i =>
+      (dsum(element_at(col("v"), pos(i))) / count(lit(1))).as(s"c$i"))
+
+  /** `iters` Lloyd rounds from `seeds`: [[assignArr]] against the current
+    * model, then the per-(m, cid) decimal mean, whose |model|-row result
+    * is collected as the next model — one job per round, labeled
+    * `label`. A centroid that loses all members drops out. */
+  private def lloyd(ea: DataFrame, seeds: Model, iters: Int,
+      label: String): Model = {
+    var model = seeds
+    for (_ <- 1 to iters if model.nonEmpty) {
+      val w = model.head._3.length
+      val means = meanCols(w)(pos(model, _))
+      val asg = assignArr(ea, model).select("vec_id", "m", "cid")
+      val rows = Sources.labeled(ea.sparkSession, label) {
+        ea.join(asg, "vec_id").groupBy("m", "cid")
+          .agg(means.head, means.tail: _*).collect() }
+      model = rows.toSeq.map(r => (r.getInt(0), r.getLong(1),
+        Array.tabulate(w)(i => r.getDouble(i + 2)))).sortBy(c => (c._1, c._2))
     }
-    // seeding: smallest-vec_id seeds by default — arbitrary but
-    // oracle-mirrorable (the DuckDB CTEs pin the same k ids). The
-    // quality swap is `spark.graft.kmeansPlusPlus` (off by default so
-    // every oracle keeps exact semantics — the approx-percentile
-    // rewrite's flag discipline): deterministic k-means++ in its
-    // farthest-point form — greedy argmax of the canonicalized
-    // min-distance-to-chosen instead of a D²-weighted random draw
-    // (same spread-out-seeds effect, no RNG to mirror), each round the
-    // SAME plan shape as assign(): one dim-keyed join vs the broadcast
-    // chosen seeds, one (vec, seed) decimal aggregate, one min per
-    // vec, one global argmax; k−1 sequential corpus passes total.
-    val plusPlus = emb.sparkSession.conf
+    model
+  }
+
+  /** Seeds from whole (vec_id, v) rows: vector id becomes the cid of its
+    * `w`-wide slice in each of `m` sub-spaces. */
+  private def seedModel(rows: Seq[Row], m: Int, w: Int): Model =
+    rows.flatMap { r =>
+      val v = r.getSeq[Double](1).toArray
+      (0 until m).map(mi => (mi, r.getLong(0), v.slice(mi * w, (mi + 1) * w)))
+    }.sortBy(c => (c._1, c._2))
+
+  /** Whole-vector seeds (m = 0, w = dim of the first row). */
+  private def vectorSeeds(rows: Seq[Row]): Model =
+    seedModel(rows, 1, rows.headOption.fold(0)(_.getSeq[Double](1).length))
+
+  /** The d59 model over a [[usable]] array frame. Seeding: the k
+    * smallest vec_ids by default — arbitrary but oracle-mirrorable (the
+    * DuckDB CTEs pin the same k ids). The quality swap is
+    * `spark.graft.kmeansPlusPlus` (off by default so every oracle keeps
+    * exact semantics — the approx-percentile rewrite's flag
+    * discipline). */
+  private def kmeansModel(ea: DataFrame, k: Int, iters: Int): Model = {
+    val plusPlus = ea.sparkSession.conf
       .get("spark.graft.kmeansPlusPlus", "false").toBoolean
-    val seedIds =
-      if (plusPlus) farthestPointSeeds(emb, pts, k)
-      else emb.select(col("vec_id")).orderBy("vec_id").limit(k)
-    var cent = pts.join(broadcast(seedIds), "vec_id")
-      .select(col("vec_id").as("cid"), col("dim"), col("v").as("c"))
-      .cache()
-    for (_ <- 1 to iters) {
-      val next = pts
-        .join(assignOver(pts, cent).select("vec_id", "cid"), "vec_id")
-        .groupBy("cid", "dim")
-        .agg((dsum(col("v")) / count(lit(1))).as("c"))
-        .cache()
-      next.count() // materialize before releasing the parent iteration
-      cent.unpersist(blocking = false)
-      cent = next
+    val seeds =
+      if (plusPlus) farthestPointSeeds(ea, k)
+      else vectorSeeds(ea.orderBy("vec_id").limit(k).collect().toSeq)
+    lloyd(ea, seeds, iters, "kmeans-lloyd-round")
+  }
+
+  /** Collects a model RELATION — a (cid, dim, c) centroid table (the
+    * single sub-space 0) or an (m, cid, dim, c) codebook — into the
+    * in-memory [[Model]], one job labeled `label`. Refuses, naming the
+    * centroid, a relation whose dims are not exactly 0 … w−1 for every
+    * (m, cid), or whose centroid widths differ. */
+  private def collectModel(c: DataFrame, label: String): Model = {
+    val mCol = if (c.columns.contains("m")) col("m").cast("int") else lit(0)
+    val rows = Sources.labeled(c.sparkSession, label) {
+      c.select(mCol, col("cid").cast("long"), col("dim").cast("int"),
+        col("c").cast("double")).collect() }
+    val model = rows.toSeq.groupBy(r => (r.getInt(0), r.getLong(1))).toSeq
+      .sortBy(_._1)
+      .map { case ((mi, cid), rs) =>
+        val dims = rs.map(_.getInt(2)).sorted
+        require(dims == dims.indices,
+          s"model row set for cid=$cid (sub-space $mi) has dims " +
+            s"${dims.mkString("[", ",", "]")}, not 0..${dims.size - 1}")
+        (mi, cid, rs.sortBy(_.getInt(2)).map(_.getDouble(3)).toArray)
+      }
+    model.find(_._3.length != model.head._3.length).foreach { case (mi, cid, cv) =>
+      throw new IllegalArgumentException(
+        s"model row set for cid=$cid (sub-space $mi) is ${cv.length} wide, " +
+          s"not ${model.head._3.length} like cid=${model.head._2}")
     }
-    cent
+    model
   }
 
   /** Greedy farthest-point seed selection (the deterministic k-means++
     * variant behind `spark.graft.kmeansPlusPlus`): seed 1 = smallest
     * vec_id; each next seed = the point with MAXIMUM decimal-exact
-    * min-distance to the chosen set (ties → smallest vec_id). Driver
-    * holds only the ≤ k chosen ids. */
-  private def farthestPointSeeds(emb: DataFrame, pts: DataFrame, k: Int): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val firstRow = emb.agg(min(col("vec_id"))).head()
-    if (firstRow.isNullAt(0)) return emb.select(col("vec_id")).limit(0)
-    var chosen = List(firstRow.getLong(0))
-    var done = false
+    * min-distance to the chosen set (ties → smallest vec_id) instead of
+    * a D²-weighted random draw: the same spread-out seeds, no RNG to
+    * mirror. Each round assigns the not-yet-chosen vectors to the
+    * chosen seeds with [[assignArr]], then takes one global argmax; k−1
+    * sequential corpus passes; only the ≤ k chosen vectors are held in
+    * memory. */
+  private def farthestPointSeeds(ea: DataFrame, k: Int): Model = {
+    def firstOf(e: DataFrame) =
+      vectorSeeds(e.orderBy("vec_id").limit(1).collect().toSeq)
+    var chosen = firstOf(ea)
+    var done = chosen.isEmpty
     while (chosen.size < k && !done) {
-      val seedPts = pts.filter(col("vec_id").isin(chosen: _*))
-        .select(col("vec_id").as("sid"), col("dim"), col("v").as("c"))
-      val next = pts.filter(!col("vec_id").isin(chosen: _*))
-        .join(broadcast(seedPts), "dim")
-        .groupBy(col("vec_id"), col("sid"))
-        .agg(sum(dec((col("v") - col("c")) * (col("v") - col("c")))).as("d2"))
-        .groupBy("vec_id").agg(min(col("d2")).as("d2"))
-        .agg(max_by(col("vec_id"), struct(col("d2"), -col("vec_id"))))
+      val next = assignArr(ea.filter(!col("vec_id").isin(chosen.map(_._2): _*)), chosen)
+        .agg(max_by(col("vec_id"), struct(col("dist2"), -col("vec_id"))))
         .head()
       if (next.isNullAt(0)) done = true // fewer than k distinct points
-      else chosen = next.getLong(0) :: chosen
+      else chosen ++= firstOf(ea.filter(col("vec_id") === next.getLong(0)))
     }
-    chosen.toDF("vec_id")
+    chosen
   }
 
   /** d60 — CLUSTER-scoped semantic dedup: what the SemDeDup paper
@@ -506,9 +482,9 @@ object EmbeddingOps {
     *
     * Index build: k=10 cells; initial centroids are the first 10 vectors
     * (deterministic seed — no RNG), refined by 2 Lloyd iterations where
-    * assignment is a broadcast of the 10-row centroid table (reduced
-    * data — never a driver collect) and the new centroid is the
-    * element-wise mean via posexplode + avg. Search: each query
+    * assignment is a broadcast of the 10-row centroid table and the new
+    * centroid is the per-position decimal mean, the 10-row result
+    * collected once per round. Search: each query
     * (vec_id < 10) probes ONLY its own cell (nprobe=1) and returns its
     * best non-self neighbor there — candidates scale with n/k, not n.
     *
@@ -549,82 +525,36 @@ object EmbeddingOps {
     * the cosine function and persists `e` if it is re-read. */
   private[graft] def ivfCellsOver(e: DataFrame,
       k: Int = 10): (DataFrame, DataFrame) = {
-    // array-distance discipline applied to the coarse quantizer
-    // (round 19): the assignment was already the array-native cosine
-    // argmax against broadcast centroids, but each Lloyd round's MEAN
-    // still exploded the assigned corpus (n·dim rows through two
-    // shuffled aggregates + a cache/count per round). The centroids are
-    // a k·dim model: keep them LOCAL between rounds (the existing
-    // final-round localization, applied per round) and compute the
-    // per-(cid, dim) means as dim parallel aggregate columns with a
-    // k-row collect — same davg = sum(dec(x))/count values per
-    // position, one job per round, no explode, no cache dance.
-    if (arrayDistOn(e)) {
-      val s = e.sparkSession
-      import s.implicits._
-      def localDf(cs: Seq[(Int, Seq[Double])]): DataFrame =
-        cs.toDF("cid", "cv")
-      var cents: Seq[(Int, Seq[Double])] =
-        Sources.labeled(s, "ivf-centroid-collect") {
-          e.filter(col("vec_id") < k)
-            .select(col("vec_id").cast("int").as("cid"), col("v"))
-            .collect()
-        }.toSeq.map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-      if (cents.nonEmpty) {
-        val dim = cents.head._2.length
-        val meanCols = (0 until dim).map(i =>
-          (dsum(element_at(col("v"), i + 1)) / count(lit(1))).as(s"c$i"))
-        (1 to 2).foreach { _ =>
-          val rows = Sources.labeled(s, "ivf-lloyd-round") {
-            assignCellsOver(e, localDf(cents))
-              .groupBy("cid").agg(meanCols.head, meanCols.tail: _*)
-              .collect() }
-          cents = rows.toSeq.map(r => (r.getInt(0),
-            (0 until dim).map(i => r.getDouble(i + 1)))).sortBy(_._1)
-        }
+    // the centroids are a k·dim model: they stay LOCAL between rounds,
+    // each round one job — the cosine argmax against the broadcast
+    // centroids, then the per-position decimal mean (the d59 Lloyd
+    // rule) collected as k rows. The decimal mean makes the centroid
+    // values — and so every cosine argmax against them —
+    // engine-deterministic, which is what lets d80b's oracle mirror the
+    // cell assignment in SQL. The final assignment is built against the
+    // LOCAL table, so nothing downstream re-runs the Lloyd chain.
+    val s = e.sparkSession
+    import s.implicits._
+    def localDf(cs: Seq[(Int, Seq[Double])]): DataFrame = cs.toDF("cid", "cv")
+    var cents: Seq[(Int, Seq[Double])] =
+      Sources.labeled(s, "ivf-centroid-collect") {
+        e.filter(col("vec_id") < k)
+          .select(col("vec_id").cast("int").as("cid"), col("v"))
+          .collect()
+      }.toSeq.map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
+    if (cents.nonEmpty) {
+      val dim = cents.head._2.length
+      val means = meanCols(dim)(i => lit(i + 1))
+      (1 to 2).foreach { _ =>
+        val rows = Sources.labeled(s, "ivf-lloyd-round") {
+          assignCellsOver(e, localDf(cents))
+            .groupBy("cid").agg(means.head, means.tail: _*)
+            .collect() }
+        cents = rows.toSeq.map(r => (r.getInt(0),
+          (0 until dim).map(i => r.getDouble(i + 1)))).sortBy(_._1)
       }
-      val local = localDf(cents)
-      return (persistCorpus(assignCellsOver(e, local)), local)
     }
-    var centroids = e.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int").as("cid"), col("v").as("cv"))
-      .cache()
-    (1 to 2).foreach { _ =>
-      // materialize each round's k-row centroid table (the d59
-      // lloydCentroids discipline — round 16 skipped it here and the
-      // decimal aggregate chain re-evaluated NESTED under every later
-      // consumer: round 2's broadcast, the final assignment, and each
-      // probe list re-ran round 1, doubling the d74 build)
-      val next = assignCellsOver(e, centroids)
-        .select(col("cid"), posexplode(col("v")))
-        // decimal-canonical mean (the d59 Lloyd rule): the centroid
-        // values — and therefore every cosine argmax against them —
-        // become engine-deterministic, which is what lets d80b's
-        // oracle mirror the cell assignment in SQL (double summation
-        // order would otherwise drift between Spark's partial
-        // aggregation and DuckDB's scan order)
-        .groupBy("cid", "pos").agg(davg(col("col")).as("m"))
-        .groupBy("cid")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("ps"))
-        .select(col("cid"), expr("transform(ps, x -> x.m)").as("cv"))
-        .cache()
-      Sources.labeled(e.sparkSession, "ivf-lloyd-round") {
-        next.count() } // materialize before releasing the parent round
-      centroids.unpersist(blocking = false)
-      centroids = next
-    }
-    // final round: LOCALIZE the k-row centroid table (planner-sized —
-    // the d65 one-row-per-round collect discipline) and release its
-    // cache entry. The cached table was the one storage entry no
-    // caller ever unpersisted (round-17 ADVICE — a small per-invocation
-    // leak in long-lived JVMs); consumers broadcast the local relation
-    // with identical values, and the final assignment is built against
-    // the LOCAL copy so nothing downstream re-triggers the Lloyd chain.
-    val local = centroids.sparkSession.createDataFrame(
-      java.util.Arrays.asList(Sources.labeled(
-        centroids.sparkSession, "ivf-centroid-collect") {
-        centroids.collect() }: _*), centroids.schema)
-    centroids.unpersist(blocking = false)
+    val local = localDf(cents)
     (persistCorpus(assignCellsOver(e, local)), local)
   }
 
@@ -707,150 +637,25 @@ object EmbeddingOps {
     * shortlist-size recall monotonicity is structural (top-8 ⊆
     * top-32). Cell ids and code words stay internal (engine artifacts
     * no SQL oracle could reproduce). */
-  /** [[kmeansLabels]] generalized by a SUB-SPACE key: Lloyd over the
-    * (vec_id, m, dim, v) long form where every join and aggregate
-    * carries `m`, so the m independent per-sub-space k-means run in one
-    * chain of jobs. Seeding rule identical (the kPq smallest vec_ids
-    * seed every sub-space); distances DECIMAL-exact; returns the final
-    * (vec_id, m, cid, dist2) assignments for EVERY vector.
-    *
-    * `sampleMod` > 1 trains the Lloyd iterations on the deterministic
-    * `vec_id % sampleMod == 0` sample (seeds drawn from the sample) —
-    * the production PQ shape: a codebook is a tiny model, it trains on
-    * a corpus sample and only the final code-assignment pass touches
-    * every vector. sampleMod = 1 is the exact full-corpus chain, and
-    * the ≡-kmeansLabels-per-sub-space spec pins THAT form, so sampling
-    * is a training-set choice, never a kernel fork. */
+  /** [[kmeansLabels]] generalized by a SUB-SPACE key: the d59 kernel
+    * and Lloyd loop with m sub-spaces of width sw, so the m independent
+    * per-sub-space k-means run in one chain of jobs. The codebook is an
+    * m·kPq·sw MODEL (1 024 doubles at the defaults), collected per
+    * round. Seeding rule identical (the kPq smallest vec_ids seed every
+    * sub-space); distances DECIMAL-exact; null and zero-length vectors
+    * get no code. Returns the final (vec_id, m, cid, dist2) assignments
+    * for EVERY vector. */
   private[graft] def pqAssignments(cells: DataFrame, m: Int, sw: Int,
-      kPq: Int, iters: Int, sampleMod: Int = 1): DataFrame = {
-    // array-distance path (round 19): the d59 broadcast array kernel
-    // with the sub-space key — the codebook is an m·kPq·sw MODEL
-    // (1 024 doubles at the defaults), collected per round, and dist²
-    // is one sw-term decimal expression per (vector, sub-space, code)
-    // row: n·m·kPq rows instead of the exploded join's n·dim·kPq.
-    // Values bit-identical (same dec terms, exact decimal sums, same
-    // min(struct) argmin); spark.graft.kmeansArrayDist=false restores
-    // the exploded chain (the ≡-kmeansLabels spec pins both).
-    if (arrayDistOn(cells)) {
-      val ea = persistCorpus(cells.select(col("vec_id"), col("v")))
-      val trainE =
-        if (sampleMod <= 1) ea
-        else ea.filter(pmod(col("vec_id"), lit(sampleMod.toLong)) === 0)
-      val seedRows = trainE.orderBy("vec_id").limit(kPq).collect()
-      var cents: Seq[(Int, Long, Array[Double])] = seedRows.toSeq.flatMap { r =>
-        val full = r.getSeq[Double](1).toArray
-        (0 until m).map(mi => (mi, r.getLong(0), full.slice(mi * sw, (mi + 1) * sw)))
-      }.sortBy(c => (c._1, c._2))
-      val meanCols = (0 until sw).map(i =>
-        (dsum(element_at(col("v"), col("m") * sw + i + 1)) / count(lit(1)))
-          .as(s"c$i"))
-      for (_ <- 1 to iters if cents.nonEmpty) {
-        val asg = pqAssignArr(trainE, cents, sw).select("vec_id", "m", "cid")
-        val rows = Sources.labeled(trainE.sparkSession, "pq-lloyd-round") {
-          trainE.join(asg, "vec_id").groupBy("m", "cid")
-            .agg(meanCols.head, meanCols.tail: _*).collect() }
-        cents = rows.toSeq.map(r => (r.getInt(0), r.getLong(1),
-          Array.tabulate(sw)(i => r.getDouble(i + 2)))).sortBy(c => (c._1, c._2))
-      }
-      return pqAssignArr(ea, cents, sw) // the every-vector final pass
-    }
-    val pts = persistCorpus(subspacePoints(cells, m, sw))
-    val trainPts =
-      if (sampleMod <= 1) pts
-      else pts.filter(pmod(col("vec_id"), lit(sampleMod.toLong)) === 0)
-    val seedIds =
-      (if (sampleMod <= 1) cells
-       else cells.filter(pmod(col("vec_id"), lit(sampleMod.toLong)) === 0))
-        .select(col("vec_id")).orderBy("vec_id").limit(kPq)
-    var cent = trainPts.join(broadcast(seedIds), "vec_id")
-      .select(col("m"), col("vec_id").as("cid"), col("dim"), col("v").as("c"))
-      .cache()
-    for (_ <- 1 to iters) {
-      val next = trainPts
-        .join(pqAssignOver(trainPts, cent).select("vec_id", "m", "cid"),
-          Seq("vec_id", "m"))
-        .groupBy("m", "cid", "dim")
-        .agg((dsum(col("v")) / count(lit(1))).as("c"))
-        .cache()
-      Sources.labeled(trainPts.sparkSession, "pq-lloyd-round") {
-        next.count() } // materialize before releasing the parent iteration
-      cent.unpersist(blocking = false)
-      cent = next
-    }
-    pqAssignOver(pts, cent) // the one pass that touches every vector
+      kPq: Int, iters: Int): DataFrame = {
+    val ea = persistCorpus(usable(cells.select(col("vec_id"), col("v"))))
+    val seeds = seedModel(ea.orderBy("vec_id").limit(kPq).collect().toSeq, m, sw)
+    assignArr(ea, lloyd(ea, seeds, iters, "pq-lloyd-round"))
   }
 
-  /** Sub-space code assignment against an in-memory (m, cid, carr)
-    * codebook — the array-distance form of [[pqAssignOver]]: n·|codebook|
-    * rows, one sw-term decimal dist² expression each (codegen'd; the
-    * d59 64 KB-method lesson bounds terms per row), the same
-    * min(struct(dist2, cid)) argmin per (vec_id, m). */
-  private def pqAssignArr(ea: DataFrame,
-      cents: Seq[(Int, Long, Array[Double])], sw: Int): DataFrame = {
-    val s = ea.sparkSession
-    import s.implicits._
-    if (cents.isEmpty)
-      return ea.select(col("vec_id"), lit(0).as("m"),
-        col("vec_id").as("cid"),
-        lit(java.math.BigDecimal.ZERO).cast("decimal(38,6)").as("dist2"))
-        .limit(0)
-    val centTbl = cents.map { case (mi, cid, cv) => (mi, cid, cv.toSeq) }
-      .toDF("m", "cid", "carr")
-    val d2 = (0 until sw).map { i =>
-      val d = element_at(col("v"), col("m") * sw + i + 1) -
-        element_at(col("carr"), i + 1)
-      graft.Canon.dec(d * d)
-    }.reduceLeft(_ + _)
-    ea.crossJoin(broadcast(centTbl))
-      .select(col("vec_id"), col("m"), col("cid"), d2.as("dist2"))
-      .groupBy("vec_id", "m")
-      .agg(min(struct(col("dist2"), col("cid"))).as("w"))
-      .select(col("vec_id"), col("m"), col("w.cid").as("cid"),
-        col("w.dist2").as("dist2"))
-  }
-
-  /** [[pqAssignOver]] from a raw (vec_id, v) frame against a codebook
-    * RELATION (m, cid, dim, c) — s19's frozen-codebook admission path;
-    * knob-aware like [[assignEmbeddings]]. */
-  private[graft] def pqAssignEmbeddings(e: DataFrame, c: DataFrame,
-      m: Int, sw: Int): DataFrame =
-    if (arrayDistOn(e)) {
-      val rows = Sources.labeled(c.sparkSession, "pq-codebook-collect") {
-        c.select(col("m").cast("int"), col("cid").cast("long"),
-          col("dim").cast("int"), col("c").cast("double")).collect() }
-      val cents = rows.groupBy(r => (r.getInt(0), r.getLong(1))).toSeq
-        .sortBy(_._1)
-        .map { case ((mi, cid), rs) =>
-          val byDim = rs.map(r => r.getInt(2) -> r.getDouble(3)).toMap
-          (mi, cid, Array.tabulate(byDim.size)(byDim))
-        }
-      pqAssignArr(e, cents, sw)
-    } else pqAssignOver(subspacePoints(e, m, sw), c)
-
-  /** The sub-space long form (vec_id, m, dim, v) of a (vec_id, v, …)
-    * frame: vector position mi·sw+d becomes row (m = mi, dim = d). The
-    * shared explode behind PQ training, the codebook reconstruction,
-    * and s19's admission of new vectors. */
-  private[graft] def subspacePoints(e: DataFrame, m: Int, sw: Int): DataFrame =
-    (0 until m).map { mi =>
-      e.select(col("vec_id"), lit(mi).as("m"),
-        posexplode(slice(col("v"), mi * sw + 1, sw)))
-    }.reduce(_.unionByName(_)).toDF("vec_id", "m", "dim", "v")
-
-  /** Sub-space code assignment: (vec_id, m, dim, v) points against a
-    * broadcast (m, cid, dim, c) codebook — per (vector, sub-space) the
-    * argmin-dist² code, DECIMAL-exact distances, ties to the smaller
-    * cid (the d59 min-of-struct rule). Shared by the Lloyd iterations,
-    * the every-vector final pass, and s19's incremental admission
-    * against a FROZEN codebook. */
-  private[graft] def pqAssignOver(over: DataFrame, c: DataFrame): DataFrame =
-    over.join(broadcast(c), Seq("m", "dim"))
-      .groupBy(col("vec_id"), col("m"), col("cid"))
-      .agg(sum(dec((col("v") - col("c")) * (col("v") - col("c")))).as("dist2"))
-      .groupBy("vec_id", "m")
-      .agg(min(struct(col("dist2"), col("cid"))).as("w"))
-      .select(col("vec_id"), col("m"), col("w.cid").as("cid"),
-        col("w.dist2").as("dist2"))
+  /** A (vec_id, v) frame against a codebook RELATION (m, cid, dim, c):
+    * (vec_id, m, cid, dist2) — s19's frozen-codebook admission path. */
+  private[graft] def pqAssignEmbeddings(e: DataFrame, c: DataFrame): DataFrame =
+    assignArr(usable(e), collectModel(c, "pq-codebook-collect"))
 
   /** The four PUBLISHED relations of the d73/d74 vector index —
     * (cells = (vec_id, cid), codes = (vec_id, m, code), codebook =
@@ -886,14 +691,10 @@ object EmbeddingOps {
     // independent, so keying every join/aggregate by `m` computes the
     // same per-sub-space answers as m separate kmeansLabels runs —
     // LlmOpsSpec pins the equivalence — at ¼ the job count)
-    // Codebooks train on the FULL corpus here: the fixture embeddings
-    // are near-uniform, so a sample-trained codebook loses the little
-    // ADC signal there is (measured: query 7's true NN falls past ADC
-    // rank 128 at sf0.1 under sampleMod = 4). The production swap —
-    // train on a sample, assign everywhere — is the pqAssignments
-    // sampleMod knob, exact-form spec-pinned; real embedding
-    // distributions have the cluster structure that makes it safe, and
-    // the recall spec is the gate either way.
+    // Codebooks train on the FULL corpus: the fixture embeddings are
+    // near-uniform, so a sample-trained codebook loses the little ADC
+    // signal there is (measured: query 7's true NN falls past ADC rank
+    // 128 at sf0.1 when trained on every 4th vector).
     // persisted: `codes` feeds BOTH returned relations — the packed
     // codes table and the codebook reconstruction join below — and the
     // d74/s19 publishers drive each through its own write job; without

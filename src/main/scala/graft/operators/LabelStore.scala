@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** d61 — the MATERIALIZED k-means label relation: the [[PairStore]]
   * producer/consumer shape applied to the clustering family.
   *
-  * d59's labeler (fixed-iteration Lloyd's over the exploded corpus) is
+  * d59's labeler (fixed-iteration Lloyd's over the whole corpus) is
   * the most expensive subtree in the embedding family, and every
   * cluster-scoped consumer — d60's SemDeDup verify today; domain-mixture
   * reports, cluster-balanced sampling weights tomorrow — needs exactly

@@ -1253,8 +1253,9 @@ object Streaming {
     * retrain-rarely / assign-daily: the FIRST batch (the reference
     * corpus) trains the d59 Lloyd centroids and publishes them as a
     * frozen table; every later batch of new vectors is ASSIGNED to the
-    * frozen centroids ([[EmbeddingOps.assignEmbeddings]] — one
-    * broadcast join + the decimal argmin aggregate, O(Δ·k·dim), no
+    * frozen centroids ([[EmbeddingOps.assignEmbeddings]] — the collected
+    * k·dim model broadcast against the batch, one decimal distance per
+    * (vector, centroid) and the argmin aggregate, O(Δ·k·dim), no
     * retraining) and upserted into the label store keyed vec_id.
     * Labels are stable by construction (vectors immutable, centroids
     * frozen), so the merge is insert-only dedup.
@@ -1278,9 +1279,9 @@ object Streaming {
     * no read-after-rename hazard; labels-first keeps the s17 symmetry.
     *
     * Scale: per delta one broadcast of the k·dim centroid table against
-    * the batch's exploded points — the cheapest possible admission of
-    * new vectors into a clustered corpus; the full retrain remains the
-    * d61 weekly job. */
+    * the batch's vectors — the cheapest possible admission of new
+    * vectors into a clustered corpus; the full retrain remains the d61
+    * weekly job. */
   def labelMaintSink(base: String)(batch: DataFrame, batchId: Long): Unit = {
     val marker = new java.io.File(s"$base/_applied/$batchId")
     if (marker.exists()) return // redelivered batch: effectively once
@@ -1304,13 +1305,8 @@ object Streaming {
     // (the reference-corpus batch), else read the published table
     val cent =
       if (centPublished.exists) s.read.parquet(centPublished.toString)
-      else {
-        val pts = batch.select(col("vec_id"),
-          posexplode(col("embedding").cast("array<double>")))
-          .toDF("vec_id", "dim", "v")
-        EmbeddingOps.lloydCentroids(batch, pts,
-          EmbeddingOps.KmeansK, EmbeddingOps.KmeansIters)
-      }
+      else EmbeddingOps.lloydCentroids(batch,
+        EmbeddingOps.KmeansK, EmbeddingOps.KmeansIters)
     val labels = EmbeddingOps.assignEmbeddings(batch, cent)
       .dropDuplicates("vec_id")
     checkAudit(labBase, Sources.bucketedUpsertStaged(s, labels, labBase,
@@ -1363,10 +1359,11 @@ object Streaming {
     * FROZEN; every later batch of new vectors is admitted by
     * assignment alone: cells via [[EmbeddingOps.assignCellsOver]]
     * (one broadcast of the k coarse centroids, the cosine argmax
-    * aggregate) and codes via [[EmbeddingOps.pqAssignOver]] against the
-    * published codebook (one broadcast of the m·kPq·sw table, the
-    * decimal argmin) — O(Δ·(k·dim + m·kPq·sw)), no retraining, exactly
-    * the incremental admission a FAISS-style index performs on add().
+    * aggregate) and codes via [[EmbeddingOps.pqAssignEmbeddings]]
+    * against the published codebook (one broadcast of the m·kPq·sw
+    * table, the decimal argmin) — O(Δ·(k·dim + m·kPq·sw)), no
+    * retraining, exactly the incremental admission a FAISS-style index
+    * performs on add().
     * Index entries are stable by construction (vectors immutable,
     * models frozen), so both upserts are insert-only dedup.
     *
@@ -1416,7 +1413,6 @@ object Streaming {
     // scale the reference batch is corpus-sized
     val e = LlmOps.persistCorpus(batch.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v")))
-    val (m, sw) = (4, 16)
     // (newCells (vec_id, cid), newCodes packed (vec_id, codes),
     //  codebook long form, coarse centroids) — trained on batch 0,
     // assignment-only against the frozen published models afterwards
@@ -1431,7 +1427,7 @@ object Streaming {
           .select(col("vec_id"), col("cid"))
         val codes = EmbeddingOps.pqAssignEmbeddings(e,
           cb0.select(col("m"), col("code").as("cid"), col("pos").as("dim"),
-            col("c")), m, sw)
+            col("c")))
           .select(col("vec_id"), col("m"), col("cid").as("code"))
         (cells, packCodes(codes), cb0, cent0)
       }

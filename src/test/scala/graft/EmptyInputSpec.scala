@@ -358,4 +358,33 @@ class EmptyInputSpec extends SparkSpec {
     assert(Relational.stringAgg(spark, emptyDir).count() === 0L)
     assert(Relational.arrayHof(spark, emptyDir).count() === 0L)
   }
+
+  test("d59 and PQ drop null and zero-length embeddings: no label, never a seed") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType), nullable = true)))
+    def corpus(rows: Seq[(Long, Seq[Float])]): DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (id, v) => Row(id, v) }: _*), schema)
+    def kmeans(e: DataFrame): Seq[String] =
+      EmbeddingOps.kmeansLabels(e, 3, 2).collect().map(_.toString).sorted.toSeq
+    // PQ over 2 sub-spaces of width 2, 3 codes each
+    def pq(e: DataFrame): Seq[String] = EmbeddingOps.pqAssignments(
+        e.select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
+        2, 2, 3, 2)
+      .collect().map(_.toString).sorted.toSeq
+    // every vector zero-length: nothing to seed from, the empty-labels frame
+    val empties = corpus((0L until 6L).map(_ -> Seq.empty[Float]))
+    assert(kmeans(empties).isEmpty)
+    assert(pq(empties).isEmpty)
+    // a null embedding at the SMALLEST id — the first seed it would be —
+    // gets no label, and the valid vectors label exactly as without it
+    val valid = (1L to 9L).map(i => i -> Seq.tabulate(4)(j => ((i * 7 + j * 3) % 5).toFloat))
+    val withNull = corpus((0L -> null) +: valid)
+    assert(kmeans(withNull) === kmeans(corpus(valid)))
+    assert(kmeans(withNull).size === valid.size)
+    assert(pq(withNull) === pq(corpus(valid)))
+    assert(pq(withNull).size === 2 * valid.size)
+  }
 }

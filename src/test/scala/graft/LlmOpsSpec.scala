@@ -690,6 +690,28 @@ class LlmOpsSpec extends SparkSpec {
     assert(runK() === off)
   }
 
+  test("a malformed centroid relation is refused, naming the centroid") {
+    val emb = Seq((0L, Seq(1f, 2f, 3f)), (1L, Seq(0f, 0f, 1f))).toDF("vec_id", "embedding")
+    def refusal(assign: => Any): String =
+      intercept[IllegalArgumentException](assign).getMessage
+    // cid 7 skips dim 1: every centroid must carry dims exactly 0..w-1
+    val gap = Seq((3L, 0, 1.0), (3L, 1, 1.0), (3L, 2, 1.0), (7L, 0, 0.0), (7L, 2, 0.0))
+      .toDF("cid", "dim", "c")
+    val g = refusal(EmbeddingOps.assignEmbeddings(emb, gap))
+    assert(g.contains("cid=7") && g.contains("[0,2]"), g)
+    // cid 7 is gap-free but narrower than cid 3: widths must agree
+    val narrow = Seq((3L, 0, 1.0), (3L, 1, 1.0), (3L, 2, 1.0), (7L, 0, 0.0), (7L, 1, 0.0))
+      .toDF("cid", "dim", "c")
+    val n = refusal(EmbeddingOps.assignEmbeddings(emb, narrow))
+    assert(n.contains("cid=7") && n.contains("2 wide"), n)
+    // a PQ codebook gets the same check per (sub-space, cid)
+    val cb = Seq((0, 3L, 0, 1.0), (0, 3L, 1, 1.0), (1, 3L, 0, 1.0), (1, 3L, 2, 1.0))
+      .toDF("m", "cid", "dim", "c")
+    val p = refusal(EmbeddingOps.pqAssignEmbeddings(
+      emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v")), cb))
+    assert(p.contains("cid=3 (sub-space 1)"), p)
+  }
+
   test("d60 catches a hyperplane-straddling near-identical pair d35 misses") {
     // the structural gap d60 exists to close: a near-identical pair
     // SPLIT by a d35 hyperplane (opposite-sign dots with plane 0 of
@@ -1152,16 +1174,24 @@ class LlmOpsSpec extends SparkSpec {
       .select(col("vec_id"), col("cid")).collect().map(_.toString).sorted.toSeq
     assert(cellRows().filterNot(isRef) === expCells,
       "delta cell admission diverged from frozen-centroid assignment")
-    val expCodes = EmbeddingOps.pqAssignOver(
-        EmbeddingOps.subspacePoints(deltas, 4, 16),
-        cb.select(col("m"), col("code").as("cid"), col("pos").as("dim"), col("c")))
-      .select(col("vec_id"), col("m"), col("cid").as("code"))
-      .groupBy("vec_id")
-      .agg(transform(array_sort(collect_list(struct(col("m"), col("code")))),
-        x => x.getField("code")).as("codes"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(codeRows().filterNot(isRef) === expCodes,
+    // the reference is the in-memory brute force over the collected
+    // deltas and codebook — independent of the kernel under test
+    val cbRel = cb.select(col("m"), col("code").as("cid"), col("pos").as("dim"), col("c"))
+    val bruteCodes = BruteAssign.assign(BruteAssign.vectors(deltas, "v"),
+      BruteAssign.model(cbRel))
+    val expCodes = bruteCodes.groupBy(_._1).toSeq
+      .map { case (id, rs) => (id, rs.sortBy(_._2).map(_._3)) }.sortBy(_._1)
+    val deltaCodes = spark.read.parquet(s"$base/codes/published")
+      .select("vec_id", "codes").as[(Long, Seq[Long])].collect().toSeq
+      .filter(_._1 % 10 >= 8).sortBy(_._1)
+    assert(deltaCodes === expCodes,
       "delta code admission diverged from frozen-codebook assignment")
+    val kernel = EmbeddingOps.pqAssignEmbeddings(deltas, cbRel)
+      .select("vec_id", "m", "cid", "dist2")
+      .as[(Long, Int, Long, java.math.BigDecimal)].collect().toSeq
+      .map(r => (r._1, r._2, r._3, BigDecimal(r._4))).sortBy(r => (r._1, r._2))
+    assert(kernel === bruteCodes,
+      "frozen-codebook codes or dist2 diverged from brute force")
     // ——— the maintained store composes with the real search kernel:
     // with every cell probed and an uncut shortlist the exact re-rank
     // must return the global brute-force NN — structurally, because all

@@ -191,6 +191,37 @@ class PlanSpec extends SparkSpec {
     assert(generates === 1, s"expected only the token explode, got $generates Generates")
   }
 
+  test("k-means, centroid and PQ assignment plan no Generate — the exploded form stays gone") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // every node of the executed plan, descending AQE stages AND cached
+    // relations: a persisted exploded frame would hide its Generate
+    def nodes(df: DataFrame): Seq[SparkPlan] = {
+      df.collect()
+      def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p.children ++ (p match {
+        case q: QueryStageExec => Seq(q.plan)
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case c: InMemoryTableScanExec => Seq(c.relation.cachedPlan)
+        case _ => Nil
+      })).flatMap(walk)
+      walk(df.queryExecution.executedPlan)
+    }
+    val emb = Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
+    val ea = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val (cells, _) = EmbeddingOps.ivfCells(spark, Sf)
+    Seq("kmeansLabels" -> EmbeddingOps.kmeansLabels(emb, 8, 3),
+      "assignToCentroids" -> EmbeddingOps.assignToCentroids(ea,
+        EmbeddingOps.lloydCentroids(emb, 8, 3)),
+      "pqAssignments" -> EmbeddingOps.pqAssignments(cells, 4, 16, 16, 2)
+    ).foreach { case (name, df) =>
+      val gens = nodes(df).collect { case g: GenerateExec => g.simpleString(200) }
+      assert(gens.isEmpty, s"$name plans a Generate: $gens")
+    }
+    spark.sharedState.cacheManager.clearCache()
+  }
+
   test("near-dup verify joins degrade to shuffle when broadcast is off") {
     // LlmOps joins candidate/grid tables WITHOUT broadcast hints — their
     // size is data-dependent (near-dup density, vocab size), so a forced

@@ -684,13 +684,17 @@ class StreamingSpec extends SparkSpec {
     // streamed-on-disk ≡ the registry batch twin
     assert(streamed === Streaming.labelMaintFeed(spark, Sf)
       .select("vec_id", "cid").as[(Long, Long)].collect().toSeq.sorted)
-    // frozen centroids: the deltas must not have MOVED any reference
-    // label — assignment against the published centroids is idempotent
+    // frozen centroids: every stored label — reference and delta — is
+    // the brute-force assignment against the PUBLISHED centroids (so
+    // the deltas never moved a reference label), cid AND dist2
     val centroids = spark.read.parquet(s"$base/centroids/published")
-    val ref = batches.head.toDF().select(col("vec_id"), col("embedding"))
-    val refLabels = operators.EmbeddingOps.assignEmbeddings(ref, centroids)
-      .select("vec_id", "cid").as[(Long, Long)].collect().toSeq.sorted
-    assert(streamed.filter(v => v._1 % 10 < 8) === refLabels)
+    val brute = BruteAssign.assign(
+      BruteAssign.vectors(vecs.toDF(), "embedding"), BruteAssign.model(centroids))
+      .map(r => (r._1, r._3, r._4))
+    val stored = spark.read.parquet(s"$base/labels/published")
+      .select("vec_id", "cid", "dist2").as[(Long, Long, java.math.BigDecimal)]
+      .collect().toSeq.map(r => (r._1, r._2, BigDecimal(r._3))).sortBy(_._1)
+    assert(stored === brute, "a stored label diverged from the frozen-centroid brute force")
     // redelivered batch id (different data): marker makes it a no-op
     Streaming.labelMaintSink(base)(
       Seq(NewVec(424242L, Seq.fill(64)(0.5f))).toDF(), 1L)
