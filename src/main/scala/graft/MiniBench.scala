@@ -8,9 +8,10 @@ object MiniBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkEnv.session("mini")
     val cold = args.contains("--cold")
-    // --rebuild: force the JVM-singleton stores (d74 vector index, d85
-    // tokenizer models) to retrain on EVERY sample — the cold-publish
-    // regression measurement the idempotent production path hides
+    // --rebuild: force the published stores (d46 pairs, d61 labels, d74
+    // vector index, d85 tokenizer models) to re-derive on EVERY publisher
+    // sample — the cold-publish regression measurement the idempotent
+    // production path hides
     if (args.contains("--rebuild"))
       spark.conf.set("spark.graft.forceRebuildStores", "true")
     val gc = args.contains("--gc")

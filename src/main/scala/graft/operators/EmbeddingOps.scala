@@ -71,15 +71,10 @@ object EmbeddingOps {
   val KmeansIters = 3
 
   def kmeans(s: SparkSession, d: String): DataFrame =
-    // round 12: the rollup is a label-store CONSUMER by default — one
-    // output-sized parquet scan + a k-row aggregate; the labeler runs
-    // in the d61 publisher. Off = the self-contained twin (spec pins ≡;
-    // the exact decimal dist2 makes the rollup bit-identical either way)
-    if (s.conf.get("spark.graft.shareKmeansLabels", "true").toBoolean)
-      kmeansRollup(LabelStore.labels(s, d))
-    else
-      kmeansOver(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        KmeansK, KmeansIters)
+    // a label-store CONSUMER: one output-sized parquet scan + a k-row
+    // aggregate; the labeler runs in the d61 publisher (the exact
+    // decimal dist2 keeps the rollup bit-identical to [[kmeansOver]])
+    kmeansRollup(LabelStore.read(s, d))
 
   /** [[kmeans]] over an explicit (vec_id, embedding) frame —
     * package-visible for the planted-cluster and determinism specs. */
@@ -328,15 +323,11 @@ object EmbeddingOps {
   def clusterSemdedup(s: SparkSession, d: String, tau: Double = 0.40): DataFrame = {
     val e0 = Tables.embeddings(s, d)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    // production read path (round 12): the d59 labeler publishes ONCE
-    // per corpus through the d61 store and every cluster-scoped
-    // consumer scans the published (vec_id, cid) parquet — the
-    // sharePairStore composition applied to clustering. Off = re-derive
-    // per query (the self-contained twin; spec pins ≡).
-    if (s.conf.get("spark.graft.shareKmeansLabels", "true").toBoolean)
-      clusterSemdedupWith(e0,
-        LabelStore.labels(s, d).select(col("vec_id"), col("cid")), tau)
-    else clusterSemdedupOver(e0, tau, KmeansK, KmeansIters)
+    // production read path: the d59 labeler publishes ONCE per corpus
+    // through the d61 store and every cluster-scoped consumer scans the
+    // published (vec_id, cid) parquet
+    clusterSemdedupWith(e0,
+      LabelStore.read(s, d).select(col("vec_id"), col("cid")), tau)
   }
 
   /** The d59 labeler over the registry corpus — the relation [[LabelStore]]
@@ -718,17 +709,13 @@ object EmbeddingOps {
   def ivfPqAnn(s: SparkSession, d: String, m: Int = 4, kPq: Int = 16,
       shortlist: Int = 64, pqIters: Int = 2, dim: Int = 64,
       nprobe: Int = 1): DataFrame = {
-    // production read path (round 13): the index publishes ONCE per
-    // corpus through the d74 store and every query consumes the
-    // published (cells, codes, codebook, centroids) parquet — the
-    // d61/d46 composition applied to ANN ("a production index trains
-    // once, not per query"). Off = the self-contained twin; spec pins
-    // byte-≡.
+    // production read path: at the store's parameters the index
+    // publishes ONCE per corpus through the d74 store and every query
+    // consumes the published (cells, codes, codebook, centroids)
+    // parquet ("a production index trains once, not per query")
     val defaults = m == 4 && kPq == 16 && pqIters == 2 && dim == 64
     val (cells, codes, cb, cent) =
-      if (defaults &&
-          s.conf.get("spark.graft.shareVectorIndex", "true").toBoolean)
-        VectorIndexStore.relations(s, d)
+      if (defaults) VectorIndexStore.relations(s, d)
       else pqIndexRelations(s, d, m, kPq, pqIters, dim)
     ivfPqSearch(s, d, cells, codes, cb, cent, shortlist, dim / m, nprobe)
   }
@@ -983,7 +970,7 @@ object EmbeddingOps {
   }
 
   // tombstoned cells clones, ONE per (tag, corpus, store-version) per
-  // JVM (the VectorIndexStore TrieMap pattern): the d79/s23 registry
+  // JVM (the PublishedStore TrieMap pattern): the d79/s23 registry
   // twins need a private mutable copy of the shared store's immutable
   // cells relation, and a fresh exit-cleaned temp clone per INVOCATION
   // accumulates one full cells copy per bench pass for the process
@@ -992,12 +979,12 @@ object EmbeddingOps {
   // the store's own cells table).
   // KEYING (round 18, the round-17 ADVICE fix): the cache key carries
   // the store's PUBLISH VERSION, not just (tag, path) — a forced
-  // store rebuild (spark.graft.forceRebuildStores, or any future
-  // re-publish of the same path) mints a new version and this cache
-  // misses, so a regenerated fixture can never be served a clone of
-  // the superseded store's cells. Superseded clones stay on disk
-  // until JVM exit (forceDeleteOnExit) — version churn is a test/bench
-  // concern, bounded by the rebuilds actually forced.
+  // store rebuild (or any future re-publish of the same path) mints a
+  // new version and this cache misses, so a regenerated fixture can
+  // never be served a clone of the superseded store's cells. Superseded
+  // clones stay on disk until JVM exit (forceDeleteOnExit) — version
+  // churn is a test/bench concern, bounded by the rebuilds actually
+  // forced.
   private val cellClones = scala.collection.concurrent.TrieMap.empty[String, String]
   private val cellCloneLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
 
@@ -1451,8 +1438,8 @@ object EmbeddingOps {
     * analog of d56's per-language reservoir. Rebalancing a training
     * mix by semantic cluster (rather than by surface language/source)
     * is how curation caps an over-represented topic the metadata
-    * cannot see. Labels come from the published d61 store by default
-    * (`spark.graft.shareKmeansLabels`) — consumer number three.
+    * cannot see. Labels come from the published d61 store — consumer
+    * number three.
     *
     * Draw rule = d56's verbatim: bottom-k by a seeded md5 tag —
     * deterministic, engine-portable, growth-stable (a new row only
@@ -1460,13 +1447,8 @@ object EmbeddingOps {
     * associativity argument: per-(cid, salt×64) bottom-k first (never
     * a window over the raw cluster key alone at full width), then
     * re-rank the ≤ 64·k survivors per cluster. */
-  def clusterSample(s: SparkSession, d: String, k: Int = 5): DataFrame = {
-    val lbl =
-      if (s.conf.get("spark.graft.shareKmeansLabels", "true").toBoolean)
-        LabelStore.labels(s, d).select(col("vec_id"), col("cid"))
-      else kmeansLabelsFor(s, d).select(col("vec_id"), col("cid"))
-    clusterSampleOver(lbl, k)
-  }
+  def clusterSample(s: SparkSession, d: String, k: Int = 5): DataFrame =
+    clusterSampleOver(LabelStore.read(s, d).select(col("vec_id"), col("cid")), k)
 
   /** [[clusterSample]] over an explicit (vec_id, cid) label frame —
     * package-visible for the model-equivalence and exact-k specs. */
@@ -1496,17 +1478,14 @@ object EmbeddingOps {
     * topic the lang-ID already explains; a cluster SPLIT across
     * languages is parallel/translated content the surface metadata
     * misses — exactly what d63's balanced draw then acts on. Labels
-    * from the published d61 store by default (consumer four).
+    * from the published d61 store (consumer four).
     *
     * Exact-arithmetic posture: counts and token sums are integers;
     * `doc_share` is ONE IEEE division of engine-identical integers
     * (the d38 rule). Two keyed aggregates + one k-sized join — the
     * corpus shuffles once on (cid, lang). */
   def clusterProfile(s: SparkSession, d: String): DataFrame = {
-    val lbl =
-      if (s.conf.get("spark.graft.shareKmeansLabels", "true").toBoolean)
-        LabelStore.labels(s, d).select(col("vec_id"), col("cid"))
-      else kmeansLabelsFor(s, d).select(col("vec_id"), col("cid"))
+    val lbl = LabelStore.read(s, d).select(col("vec_id"), col("cid"))
     val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"),
       size(split(col("text"), " ")).cast("long").as("n_tokens"))
     clusterProfileOver(lbl, docs)

@@ -3,109 +3,40 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** d46–d48 — the MATERIALIZED verified-pair relation: the production
-  * composition of the near-dup family.
+  * composition of the near-dup family, a [[PublishedStore]] of one
+  * table, `pairs` (i, j, n_common, n_i, n_j, jac) keyed on (i, j).
   *
-  * A real pipeline computes the verified pair relation ONCE per corpus
-  * snapshot, publishes it through the f09 write-audit-publish gate, and
-  * feeds every consumer from the published store. d46 is the publisher
-  * job (its output is the WAP audit manifest); d47/d48 are the
-  * read-side consumers, producing byte-identical results to their
-  * recomputing twins d20/d45 (PairStoreSpec pins store-fed ≡
-  * recomputed with the share knob off, and the DuckDB oracles are
-  * literally shared). Since round 11 EVERY threshold-0.8 consumer
-  * ([[PairGraph.jaccardPairs]]: d19/d20/d30/d45/d53) reads this store by
-  * default — d02 (the reported pair derivation) and d46 (the publisher)
-  * are the two self-contained producers; conf
-  * `spark.graft.sharePairStore=false` restores per-query re-derivation.
-  *
-  * Store lifecycle: one scratch root per JVM (registered for exit
-  * cleanup), one published table per corpus dir. [[pairs]] publishes at
-  * most once per JVM (publish-if-absent) so repeated read-side queries
-  * pay the build once — the shape that removes the ~24 s of repeated
-  * pair derivation the round-8 bench showed across
-  * d20/d40/d41/d45; [[publish]] re-publishes on every call — the
-  * daily-job shape, atomic for readers via the rename-aside swap
-  * ([[Sources.writeAuditPublishStaged]]). At 100 TB the swap becomes a
-  * transactional catalog commit and the store a table bucketed on
-  * (i, j) (or on doc key for the per-doc consumers); the composition is
-  * unchanged.
+  * d46 ([[publish]]) is the publisher job, derived from
+  * [[PairGraph.jaccardPairsRaw]] at [[Threshold]]; every threshold-0.8
+  * consumer ([[PairGraph.jaccardPairs]]: d19/d20/d30/d45/d53) and the
+  * consumers below read the published table. d02 (the reported pair
+  * derivation) and the publisher are the self-contained producers.
+  * PairStoreSpec pins each consumer ≡ its `*Over` twin fed the raw
+  * derivation. At 100 TB the table is bucketed on (i, j) (or on doc key
+  * for the per-doc consumers).
   *
   * Reference analogue: the reference pipelines each run standalone over
   * raw text (`wordCount/wordCount.cpp:67-157`); materialized
   * intermediate relations are the capability a multi-query engine adds.
   */
-object PairStore {
+object PairStore extends PublishedStore("pairstore", Seq("pairs" -> Seq("i", "j"))) {
   /** Jaccard threshold of the published relation — the d02 default. */
   val Threshold = 0.8
 
-  private lazy val root: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft-pairstore").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(p)
-    p.toString
-  }
-  private val built = scala.collection.concurrent.TrieMap.empty[String, String]
-  // per-corpus publish serialization: two concurrent publishers (or a
-  // publisher racing a publish-if-absent reader) would interleave
-  // `overwrite` writes into the SAME staging dir and double-run the
-  // rename swap — the second ATOMIC_MOVE throws, or an audit counts the
-  // other job's half-overwritten staging. Monitors are reentrant, so
-  // pairs() → publish() under one lock is fine.
-  private val locks = scala.collection.concurrent.TrieMap.empty[String, Object]
-  private def lockFor(d: String): Object = locks.getOrElseUpdate(d, new Object)
-
-  // collision-resistant key: a 32-bit hashCode collision between two
-  // corpus dirs in one JVM would silently serve one corpus the other's
-  // pairs — md5 of the full path can't collide in practice
-  private def baseFor(d: String): String =
-    s"$root/${org.apache.commons.codec.digest.DigestUtils.md5Hex(d)}"
-
-  /** d46 — the publisher job: recompute the verified pair relation
-    * (i, j, n_common, n_i, n_j, jac) and push it through the WAP gate —
-    * write to staging, audit the STAGED FILES re-read (row count vs the
-    * plan's own count, null keys, duplicate (i, j) keys), promote
-    * atomically only if all audits pass. Returns the audit manifest. */
-  def publish(s: SparkSession, d: String): DataFrame = lockFor(d).synchronized {
-    import org.apache.spark.sql.functions.col
-    val pairs = PairGraph.jaccardPairsRaw(s, d, Threshold)
-    val manifest = Sources.writeAuditPublishStaged(s, pairs,
-      baseFor(d), Seq("i", "j"), false, None)
-    // record the store ONLY when the gate actually promoted: a failed
-    // audit leaves nothing at the published path, and pinning it would
-    // break every later read in this JVM precisely when the safety
-    // gate fired (and stop pairs() from ever retrying the publish)
-    val promoted = manifest
-      .filter(col("check_name") === "published_rows").head.getBoolean(2)
-    if (promoted) built(d) = s"${baseFor(d)}/published"
-    manifest
-  }
-
-  /** Read-side accessor: publish-if-absent, then scan the published
-    * table. Consumers see a plain parquet relation — filters and column
-    * pruning push into the scan; no shingle work happens here. A
-    * publish whose audit REJECTED the table fails loudly here rather
-    * than scanning a path that was never created. */
-  private[graft] def pairs(s: SparkSession, d: String): DataFrame = {
-    val path = built.getOrElse(d, lockFor(d).synchronized {
-      built.getOrElse(d, { // re-check under the lock: another thread won
-        publish(s, d)
-        built.getOrElse(d, throw new IllegalStateException(
-          s"pair-store publish for $d failed its WAP audit — no table"))
-      })
-    })
-    s.read.parquet(path)
-  }
+  protected def derive(s: SparkSession, d: String): Map[String, DataFrame] =
+    Map("pairs" -> PairGraph.jaccardPairsRaw(s, d, Threshold))
 
   /** d47 — [[PairGraph.contamination]] fed from the published store:
     * two split probes against an output-sized parquet scan, zero
     * shingle/candidate work on the read path. */
   def storeContamination(s: SparkSession, d: String): DataFrame =
-    PairGraph.contaminationOver(s, d, pairs(s, d))
+    PairGraph.contaminationOver(s, d, read(s, d))
 
   /** d48 — [[PairGraph.editVerify]] fed from the published store: the
     * O(|a|·|b|)-per-pair levenshtein runs over the store relation
     * directly — the candidate chain is never re-derived. */
   def storeEditVerify(s: SparkSession, d: String): DataFrame =
-    PairGraph.editVerifyOver(s, d, pairs(s, d), Threshold)
+    PairGraph.editVerifyOver(s, d, read(s, d), Threshold)
 
   /** d30b — [[PairGraph.incrementalDedup]] fed from the published store:
     * the delta-admission gate probes the materialized pair relation
@@ -115,7 +46,7 @@ object PairStore {
     * incremental-dedup read path (d30 is its standalone twin, kept for
     * the pipelines that have no published store to probe). */
   def storeIncrementalDedup(s: SparkSession, d: String): DataFrame =
-    PairGraph.incrementalDedupOver(s, d, pairs(s, d))
+    PairGraph.incrementalDedupOver(s, d, read(s, d))
 
   /** d49 — [[PairGraph.neardupClusters]] fed from the published store: the
     * large/small-star CC loop runs over the stored edge list, so a
@@ -124,7 +55,7 @@ object PairStore {
     * shingle → candidate → verify chain is never re-derived. */
   def storeClusters(s: SparkSession, d: String): DataFrame =
     PairGraph.clusterAssign(s, d,
-      pairs(s, d).select(org.apache.spark.sql.functions.col("i"),
+      read(s, d).select(org.apache.spark.sql.functions.col("i"),
         org.apache.spark.sql.functions.col("j")))
 
   /** d69 — CONTRASTIVE training-pair generation (pair-store consumer
@@ -148,7 +79,7 @@ object PairStore {
     * window). */
   def contrastivePairs(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val p = pairs(s, d).select(col("i"), col("j"), col("jac"))
+    val p = read(s, d).select(col("i"), col("j"), col("jac"))
     val sym = p.union(p.select(col("j"), col("i"), col("jac")))
       .toDF("a", "b", "jac")
     // rank on the ROUNDED jac: the store keeps full precision but the
@@ -245,7 +176,7 @@ object PairStore {
   def lshTuning(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import graft.Canon.{dsum, round4}
-    val p = pairs(s, d).select(round4(col("jac")).as("jac"))
+    val p = read(s, d).select(round4(col("jac")).as("jac"))
     LshConfigs.map { case (name, b, r) =>
       val sr = Seq.fill(r)(col("jac")).reduce(_ * _)
       val missAll = Seq.fill(b)(lit(1.0) - sr).reduce(_ * _)

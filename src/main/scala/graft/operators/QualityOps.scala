@@ -872,15 +872,12 @@ object QualityOps {
     * checkpoint needed). Counts are integer sums — exact cross-engine;
     * fixed `iters` so the oracle unrolls the same rounds as CTEs. */
   def bpeMerges(s: SparkSession, d: String): DataFrame =
-    // production read path (round 18): the merge table trains ONCE per
-    // corpus snapshot through the d85 store and every consumer reads
-    // the published parquet — the shareVectorIndex discipline applied
-    // to tokenizers. Off = the self-contained twin; spec pins byte-≡.
-    if (TokenizerStore.shareOn(s)) {
-      val (_, merges, _, _) = TokenizerStore.relations(s, d)
-      merges.select(col("step"), col("lhs"), col("rhs"), col("pair_count"))
-        .orderBy("step")
-    } else bpeMergesOver(s, Tables.documents(s, d), iters = 3)
+    // production read path: the merge table trains ONCE per corpus
+    // snapshot through the d85 store and every consumer reads the
+    // published parquet
+    TokenizerStore.read(s, d, "bpe_merges")
+      .select(col("step"), col("lhs"), col("rhs"), col("pair_count"))
+      .orderBy("step")
 
   private[graft] def bpeMergesOver(s: SparkSession, docs: DataFrame,
       iters: Int): DataFrame =
@@ -893,7 +890,7 @@ object QualityOps {
     * round-18 fix for the d83/store callers that HOLD the shared
     * [[wordFreq]] (re-deriving it here cost one extra corpus scan per
     * profile run; the expressions are identical, so the split is
-    * byte-≡ — spec-pinned via the share-knob differential). */
+    * byte-≡ — TokenizerStoreSpec pins store-fed d83 ≡ its `*Over` twin). */
   private[operators] def bpeMergesWf(s: SparkSession, words: DataFrame,
       iters: Int): DataFrame = {
     import s.implicits._
@@ -1014,12 +1011,14 @@ object QualityOps {
     * learned rules bought; integer counts, one double division,
     * nothing to drift. */
   def bpeEncode(s: SparkSession, d: String): DataFrame =
-    if (TokenizerStore.shareOn(s)) {
-      val (wf, mergesDf, _, _) = TokenizerStore.relations(s, d)
-      bpeEncodeApplied(s, Tables.documents(s, d), Some(wf.select("word")),
-        mergesDf.select("step", "lhs", "rhs", "pair_count")
-          .collect().sortBy(_.getLong(0)))
-    } else bpeEncodeOver(s, Tables.documents(s, d), iters = 3)
+    bpeEncodeApplied(s, Tables.documents(s, d),
+      Some(TokenizerStore.read(s, d, "word_freq").select("word")),
+      storeMerges(s, d))
+
+  /** The published d85 merge table as driver rows, in step order. */
+  private def storeMerges(s: SparkSession, d: String): Array[org.apache.spark.sql.Row] =
+    TokenizerStore.read(s, d, "bpe_merges").select("step", "lhs", "rhs", "pair_count")
+      .collect().sortBy(_.getLong(0))
 
   private[graft] def bpeEncodeOver(s: SparkSession, docs: DataFrame,
       iters: Int): DataFrame =
@@ -1112,11 +1111,12 @@ object QualityOps {
   def unigramLm(s: SparkSession, d: String): DataFrame =
     // d85 store read path: the FROZEN final piece costs (the trained
     // model) come from the published parquet; one vocabulary-grain
-    // Viterbi E-step re-derives usage. Off = self-contained rebuild.
-    if (TokenizerStore.shareOn(s)) {
-      val (wf, _, costs, _) = TokenizerStore.relations(s, d)
-      unigramUsageOut(wf, costs.select(col("piece"), col("c")))
-    } else unigramLmOver(s, Tables.documents(s, d))
+    // Viterbi E-step re-derives usage
+    unigramUsageOut(TokenizerStore.read(s, d, "word_freq"), storeCosts(s, d))
+
+  /** The published d85 final unigram piece costs (piece, c). */
+  private def storeCosts(s: SparkSession, d: String): DataFrame =
+    TokenizerStore.read(s, d, "uni_costs").select(col("piece"), col("c"))
 
   private[graft] def unigramLmOver(s: SparkSession, docs: DataFrame): DataFrame = {
     val (wf, c1) = unigramTrain(docs)
@@ -1262,11 +1262,8 @@ object QualityOps {
     * per-doc sum — the corpus never carries piece strings (the d68
     * plan shape verbatim). */
   def unigramEncode(s: SparkSession, d: String): DataFrame =
-    if (TokenizerStore.shareOn(s)) {
-      val (wf, _, costs, _) = TokenizerStore.relations(s, d)
-      unigramEncodeApplied(s, Tables.documents(s, d), wf,
-        costs.select(col("piece"), col("c")))
-    } else unigramEncodeOver(s, Tables.documents(s, d))
+    unigramEncodeApplied(s, Tables.documents(s, d),
+      TokenizerStore.read(s, d, "word_freq"), storeCosts(s, d))
 
   private[graft] def unigramEncodeOver(s: SparkSession, docs: DataFrame): DataFrame = {
     val (wf, c1) = unigramTrain(docs)
@@ -1328,10 +1325,8 @@ object QualityOps {
     * oracle unrolls the same greedy steps ([[UniMaxWord]] CTEs) over
     * the same positional pieces — refuse-loudly past the unroll. */
   def wordpieceEncode(s: SparkSession, d: String): DataFrame =
-    if (TokenizerStore.shareOn(s)) {
-      val (wf, _, _, wpv) = TokenizerStore.relations(s, d)
-      wordpieceEncodeApplied(s, Tables.documents(s, d), wf, wpv)
-    } else wordpieceEncodeOver(s, Tables.documents(s, d))
+    wordpieceEncodeApplied(s, Tables.documents(s, d),
+      TokenizerStore.read(s, d, "word_freq"), TokenizerStore.read(s, d, "wp_vocab"))
 
   private[graft] def wordpieceEncodeOver(s: SparkSession,
       docs: DataFrame): DataFrame = {
@@ -1479,15 +1474,9 @@ object QualityOps {
     // d85 store read path: all three FROZEN family models come from
     // the published parquet, so the profile pays three vocabulary-
     // grain segmentations + aggregates — an output-sized reader, not
-    // a three-family retrain (the round-17 bench hotspot). Off =
-    // self-contained rebuild, byte-≡ spec-pinned.
-    if (TokenizerStore.shareOn(s)) {
-      val (wf, mergesDf, costs, wpv) = TokenizerStore.relations(s, d)
-      tokenizerProfileApplied(wf,
-        mergesDf.select("step", "lhs", "rhs", "pair_count")
-          .collect().sortBy(_.getLong(0)),
-        costs.select(col("piece"), col("c")), wpv)
-    } else tokenizerProfileOver(s, Tables.documents(s, d))
+    // a three-family retrain (the round-17 bench hotspot)
+    tokenizerProfileApplied(TokenizerStore.read(s, d, "word_freq"),
+      storeMerges(s, d), storeCosts(s, d), TokenizerStore.read(s, d, "wp_vocab"))
 
   private[graft] def tokenizerProfileOver(s: SparkSession,
       docs: DataFrame): DataFrame = {

@@ -1164,18 +1164,11 @@ object Streaming {
       .join(hotOf.select(col("doc_id").as("j"), col("n_hot").as("h_j")),
         Seq("j"), "left")
       // hot term: min of the available hot counts (the candidate join
-      // guarantees ≥ 1 new side, so at least one is non-null). FAIL-SAFE
-      // (round-18 ADVICE): if both were ever null, the term is null,
-      // `n_cr + null` is null, and `least` SKIPS nulls — the bound falls
-      // back to least(n_i, n_j), which is always sound — instead of the
-      // old Long.MaxValue sentinel arithmetic that wrapped negative and
-      // silently dropped the pair before its exact verify.
-      .withColumn("ub", least(
-        col("n_cr") + least(coalesce(col("h_i"), col("h_j")),
-          coalesce(col("h_j"), col("h_i"))),
-        col("n_i"), col("n_j")))
-      .filter(col("ub").cast("double") /
-        (col("n_i") + col("n_j") - col("ub")) >= threshold)
+      // guarantees ≥ 1 new side, so at least one is non-null); if both
+      // were ever null the bound falls back to least(n_i, n_j), see
+      // [[PairGraph.jaccardUb]]
+      .filter(PairGraph.jaccardUbKeep(least(coalesce(col("h_i"), col("h_j")),
+        coalesce(col("h_j"), col("h_i"))), threshold))
       .select("i", "j", "n_i", "n_j")
     val candDocs = bounded
       .select(explode(array(col("i"), col("j"))).as("doc_id")).distinct()

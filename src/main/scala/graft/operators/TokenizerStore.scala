@@ -1,17 +1,15 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** d85 — the MATERIALIZED tokenizer-model store: the d74/d61 "train
-  * once per corpus snapshot, publish, consume" discipline applied to
-  * the three tokenizer families. A production pipeline trains its
+/** d85 — the MATERIALIZED tokenizer-model store: a [[PublishedStore]]
+  * for the three tokenizer families. A production pipeline trains its
   * tokenizer ONCE per corpus snapshot — training (BPE merge rounds,
   * unigram hard-EM, the WordPiece positional seed) is the expensive
-  * half; encoding is vocabulary-grain application — so the publisher
-  * job derives the ONE shared word-frequency grain and WAP-publishes
-  * FOUR relations, every one Heaps-law VOCABULARY-sized (millions of
-  * rows at 100 TB, never corpus-sized):
+  * half; encoding is vocabulary-grain application — so d85
+  * ([[publish]]) derives the ONE shared word-frequency grain and
+  * publishes four relations, every one Heaps-law VOCABULARY-sized
+  * (millions of rows at 100 TB, never corpus-sized):
   *
   *   - `word_freq`  (word, cnt)                   — the shared grain
   *                    every trainer and encoder runs on,
@@ -24,125 +22,27 @@ import org.apache.spark.sql.functions._
   *   - `wp_vocab`   (piece)                       — d81's positional
   *                    (`##`) vocabulary.
   *
-  * Consumers (d65/d68/d76/d77/d81/d83) read the published parquet by
-  * default under `spark.graft.shareTokenizerStore` (off = the
-  * self-contained per-query rebuild, byte-≡ spec-pinned — the exact
-  * shareVectorIndex knob discipline). Each table promotes through the
-  * f09 write/audit/promote gate under a per-corpus lock; re-running
-  * the publisher for a live snapshot serves the recorded audit
-  * manifest (publish-if-absent), and `spark.graft.forceRebuildStores`
-  * forces a retrain — the bench's cold-build measurement hook.
+  * Consumers (d65/d68/d76/d77/d81/d83) read the published parquet;
+  * TokenizerStoreSpec pins each ≡ its self-contained `*Over` twin.
   *
   * Precondition note: the shared grain enforces the STRICTEST member
   * family's refusals at publish time — [[QualityOps.wordFreq]]'s
   * UniMaxWord unroll bound and [[QualityOps.requireNoHash]]'s '#'
   * refusal — so a corpus only one family could serve fails the store
-  * loudly; the self-contained paths (share off) retain per-family
-  * behavior. At 100 TB the tables live bucketed (word_freq on word)
-  * under a transactional catalog commit; the composition is
-  * unchanged. */
-object TokenizerStore {
-  private lazy val root: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft-tokstore").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(p)
-    p.toString
-  }
-  private val built = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val manifestCache = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType,
-      Array[org.apache.spark.sql.Row])]
-  // monotone per-corpus publish version: bumps on every completed
-  // FRESH publish, so per-JVM derived caches key on the store CONTENT
-  // they were built from, not on the mutable corpus path (the round-17
-  // clonedCells staleness fix, shared with VectorIndexStore)
-  private val versions = scala.collection.concurrent.TrieMap.empty[String, Long]
-  private val locks = scala.collection.concurrent.TrieMap.empty[String, Object]
-  private def lockFor(d: String): Object = locks.getOrElseUpdate(d, new Object)
+  * loudly; the `*Over` twins keep per-family behavior. */
+object TokenizerStore extends PublishedStore("tokstore", Seq(
+    "bpe_merges" -> Seq("step"),
+    "uni_costs" -> Seq("piece"),
+    "word_freq" -> Seq("word"),
+    "wp_vocab" -> Seq("piece"))) {
 
-  private def baseFor(d: String): String =
-    s"$root/${org.apache.commons.codec.digest.DigestUtils.md5Hex(d)}"
-
-  private val StoreTables = Seq(
-    ("bpe_merges", Seq("step")),
-    ("uni_costs", Seq("piece")),
-    ("word_freq", Seq("word")),
-    ("wp_vocab", Seq("piece")))
-
-  /** The current publish version of corpus `d`'s store (0 = never
-    * published this JVM). */
-  private[graft] def version(d: String): Long = versions.getOrElse(d, 0L)
-
-  /** The publisher job (registry key d85): derive the shared
-    * word-frequency grain, train all three families, WAP-publish the
-    * four relations, return the unioned audit manifests (tbl,
-    * check_name, observed, ok) — the d74 publisher contract verbatim.
-    * Idempotent per corpus snapshot: a re-run for a live store serves
-    * the recorded manifest unless `spark.graft.forceRebuildStores`. */
-  def publish(s: SparkSession, d: String): DataFrame = lockFor(d).synchronized {
-    val force = s.conf.get("spark.graft.forceRebuildStores", "false").toBoolean
-    manifestCache.get(d).filter(_ => built.contains(d) && !force) match {
-      case Some((schema, rows)) =>
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      case None => publishFresh(s, d)
-    }
-  }
-
-  private def publishFresh(s: SparkSession, d: String): DataFrame = {
-    val docs = graft.Tables.documents(s, d)
-    val wf = QualityOps.wordFreq(docs, "tokenizerStore")
+  protected def derive(s: SparkSession, d: String): Map[String, DataFrame] = {
+    val wf = QualityOps.wordFreq(graft.Tables.documents(s, d), "tokenizerStore")
     QualityOps.requireNoHash(wf, "tokenizerStore")
-    val rels = Map(
+    Map(
       "word_freq" -> wf,
       "bpe_merges" -> QualityOps.bpeMergesWf(s, wf, iters = 3),
       "uni_costs" -> QualityOps.unigramTrainWf(wf)._2,
       "wp_vocab" -> QualityOps.wordpieceVocab(wf))
-    val manifests = StoreTables.map { case (name, keyCols) =>
-      val df = rels(name)
-      Sources.writeAuditPublishStaged(s, df,
-        s"${baseFor(d)}/$name", keyCols, false, None)
-        .select(lit(name).as("tbl"), col("check_name"), col("observed"),
-          col("ok"))
-    }
-    val manifest = manifests.reduce(_.unionByName(_)).orderBy("tbl", "check_name")
-    val rows = manifest.collect()
-    wf.unpersist(blocking = false)
-    val okIdx = manifest.schema.fieldIndex("ok")
-    val checkIdx = manifest.schema.fieldIndex("check_name")
-    // the VectorIndexStore rule: a manifest with MISSING published_rows
-    // proofs must never read as vacuously ok — exactly one per table
-    val pubRows = rows.filter(_.getString(checkIdx) == "published_rows")
-    require(pubRows.length == StoreTables.size,
-      s"tokenizer-store publish manifest for $d carries ${pubRows.length} " +
-        s"published_rows checks, expected ${StoreTables.size} " +
-        "(one per table) — malformed audit, refusing to mark the store built")
-    val allOk = pubRows.forall(_.getBoolean(okIdx))
-    if (allOk) {
-      built(d) = baseFor(d)
-      manifestCache(d) = (manifest.schema, rows)
-      versions(d) = versions.getOrElse(d, 0L) + 1
-    }
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), manifest.schema)
   }
-
-  /** Read-side accessor: publish-if-absent, then four plain parquet
-    * scans — (word_freq, bpe_merges, uni_costs, wp_vocab). */
-  private[operators] def relations(s: SparkSession,
-      d: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val base = built.getOrElse(d, lockFor(d).synchronized {
-      built.getOrElse(d, {
-        publish(s, d)
-        built.getOrElse(d, throw new IllegalStateException(
-          s"tokenizer-store publish for $d failed its WAP audit — no tables"))
-      })
-    })
-    (s.read.parquet(s"$base/word_freq/published"),
-      s.read.parquet(s"$base/bpe_merges/published"),
-      s.read.parquet(s"$base/uni_costs/published"),
-      s.read.parquet(s"$base/wp_vocab/published"))
-  }
-
-  /** The share knob (the shareVectorIndex discipline): on by default;
-    * off = every consumer rebuilds its models self-contained. */
-  private[operators] def shareOn(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.shareTokenizerStore", "true").toBoolean
 }

@@ -748,11 +748,13 @@ class LlmOpsSpec extends SparkSpec {
       "Lloyd assignment is a partition: one label per vector")
     val fed = EmbeddingOps.clusterSemdedup(spark, Sf).collect().toSeq
     val fedRollup = EmbeddingOps.kmeans(spark, Sf).collect().toSeq
-    spark.conf.set("spark.graft.shareKmeansLabels", "false")
-    val (re, reRollup) = try {
-      (EmbeddingOps.clusterSemdedup(spark, Sf).collect().toSeq,
-        EmbeddingOps.kmeans(spark, Sf).collect().toSeq)
-    } finally spark.conf.unset("spark.graft.shareKmeansLabels")
+    // the self-contained twins at the store's parameters
+    val emb = Tables.embeddings(spark, Sf)
+    val re = EmbeddingOps.clusterSemdedupOver(
+      emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
+      0.40, EmbeddingOps.KmeansK, EmbeddingOps.KmeansIters).collect().toSeq
+    val reRollup = EmbeddingOps.kmeansOver(emb.select(col("vec_id"), col("embedding")),
+      EmbeddingOps.KmeansK, EmbeddingOps.KmeansIters).collect().toSeq
     assert(fed === re, "store-fed and re-derived d60 must be byte-identical")
     assert(fedRollup === reRollup,
       "store-fed and re-derived d59 rollup must be byte-identical")
@@ -1071,13 +1073,12 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("d74 store-fed d73 ≡ self-contained rebuild; manifests green; no empty PQ cluster per sf") {
-    // the shareVectorIndex knob: store-fed (default) and re-derived
-    // results must be byte-identical — the sharePairStore discipline
+    // store-fed and re-derived results must be byte-identical: the
+    // search over freshly built index relations at the store's parameters
     val fed = EmbeddingOps.ivfPqAnn(spark, Sf).collect().map(_.toString).toSeq
-    spark.conf.set("spark.graft.shareVectorIndex", "false")
-    val solo =
-      try EmbeddingOps.ivfPqAnn(spark, Sf).collect().map(_.toString).toSeq
-      finally spark.conf.set("spark.graft.shareVectorIndex", "true")
+    val (rc, rcodes, rcb, rcent) = EmbeddingOps.pqIndexRelations(spark, Sf)
+    val solo = EmbeddingOps.ivfPqSearch(spark, Sf, rc, rcodes, rcb, rcent,
+      shortlist = 64, sw = 16).collect().map(_.toString).toSeq
     assert(fed === solo)
     // publisher manifests: every audit row ok, row counts match the
     // oracle's invariants (n / n packed / 1024)

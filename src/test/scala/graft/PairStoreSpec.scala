@@ -6,20 +6,15 @@ import graft.operators.{LlmOps, PairGraph, PairStore}
   * consumers must be indistinguishable from their recomputing twins,
   * and the publisher must be safely re-runnable.
   *
-  * Since round 11 the threshold-0.8 consumers (d19/d20/d30/d45/d53)
-  * read the store BY DEFAULT (`spark.graft.sharePairStore=true`), so
-  * the equivalence tests here force the standalone derivation with the
-  * knob OFF — otherwise both sides would read the same parquet and the
-  * tests would be vacuous. */
+  * Every threshold-0.8 consumer (d19/d20/d30/d45/d53) reads the store,
+  * so the equivalence tests feed the `*Over` twins the raw derivation
+  * (`jaccardPairsRaw`, shingle chain and all) — both sides reading the
+  * same parquet would make the tests vacuous. */
 class PairStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Run `f` with the share-store knob disabled: the true recomputing
-    * path, shingle chain and all. */
-  private def recomputing[T](f: => T): T = {
-    spark.conf.set("spark.graft.sharePairStore", "false")
-    try f finally spark.conf.set("spark.graft.sharePairStore", "true")
-  }
+  /** The true recomputing pair relation at the store's threshold. */
+  private def rawPairs = PairGraph.jaccardPairsRaw(spark, Sf, PairStore.Threshold)
 
   test("d46 publish manifest: all audits pass, published rows = pair count") {
     val manifest = PairStore.publish(spark, Sf)
@@ -34,48 +29,53 @@ class PairStoreSpec extends SparkSpec {
 
   test("d47 store-fed contamination ≡ recomputed d20, row for row") {
     val store = PairStore.storeContamination(spark, Sf).collect().toSeq
-    val recomputed = recomputing(PairGraph.contamination(spark, Sf).collect().toSeq)
+    val recomputed = PairGraph.contaminationOver(spark, Sf, rawPairs).collect().toSeq
     assert(store === recomputed)
   }
 
   test("d48 store-fed edit verify ≡ recomputed d45, row for row") {
     val store = PairStore.storeEditVerify(spark, Sf).collect().toSeq
-    val recomputed = recomputing(PairGraph.editVerify(spark, Sf).collect().toSeq)
+    val recomputed = PairGraph.editVerifyOver(spark, Sf, rawPairs).collect().toSeq
     assert(store === recomputed)
   }
 
   test("d30b store-fed incremental dedup ≡ recomputed d30, row for row") {
     val store = PairStore.storeIncrementalDedup(spark, Sf).collect().toSeq
-    val recomputed = recomputing(
-      PairGraph.incrementalDedup(spark, Sf).collect().toSeq)
+    val recomputed = PairGraph.incrementalDedupOver(spark, Sf, rawPairs)
+      .collect().toSeq
     assert(store === recomputed)
   }
 
   test("d49 store-fed clusters ≡ recomputed d19, row for row") {
     val store = PairStore.storeClusters(spark, Sf).collect().toSeq
-    val recomputed = recomputing(
-      PairGraph.neardupClusters(spark, Sf).collect().toSeq)
+    val recomputed = PairGraph.clusterAssign(spark, Sf,
+      rawPairs.select("i", "j")).collect().toSeq
     assert(store === recomputed)
   }
 
-  test("share knob default: consumers read the store; raw producers never do") {
-    // default-on: the d20 plan scans the published parquet (no shingle
-    // work — the plan has no Generate for the n-gram explode)...
+  test("consumers read the store; raw producers never do") {
+    // the d20 plan scans the published parquet (no shingle work — the
+    // plan has no Generate for the n-gram explode)...
     val fed = PairGraph.contamination(spark, Sf).queryExecution.sparkPlan.toString
     assert(!fed.contains("token_ngrams"), "store-fed d20 must not build shingles")
-    // ...while d02's raw derivation always re-derives, knob or not
+    // ...while d02's raw derivation always re-derives
     val raw = PairGraph.ngramJaccard(spark, Sf).queryExecution.sparkPlan.toString
     assert(raw.contains("token_ngrams"), "d02 must stay self-contained")
   }
 
   test("re-publish is safe: second publish leaves a complete readable store") {
     val first = PairStore.publish(spark, Sf).collect().toSeq
-    val second = PairStore.publish(spark, Sf).collect().toSeq
+    // a plain re-run serves the recorded manifest; force the second
+    // publish so the rename-aside swap really runs
+    spark.conf.set("spark.graft.forceRebuildStores", "true")
+    val second =
+      try PairStore.publish(spark, Sf).collect().toSeq
+      finally spark.conf.set("spark.graft.forceRebuildStores", "false")
     // deterministic corpus ⇒ identical manifest, and the swapped-in
     // table still feeds consumers correctly
     assert(second === first)
     assert(PairStore.storeEditVerify(spark, Sf).count() ===
-      recomputing(PairGraph.editVerify(spark, Sf).count()))
+      PairGraph.editVerifyOver(spark, Sf, rawPairs).count())
   }
 
   test("s17 deltaPairs ≡ full pair relation filtered to pairs touching the probe") {

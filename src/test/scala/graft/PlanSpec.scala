@@ -32,9 +32,11 @@ class PlanSpec extends SparkSpec {
     * post-EnsureRequirements, so `sparkPlan` can't see them).
     * InMemoryTableScan stays a leaf — cache-internal exchanges, which
     * run exactly once at materialization, are invisible by design. */
-  private def executedNodes(name: String): Seq[SparkPlan] = {
+  private def executedNodes(name: String): Seq[SparkPlan] =
+    executedNodesOf(SparkEntry.queries(name)(spark, Sf))
+
+  private def executedNodesOf(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val df = SparkEntry.queries(name)(spark, Sf)
     df.collect()
     def walk(p: SparkPlan): Seq[SparkPlan] = {
       val kids = p.children ++ (p match {
@@ -532,11 +534,11 @@ class PlanSpec extends SparkSpec {
   test("d76 output plan never re-scans the corpus — store-fed it reads " +
     "the published model; self-contained it reads the cached word table") {
     // the scaladoc's "ONE corpus scan ever happens" claim, structurally,
-    // on BOTH read paths (round 18: d76 reads the d85 store by default):
+    // on BOTH read paths (d76 reads the d85 store):
     // store-fed the output plan is an OUTPUT-SIZED READER — zero
     // FileScans of the documents parquet, only vocabulary-sized scans
     // of the published word_freq/uni_costs tables; self-contained
-    // (share off) the word-frequency cache is load-bearing — zero
+    // (`unigramLmOver`) the word-frequency cache is load-bearing — zero
     // documents scans and at least two cache reads (the seed pass and
     // the final E-step both consume wf)
     import org.apache.spark.sql.execution.FileSourceScanExec
@@ -554,16 +556,14 @@ class PlanSpec extends SparkSpec {
       case f: FileSourceScanExec
         if f.relation.location.rootPaths.exists(_.toString.contains("word_freq")) => f
     }.nonEmpty, "the store-fed d76 plan must read the published word_freq")
-    spark.conf.set("spark.graft.shareTokenizerStore", "false")
-    try {
-      spark.sharedState.cacheManager.clearCache()
-      val solo = executedNodes("d76_unigram_lm")
-      assert(docScans(solo).isEmpty,
-        "the self-contained d76 output plan re-scanned the corpus parquet" +
-          " — the word-frequency cache is no longer load-bearing")
-      assert(solo.count(_.isInstanceOf[InMemoryTableScanExec]) >= 2,
-        "the seed pass and the E-step must both read the cached word table")
-    } finally spark.conf.set("spark.graft.shareTokenizerStore", "true")
+    spark.sharedState.cacheManager.clearCache()
+    val solo = executedNodesOf(
+      operators.QualityOps.unigramLmOver(spark, Tables.documents(spark, Sf)))
+    assert(docScans(solo).isEmpty,
+      "the self-contained d76 output plan re-scanned the corpus parquet" +
+        " — the word-frequency cache is no longer load-bearing")
+    assert(solo.count(_.isInstanceOf[InMemoryTableScanExec]) >= 2,
+      "the seed pass and the E-step must both read the cached word table")
   }
 
   test("d76 viterbi fold is one projection — no join or shuffle carries " +

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** d85 — the tokenizer-model store: publisher manifests, the
-  * shareTokenizerStore byte-≡ differential for every consumer, the
+/** d85 — the tokenizer-model store: publisher manifests, the store-fed
+  * ≡ self-contained `*Over` byte-≡ differential for every consumer, the
   * per-sf fixture preconditions the oracle's invariants ride on, and
   * the forced-rebuild version-keying fix (round-17 ADVICE: derived
   * clones must key on the store PUBLISH, not the mutable corpus
@@ -11,9 +11,19 @@ import org.apache.spark.sql.functions._
 class TokenizerStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def offStore[A](f: => A): A = {
-    spark.conf.set("spark.graft.shareTokenizerStore", "false")
-    try f finally spark.conf.set("spark.graft.shareTokenizerStore", "true")
+  /** Each consumer's self-contained `*Over` twin: trains its own
+    * models from the corpus, never touching the store. */
+  private val offStore: Map[String, (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame] = {
+    import operators.QualityOps._
+    def docs(s: org.apache.spark.sql.SparkSession, d: String) = Tables.documents(s, d)
+    Map(
+      "d65_bpe_merges" -> ((s, d) => bpeMergesOver(s, docs(s, d), iters = 3)),
+      "d68_bpe_encode" -> ((s, d) => bpeEncodeOver(s, docs(s, d), iters = 3)),
+      "d76_unigram_lm" -> ((s, d) => unigramLmOver(s, docs(s, d))),
+      "d77_unigram_encode" -> ((s, d) => unigramEncodeOver(s, docs(s, d))),
+      "d81_wordpiece_encode" -> ((s, d) => wordpieceEncodeOver(s, docs(s, d))),
+      "d83_tokenizer_profile" -> ((s, d) => tokenizerProfileOver(s, docs(s, d))))
   }
 
   test("d85 publisher manifests green; store-fed consumers ≡ self-contained rebuilds") {
@@ -25,16 +35,12 @@ class TokenizerStoreSpec extends SparkSpec {
     assert(pub.keySet === Set("word_freq", "bpe_merges", "uni_costs", "wp_vocab"))
     assert(pub("bpe_merges") === 3L, "3 merge rounds, one row each")
     assert(pub("word_freq") > 0L && pub("uni_costs") > 0L && pub("wp_vocab") > 0L)
-    // every consumer: store-fed (default) ≡ re-derived, byte-identical
-    // — the shareVectorIndex discipline applied to tokenizers
-    Seq("d65_bpe_merges", "d68_bpe_encode", "d76_unigram_lm",
-        "d77_unigram_encode", "d81_wordpiece_encode", "d83_tokenizer_profile")
-      .foreach { k =>
-        val fed = SparkEntry.queries(k)(spark, Sf).collect().map(_.toString).toSeq
-        val solo = offStore(
-          SparkEntry.queries(k)(spark, Sf).collect().map(_.toString).toSeq)
-        assert(fed === solo, s"$k store-fed drifted from self-contained")
-      }
+    // every consumer: store-fed ≡ re-derived, byte-identical
+    offStore.toSeq.sortBy(_._1).foreach { case (k, solo) =>
+      val fed = SparkEntry.queries(k)(spark, Sf).collect().map(_.toString).toSeq
+      assert(fed === solo(spark, Sf).collect().map(_.toString).toSeq,
+        s"$k store-fed drifted from self-contained")
+    }
   }
 
   test("fixture precondition per sf: every BPE round finds a pair (merges = 3)") {
@@ -44,7 +50,7 @@ class TokenizerStoreSpec extends SparkSpec {
     Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
       .filter(dd => new java.io.File(s"$dd/documents.parquet").exists)
       .foreach { dd =>
-        val m = offStore(SparkEntry.queries("d65_bpe_merges")(spark, dd).count())
+        val m = offStore("d65_bpe_merges")(spark, dd).count()
         assert(m === 3L, s"$dd: expected 3 merge rows, got $m")
       }
   }
@@ -80,16 +86,22 @@ class TokenizerStoreSpec extends SparkSpec {
     val second = operators.EmbeddingOps.annDelete(spark, p).collect()
     assert(second.nonEmpty && second.forall(_.getLong(1) < 15L),
       "d79 served a clone of the superseded store's cells")
-    // tokenizer store: same version discipline
+    // tokenizer, pair and label stores: same version discipline — a
+    // plain re-run serves the recorded manifest, a forced one re-derives
     val docsP = java.nio.file.Files.createTempDirectory("graft-regen2").toString
     spark.read.parquet(s"$Sf/documents.parquet").limit(50)
       .write.mode("overwrite").parquet(s"$docsP/documents.parquet")
-    val t0 = operators.TokenizerStore.version(docsP)
-    operators.TokenizerStore.publish(spark, docsP).collect()
-    assert(operators.TokenizerStore.version(docsP) === t0 + 1)
-    spark.conf.set("spark.graft.forceRebuildStores", "true")
-    try operators.TokenizerStore.publish(spark, docsP).collect()
-    finally spark.conf.set("spark.graft.forceRebuildStores", "false")
-    assert(operators.TokenizerStore.version(docsP) === t0 + 2)
+    Seq((operators.TokenizerStore, docsP), (operators.PairStore, docsP),
+        (operators.LabelStore, p)).foreach { case (store, dir) =>
+      val t0 = store.version(dir)
+      val man = store.publish(spark, dir).collect().toSeq
+      assert(store.version(dir) === t0 + 1)
+      assert(store.publish(spark, dir).collect().toSeq === man)
+      assert(store.version(dir) === t0 + 1, s"$store re-run must not rebuild")
+      spark.conf.set("spark.graft.forceRebuildStores", "true")
+      try store.publish(spark, dir).collect()
+      finally spark.conf.set("spark.graft.forceRebuildStores", "false")
+      assert(store.version(dir) === t0 + 2, s"$store forced rebuild must mint a version")
+    }
   }
 }
