@@ -320,10 +320,13 @@ object DedupOps {
     * fuzzy joins (the join itself broadcasts the batch side). Variant
     * SETS are unchanged: i<j position pairs enumerate exactly the
     * distinct delete-2 results the recursive del1∘del1 set reached
-    * (deleting {i,j} in either order is the same string), and dropping
-    * the per-key array_distinct only duplicates candidate rows that
-    * the downstream pair-level `.distinct()` already collapses — the
-    * joined/verified output is identical (LlmOpsSpec's unblocked
+    * (deleting {i,j} in either order is the same string). A key with
+    * repeated letters reaches one variant from several positions (a
+    * 12-letter run of one letter: 66 delete-2 rows, one string), so
+    * the rows are deduplicated per (id, key, v) BEFORE the join — else
+    * two such keys join 66 × 66 times per shared variant, and a
+    * low-entropy corpus blows the join up quadratically. The joined/
+    * verified output is identical (LlmOpsSpec's unblocked
     * differentials pin it). Null keys emit only a null-variant base row
     * the equi-join drops — the same match-nothing semantics; empty keys
     * emit just themselves (the length guards keep `sequence(1, 0)`'s
@@ -353,6 +356,7 @@ object DedupOps {
           .otherwise(concat(k.substr(lit(1), col("i") - 1),
             k.substr(col("i") + 1, col("j") - col("i") - 1),
             k.substr(col("j") + 1, n))).as("v"))
+      .distinct()
   }
 
   private[graft] def fuzzyJoinOver(left: DataFrame, right: DataFrame): DataFrame = {

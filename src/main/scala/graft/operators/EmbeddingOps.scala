@@ -119,6 +119,14 @@ object EmbeddingOps {
   private[graft] def assignEmbeddings(emb: DataFrame, c: DataFrame): DataFrame =
     assignToCentroids(arraysOf(emb), c)
 
+  /** [[assignEmbeddings]] against the frozen (cid, dim, c) centroid
+    * table published at `dir`, collected once per publish
+    * ([[Sources.readFrozen]]) — the s18 admission path. */
+  private[graft] def assignFrozen(emb: DataFrame, dir: String): DataFrame =
+    assignArr(arraysOf(emb), Sources.readFrozen(emb.sparkSession, dir,
+      "kmeans-centroid-collect")(collectModel(_, "kmeans-centroid-collect")))
+      .drop("m")
+
   /** An array frame (vec_id, v) against a (cid, dim, c) centroid
     * relation: (vec_id, cid, dist2). */
   private[graft] def assignToCentroids(ea: DataFrame, c: DataFrame): DataFrame =
@@ -567,6 +575,16 @@ object EmbeddingOps {
         struct(col("csim"), -col("cid"))).as("w"))
       .select(col("vec_id"), col("w.v").as("v"), col("w.cid").as("cid"))
 
+  /** [[assignCellsOver]] against the frozen (cid, cv) coarse centroids
+    * published at `dir`, collected once per publish and broadcast from
+    * the driver — the s19/s26 cell admission. */
+  private[graft] def assignCellsFrozen(e: DataFrame, dir: String): DataFrame = {
+    val s = e.sparkSession
+    val (schema, rows) = Sources.readFrozen(s, dir, "ivf-centroid-collect") { c =>
+      (c.schema, Sources.labeled(s, "ivf-centroid-collect")(c.collect())) }
+    assignCellsOver(e, s.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+  }
+
   def ivfAnn(s: SparkSession, d: String, nprobe: Int = 1): DataFrame = {
     val k = 10
     val (cells, centroids) = ivfCells(s, d, k)
@@ -647,6 +665,16 @@ object EmbeddingOps {
     * (vec_id, m, cid, dist2) — s19's frozen-codebook admission path. */
   private[graft] def pqAssignEmbeddings(e: DataFrame, c: DataFrame): DataFrame =
     assignArr(usable(e), collectModel(c, "pq-codebook-collect"))
+
+  /** [[pqAssignEmbeddings]] against the frozen published codebook
+    * (m, code, pos, c) at `dir`, collected once per publish — s19's
+    * code admission. */
+  private[graft] def pqAssignFrozen(e: DataFrame, dir: String): DataFrame =
+    assignArr(usable(e), Sources.readFrozen(e.sparkSession, dir,
+      "pq-codebook-collect") { cb =>
+        collectModel(cb.select(col("m"), col("code").as("cid"),
+          col("pos").as("dim"), col("c")), "pq-codebook-collect")
+      })
 
   /** The four PUBLISHED relations of the d73/d74 vector index —
     * (cells = (vec_id, cid), codes = (vec_id, m, code), codebook =

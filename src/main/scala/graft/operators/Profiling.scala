@@ -393,11 +393,12 @@ object Profiling {
     * the anti-pattern every other window here avoids. Instead the rank
     * is computed distributed: `repartitionByRange` on (value, key)
     * gives 32 ordered, non-overlapping shards; per-shard counts (a
-    * ≤32-row aggregate) turn into per-shard offsets with a prefix-sum
-    * window OVER THE 32 COUNT ROWS (unpartitioned, but its input is
-    * shard-count-sized — reduced data, not corpus data); the global
-    * zero-based rank is then offset + (row_number within shard) − 1, a
-    * window PARTITIONED by shard. Bucket = ⌊rank·nBuckets / n⌋ — pure
+    * ≤32-row aggregate) turn into per-shard offsets by a predecessor
+    * sum: the count rows joined to a broadcast copy of themselves and
+    * summed over the strictly-smaller shards (≤ 32² rows, no
+    * unpartitioned window); the global zero-based rank is then
+    * offset + (row_number within shard) − 1, a window PARTITIONED by
+    * shard. Bucket = ⌊rank·nBuckets / n⌋ — pure
     * integer arithmetic, so the oracle's single-window row_number
     * reproduces it exactly.
     *
@@ -443,14 +444,16 @@ object Profiling {
       .repartitionByRange(nShards, sortExprs: _*)
       .withColumn("shard", spark_partition_id()))
     val counts = sharded.groupBy("shard").agg(count(lit(1)).as("cnt"))
-    // nShards-row prefix sum: off = rows in strictly-smaller shards
-    val wOff = Window.orderBy("shard").rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.orderBy("shard")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val offsets = counts
-      .withColumn("off", coalesce(sum(col("cnt")).over(wOff), lit(0L)))
-      .withColumn("n", sum(col("cnt")).over(wAll))
-      .select("shard", "off", "n")
+    // predecessor sums over the ≤ nShards count rows: off = rows in
+    // strictly-smaller shards, n = all rows — a broadcast self-join of
+    // the counts, where an unpartitioned prefix-sum window would pull
+    // them into one partition
+    val offsets = counts.select(col("shard")).crossJoin(broadcast(
+        counts.select(col("shard").as("p_shard"), col("cnt"))))
+      .groupBy("shard")
+      .agg(sum(when(col("p_shard") < col("shard"), col("cnt"))
+          .otherwise(0L)).as("off"),
+        sum(col("cnt")).as("n"))
     val w = Window.partitionBy("shard").orderBy(sortExprs: _*)
     sharded
       .join(broadcast(offsets), "shard")

@@ -481,7 +481,16 @@ object Sources {
     * the PUBLISHED location. [[writeAuditPublishStaged]] is the
     * library surface taking any staged frame + expected row count;
     * SourcesSpec drives the REJECTION path with a poisoned staged
-    * table (duplicate keys) and asserts nothing publishes. */
+    * table (duplicate keys) and asserts nothing publishes.
+    *
+    * Jobs per publish, by label (`<phase>:<table>`):
+    *  - `wap-stage`: the staging write — one job, plus one per
+    *    broadcast or exchange in the derived plan;
+    *  - `wap-audit`: two — the per-key grouping's map stage, then the
+    *    per-partition sums collected to the driver ([[auditKeys]]);
+    *  - `wap-recount`: one — the promoted files counted per partition.
+    * No phase runs a schema-inference job: every re-read carries the
+    * schema of the frame that was written. */
   def writeAuditPublish(s: SparkSession, d: String): DataFrame = {
     val survivors = Tables.documents(s, d)
       // the d01 dedup identity, NFC included (see LlmOps.normText)
@@ -861,6 +870,101 @@ object Sources {
     try body finally s.sparkContext.setLocalProperty(key, prev)
   }
 
+  /** A parquet read of files this code has just written, with the
+    * schema of the frame that wrote them: `spark.read.parquet` without
+    * a schema runs one inference job per call (a footer read), and the
+    * publish paths re-read their own output several times per batch.
+    * Hive-style `bucket=<b>` directories still surface as a `bucket`
+    * column when `schema` carries it (typed by the schema). */
+  private def readParquet(s: SparkSession,
+      schema: org.apache.spark.sql.types.StructType, paths: Seq[String],
+      basePath: Option[String] = None): DataFrame = {
+    val r = s.read.schema(schema)
+    basePath.fold(r)(r.option("basePath", _)).parquet(paths: _*)
+  }
+
+  /** Rows of `df` counted in ONE job with no exchange: per-partition
+    * counts summed on the driver. `Dataset.count` plans an aggregate
+    * exchange, which adaptive execution runs as a second job. Every row
+    * is still read back (no column is needed to count it). */
+  private def countRows(df: DataFrame): Long =
+    df.select().queryExecution.toRdd.count()
+
+  /** Collected published models by directory: (label @ path) →
+    * (directory identity, collected value); least recently used first,
+    * at most 32 entries. */
+  private val frozenModels =
+    new java.util.LinkedHashMap[String, (Seq[String], Any)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, (Seq[String], Any)]): Boolean = size > 32
+    }
+
+  /** `collect` applied to the FROZEN model table published at `dir` (a
+    * centroid table or codebook that a maintenance sink trains once and
+    * then only reads), re-run only when the table changes. A hit costs
+    * one directory listing instead of a schema-inference job and a
+    * collect job per trigger. The cache key is the directory's identity:
+    * its path plus the name and size of every file in it (the part files
+    * and the `_batch_<id>` marker). Every publish writes part files with
+    * fresh names, so a table re-published at the same path never serves
+    * a stale model. `label` names the table read and separates two
+    * collected forms of one directory. */
+  private[graft] def readFrozen[T](s: SparkSession, dir: String, label: String)(
+      collect: DataFrame => T): T = {
+    val d = new java.io.File(dir)
+    val identity = Option(d.listFiles()).getOrElse(Array.empty)
+      .map(f => s"${f.getName}:${f.length}").sorted.toSeq
+    val key = s"$label@${d.getCanonicalPath}"
+    frozenModels.synchronized(Option(frozenModels.get(key)))
+      .collect { case (`identity`, m) => m.asInstanceOf[T] }
+      .getOrElse {
+        val m = collect(labeled(s, label)(s.read.parquet(dir)))
+        frozenModels.synchronized(frozenModels.put(key, (identity, m)))
+        m
+      }
+  }
+
+  /** A key audit of a staged read-back: `rows`, rows with a NULL key
+    * column, rows beyond the first of each non-NULL key, and rows where
+    * `misrouted` holds. */
+  private final case class KeyAudit(rows: Long, nullKeys: Long,
+      dupKeys: Long, misrouted: Long)
+
+  /** [[KeyAudit]] of `staged`: one grouping by the key, then
+    * per-partition sums added up on the driver — two jobs, where one
+    * global aggregate with countDistinct plans two exchanges and runs
+    * three. A key with a NULL column counts as a null-key row, never as
+    * a distinct key (countDistinct's rule), so `dupKeys` counts over
+    * the null-free rows. */
+  private def auditKeys(staged: DataFrame, keyCols: Seq[String],
+      misrouted: Column = lit(false)): KeyAudit = {
+    val perKey = staged.groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)).as("n"), sum(when(misrouted, 1L).otherwise(0L)).as("mis"))
+      .select(keyCols.map(col(_).isNull).reduce(_ || _), col("n"), col("mis"))
+    // per partition: rows, null-key rows, non-null keys, misrouted rows
+    val t = perKey.queryExecution.toRdd.mapPartitions { it =>
+      val acc = new Array[Long](4)
+      it.foreach { r =>
+        val n = r.getLong(1)
+        acc(0) += n
+        if (r.getBoolean(0)) acc(1) += n else acc(2) += 1
+        acc(3) += r.getLong(2)
+      }
+      Iterator.single(acc)
+    }.collect().foldLeft(new Array[Long](4))((a, b) => a.zip(b).map(p => p._1 + p._2))
+    KeyAudit(t(0), t(1), (t(0) - t(1)) - t(2), t(3))
+  }
+
+  /** The distinct values of an int column, in ONE job with no exchange:
+    * each partition's distinct set, unioned on the driver. For a
+    * planner-sized value set (bucket ids, ≤ the bucket count) this
+    * replaces `distinct().collect()`'s exchange and its second job. */
+  private def distinctInts(df: DataFrame): Seq[Int] = {
+    import df.sparkSession.implicits._
+    df.as[Int].mapPartitions(it => Iterator.single(it.toSet.toArray))
+      .collect().flatten.distinct.sorted.toSeq
+  }
+
   private def writeAuditPublishImpl(s: SparkSession, derived: DataFrame,
       expectedOpt: Option[Long], base: String,
       keyCols: Seq[String],
@@ -879,25 +983,11 @@ object Sources {
       toStage.write.mode("overwrite").parquet(staging.toString)
     }
     val expectedRows = expectedOpt.getOrElse(obs.get("n").asInstanceOf[Long])
-    val staged = s.read.parquet(staging.toString)
-    // ONE audit pass over the staged bytes (count, null keys, distinct
-    // keys out of a single aggregate) — this gate runs on every
-    // publish of every store, and the three separate count jobs it
-    // used to run were the dominant fixed cost of the model-table
-    // publishes. countDistinct skips any-NULL key rows, so dup_keys is
-    // computed over the null-free rows — identical to the old
-    // distinct() value on any null-free frame, and a frame WITH null
-    // keys already fails the null_keys check.
-    val aRow = labeled(s, s"wap-audit:$tbl") { staged.agg(
-      count(lit(1)).as("n"),
-      sum(when(keyCols.map(col(_).isNull).reduce(_ || _), 1L)
-        .otherwise(0L)).as("nulls"),
-      countDistinct(col(keyCols.head), keyCols.tail.map(col): _*).as("dk"))
-      .head() }
-    def longAt(i: Int): Long = if (aRow.isNullAt(i)) 0L else aRow.getLong(i)
-    val nStaged = longAt(0)
-    val nNullKey = longAt(1)
-    val nDupKey = (nStaged - nNullKey) - longAt(2)
+    val staged = readParquet(s, derived.schema, Seq(staging.toString))
+    // ONE audit pass over the staged bytes — this gate runs on every
+    // publish of every store, and its job count is the dominant fixed
+    // cost of the model-table publishes
+    val audit = labeled(s, s"wap-audit:$tbl")(auditKeys(staged, keyCols))
     val checks = Seq(
       // NOTE (round-18 ADVICE, documented at the CHECK site): when the
       // caller used the observe overload, `expectedRows` is the count
@@ -907,9 +997,9 @@ object Sources {
       // anomaly, e.g. a stage-retry double count) from real row loss.
       // Callers asserting an EXTERNAL expectation must pick the
       // explicit-count overload (the poisoned-stage spec does).
-      ("rows_match_expected", nStaged, nStaged == expectedRows),
-      ("null_keys", nNullKey, nNullKey == 0L),
-      ("dup_keys", nDupKey, nDupKey == 0L))
+      ("rows_match_expected", audit.rows, audit.rows == expectedRows),
+      ("null_keys", audit.nullKeys, audit.nullKeys == 0L),
+      ("dup_keys", audit.dupKeys, audit.dupKeys == 0L))
     val allOk = checks.forall(_._3)
     if (allOk) {
       // promote via two renames, never delete-then-copy: any previous
@@ -945,7 +1035,8 @@ object Sources {
     }
     val nPublished =
       if (allOk) labeled(s, s"wap-recount:$tbl") {
-        s.read.parquet(published.toString).count() } else 0L
+        countRows(readParquet(s, derived.schema, Seq(published.toString))) }
+      else 0L
     (checks :+ (("published_rows", nPublished, allOk)))
       .toDF("check_name", "observed", "ok")
       .orderBy("check_name")
@@ -1032,7 +1123,7 @@ object Sources {
     val pub = new java.io.File(s"$base/published")
     val hasData = pub.exists &&
       Option(pub.list()).exists(_.exists(_.startsWith("bucket=")))
-    if (hasData) s.read.parquet(pub.toString).drop("bucket")
+    if (hasData) readParquet(s, withBucket(schema), Seq(pub.toString)).drop("bucket")
     else s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
@@ -1041,11 +1132,8 @@ object Sources {
     * O(Δ) contract: collect the (≤ nBuckets, planner-sized) id set,
     * then scan ONLY those `bucket=<b>` dirs. */
   private[graft] def touchedBucketIds(df: DataFrame, cols: Seq[String],
-      nBuckets: Int = MaintBuckets): Seq[Int] = {
-    import df.sparkSession.implicits._
-    df.select(bucketOf(nBuckets, cols).as("bucket")).distinct()
-      .as[Int].collect().toSeq.sorted
-  }
+      nBuckets: Int = MaintBuckets): Seq[Int] =
+    distinctInts(df.select(bucketOf(nBuckets, cols)))
 
   /** Bucket-PRUNED read of a bucketed store: only the named buckets'
     * published dirs enter the scan, so a probe's read I/O is
@@ -1064,10 +1152,15 @@ object Sources {
       .filter(p => new java.io.File(p).exists)
     if (paths.isEmpty)
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else s.read.option("basePath", pubRoot)
-      .parquet(paths: _*).drop("bucket")
+    else readParquet(s, withBucket(schema), paths, Some(pubRoot))
       .select(schema.fieldNames.map(col): _*)
   }
+
+  /** A bucketed store's read schema: its row schema plus the `bucket`
+    * directory column. */
+  private def withBucket(schema: org.apache.spark.sql.types.StructType) =
+    if (schema.fieldNames.contains("bucket")) schema
+    else schema.add("bucket", org.apache.spark.sql.types.IntegerType)
 
   /** O(Δ) keyed upsert into a bucketed store — the publish half the
     * streaming maintenance sinks (s17/s18/s19/s20) need at 100 TB,
@@ -1104,7 +1197,23 @@ object Sources {
     * torn-read window (a reader between two bucket swaps) is the same
     * local-FS gap the single-table promote documents — a production
     * object store closes it with a transactional table commit.
-    * Returns the (check_name, observed, ok) audit manifest. */
+    * Returns the (check_name, observed, ok) audit manifest.
+    *
+    * Jobs per call, by label (`<phase>:<table>`; PublishBudgetSpec pins
+    * 7 for a 2-row delta read from a file and 10 for a whole s18
+    * trigger):
+    *  - `upsert-touched`: one — per-partition bucket-id sets unioned on
+    *    the driver. A delta plan with a broadcast or an exchange (s18's
+    *    assignment) adds one job for each, and one that materializes
+    *    the persisted delta;
+    *  - `upsert-stage`: three — the broadcast of the pending buckets'
+    *    stored keys (insert-only rule), the one-file-per-bucket
+    *    repartition's map stage, and the write;
+    *  - `upsert-audit`: two ([[auditKeys]]);
+    *  - `upsert-recount`: one — the promoted buckets counted per
+    *    partition.
+    * Every re-read carries the written frame's schema, so no phase runs
+    * a schema-inference job. */
   private[graft] def bucketedUpsertStaged(s: SparkSession, delta: DataFrame,
       base: String, keyCols: Seq[String], stagedMarker: String,
       nBuckets: Int = MaintBuckets, newWins: Boolean = false,
@@ -1117,6 +1226,11 @@ object Sources {
     require(bucketCols.isEmpty || bucketCols.forall(keyCols.contains),
       "bucketCols must be a subset of keyCols: bucket = f(key) is what " +
         "makes per-bucket key-uniqueness store-wide")
+    // sum(bigint) is bigint: the counter merge then keeps the delta's
+    // schema, so every batch writes, and re-reads, one store schema
+    require(sumCols.forall(c =>
+        delta.schema(c).dataType == org.apache.spark.sql.types.LongType),
+      "sumCols must be BIGINT counters")
     recoverRescale(base)
     recoverBucketSwaps(base)
     val pubRoot = new java.io.File(s"$base/published")
@@ -1143,9 +1257,8 @@ object Sources {
     // audit below rejects it — it cannot silently vanish from the write
     val tbl = base.split('/').filter(_.nonEmpty).takeRight(2).mkString("/")
     val touched: Seq[Int] = labeled(s, s"upsert-touched:$tbl") {
-      (deltaB.select("bucket") +: delB.map(_.select("bucket")).toSeq)
-        .reduce(_ unionByName _).distinct()
-        .as[Int].collect().toSeq.sorted }
+      distinctInts((deltaB.select("bucket") +: delB.map(_.select("bucket")).toSeq)
+        .reduce(_ unionByName _)) }
     val pending = touched.filterNot(b =>
       new java.io.File(s"$pubRoot/bucket=$b/$stagedMarker").exists)
     if (pending.isEmpty)
@@ -1160,8 +1273,8 @@ object Sources {
       if (existingPaths.isEmpty)
         s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           deltaP.schema)
-      else s.read.option("basePath", pubRoot.toString)
-        .parquet(existingPaths: _*).select(deltaP.columns.map(col): _*)
+      else readParquet(s, deltaP.schema, existingPaths, Some(pubRoot.toString))
+        .select(deltaP.columns.map(col): _*)
     val merged =
       if (sumCols.nonEmpty)
         // counter merge (the s17 shingle-DF store): one row per key,
@@ -1201,37 +1314,20 @@ object Sources {
         .write.partitionBy("bucket").mode("overwrite").parquet(staging.toString)
     }
     val expected = obs.get("n").asInstanceOf[Long]
-    // an all-rows-deleted merge stages NOTHING (partitionBy writes no
-    // dirs for an empty frame) — the promote loop below still runs the
-    // removals, but the audit must not try to infer a schema from air
-    val staged =
-      if (Option(staging.listFiles()).getOrElse(Array.empty)
-          .exists(_.getName.startsWith("bucket=")))
-        s.read.parquet(staging.toString)
-      else s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], deltaP.schema)
-    // ONE audit pass over the staged bytes: count, null keys, misroutes
-    // and the distinct-key count come out of a single aggregate (the
-    // per-publish job count is the constant that dominates these sinks
-    // at toy scale). countDistinct skips any-NULL rows, so dup_keys is
-    // only exact on a null-free batch — and a batch WITH null keys
-    // already fails the null_keys check.
-    val aRow = labeled(s, s"upsert-audit:$tbl") { staged.agg(
-      count(lit(1)).as("n"),
-      sum(when(keyCols.map(col(_).isNull).reduce(_ || _), 1L)
-        .otherwise(0L)).as("nulls"),
-      countDistinct(col(keyCols.head), keyCols.tail.map(col): _*).as("dk"),
-      sum(when(col("bucket") =!= bCol, 1L).otherwise(0L)).as("mis")).head() }
-    def longAt(i: Int): Long = if (aRow.isNullAt(i)) 0L else aRow.getLong(i)
-    val nStaged = longAt(0)
-    val nNullKey = longAt(1)
-    val nDupKey = (nStaged - nNullKey) - longAt(2)
-    val nMisrouted = longAt(3)
+    // an all-rows-deleted merge stages no bucket dir (partitionBy writes
+    // none for an empty frame): the read-back is empty, and the promote
+    // loop below still runs the removals
+    val staged = readParquet(s, merged.schema, Seq(staging.toString))
+    // ONE audit pass over the staged bytes: count, null keys, dup keys
+    // and misroutes (the per-publish job count is the constant that
+    // dominates these sinks at toy scale)
+    val audit = labeled(s, s"upsert-audit:$tbl") {
+      auditKeys(staged, keyCols, col("bucket") =!= bCol) }
     val checks = Seq(
-      ("rows_match_expected", nStaged, nStaged == expected),
-      ("null_keys", nNullKey, nNullKey == 0L),
-      ("dup_keys", nDupKey, nDupKey == 0L),
-      ("misrouted_keys", nMisrouted, nMisrouted == 0L))
+      ("rows_match_expected", audit.rows, audit.rows == expected),
+      ("null_keys", audit.nullKeys, audit.nullKeys == 0L),
+      ("dup_keys", audit.dupKeys, audit.dupKeys == 0L),
+      ("misrouted_keys", audit.misrouted, audit.misrouted == 0L))
     val allOk = checks.forall(_._3)
     if (allOk) {
       pubRoot.mkdirs()
@@ -1261,8 +1357,8 @@ object Sources {
           .filter(p => new java.io.File(p).exists)
         if (livePaths.isEmpty) 0L
         else labeled(s, s"upsert-recount:$tbl") {
-          s.read.option("basePath", pubRoot.toString)
-            .parquet(livePaths: _*).count() }
+          countRows(readParquet(s, merged.schema, livePaths,
+            Some(pubRoot.toString))) }
       } else 0L
     (checks :+ (("published_rows_touched", nTouchedPublished, allOk)))
       .toDF("check_name", "observed", "ok")
@@ -1309,21 +1405,13 @@ object Sources {
     val restage = new java.io.File(s"$base/restage")
     org.apache.commons.io.FileUtils.deleteQuietly(restage)
     df.write.partitionBy("bucket").mode("overwrite").parquet(restage.toString)
-    val staged = s.read.parquet(restage.toString)
-    val aRow = staged.agg(
-      count(lit(1)).as("n"),
-      sum(when(keyCols.map(col(_).isNull).reduce(_ || _), 1L)
-        .otherwise(0L)).as("nulls"),
-      countDistinct(col(keyCols.head), keyCols.tail.map(col): _*).as("dk"),
-      sum(when(col("bucket") =!= bCol, 1L).otherwise(0L)).as("mis")).head()
-    def longAt(i: Int): Long = if (aRow.isNullAt(i)) 0L else aRow.getLong(i)
-    val (nStaged, nNullKey) = (longAt(0), longAt(1))
+    val audit = auditKeys(readParquet(s, df.schema, Seq(restage.toString)),
+      keyCols, col("bucket") =!= bCol)
     val checks = Seq(
-      ("rows_match_expected", nStaged, nStaged == expected),
-      ("null_keys", nNullKey, nNullKey == 0L),
-      ("dup_keys", (nStaged - nNullKey) - longAt(2),
-        (nStaged - nNullKey) - longAt(2) == 0L),
-      ("misrouted_keys", longAt(3), longAt(3) == 0L))
+      ("rows_match_expected", audit.rows, audit.rows == expected),
+      ("null_keys", audit.nullKeys, audit.nullKeys == 0L),
+      ("dup_keys", audit.dupKeys, audit.dupKeys == 0L),
+      ("misrouted_keys", audit.misrouted, audit.misrouted == 0L))
     val allOk = checks.forall(_._3)
     if (allOk) {
       // marker BEFORE the swap: published absent + marker-carrying
@@ -1522,24 +1610,13 @@ object Sources {
     labeled(s, s"cas-stage:$name") {
       derived.write.mode("overwrite").parquet(dir)
     }
-    val staged = s.read.parquet(dir)
-    // ONE audit pass over the staged bytes (round 19 — the r18
-    // single-aggregate wap-audit discipline applied to the optimistic
-    // publishers): null keys and dup keys out of a single aggregate
-    // instead of three count jobs per staging, and f21/f22 each run
-    // several stagings per publish race. countDistinct skips any-NULL
-    // key rows, so nDup is computed over the null-free rows — identical
-    // to the old distinct() value on any null-free frame, and a frame
-    // WITH null keys already fails the null check.
-    val aRow = labeled(s, s"cas-audit:$name") { staged.agg(
-      count(lit(1)).as("n"),
-      sum(when(keyCols.map(col(_).isNull).reduce(_ || _), 1L)
-        .otherwise(0L)).as("nulls"),
-      countDistinct(col(keyCols.head), keyCols.tail.map(col): _*).as("dk"))
-      .head() }
-    def longAt(i: Int): Long = if (aRow.isNullAt(i)) 0L else aRow.getLong(i)
-    val nNull = longAt(1)
-    val nDup = (longAt(0) - nNull) - longAt(2)
+    // ONE audit pass over the staged bytes (the wap-audit discipline
+    // applied to the optimistic publishers; f21/f22 each run several
+    // stagings per publish race)
+    val audit = labeled(s, s"cas-audit:$name") {
+      auditKeys(readParquet(s, derived.schema, Seq(dir)), keyCols) }
+    val nNull = audit.nullKeys
+    val nDup = audit.dupKeys
     if (nNull != 0L || nDup != 0L) {
       // discard the staging before refusing — an audit failure must not
       // leak an orphan staging_<name> dir under the table base (the

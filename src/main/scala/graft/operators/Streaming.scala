@@ -463,14 +463,18 @@ object Streaming {
           TTLConfig.NONE)
       }
       /** Flush everything strictly below the watermark, in s21's order;
-        * re-buffer the rest with a timer at its earliest event time. */
-      private def flush(key: Long, wmMs: Long): Iterator[Out] = {
+        * re-buffer the rest with a timer at its earliest event time.
+        * `expired` is the timer whose expiry called this: the engine
+        * deletes it itself once the handler returns. */
+      private def flush(key: Long, wmMs: Long,
+          expired: Option[Long] = None): Iterator[Out] = {
         val all = buf.get().toSeq
         val (ready, rest) = all.partition(_._2 / 1000 < wmMs)
         buf.clear()
         // materialize before deleting — mutating the timer store while
         // its iterator is open corrupts the listing
-        getHandle.listTimers().toSeq.foreach(getHandle.deleteTimer)
+        getHandle.listTimers().toSeq.filterNot(expired.contains)
+          .foreach(getHandle.deleteTimer)
         if (rest.nonEmpty) {
           rest.foreach(buf.appendValue)
           getHandle.registerTimer(rest.map(_._2 / 1000).min + 1)
@@ -499,7 +503,8 @@ object Streaming {
       }
       override def handleExpiredTimer(key: Long, timerValues: TimerValues,
           expiredTimerInfo: ExpiredTimerInfo): Iterator[Out] =
-        flush(key, timerValues.getCurrentWatermarkInMs())
+        flush(key, timerValues.getCurrentWatermarkInMs(),
+          Some(expiredTimerInfo.getExpiryTimeInMs()))
     }
     ds.groupByKey(_._3)
       .transformWithState(new AsofProcessor, TimeMode.EventTime(), OutputMode.Append())
@@ -1246,10 +1251,11 @@ object Streaming {
     * retrain-rarely / assign-daily: the FIRST batch (the reference
     * corpus) trains the d59 Lloyd centroids and publishes them as a
     * frozen table; every later batch of new vectors is ASSIGNED to the
-    * frozen centroids ([[EmbeddingOps.assignEmbeddings]] — the collected
-    * k·dim model broadcast against the batch, one decimal distance per
-    * (vector, centroid) and the argmin aggregate, O(Δ·k·dim), no
-    * retraining) and upserted into the label store keyed vec_id.
+    * frozen centroids ([[EmbeddingOps.assignFrozen]] — the k·dim
+    * model, collected once per publish, broadcast against the batch,
+    * one decimal distance per (vector, centroid) and the argmin
+    * aggregate, O(Δ·k·dim), no retraining) and upserted into the label
+    * store keyed vec_id.
     * Labels are stable by construction (vectors immutable, centroids
     * frozen), so the merge is insert-only dedup.
     *
@@ -1293,21 +1299,23 @@ object Streaming {
             failed.mkString(", "))
     }
     val centPublished = new java.io.File(s"$centBase/published")
-    val isTraining = !centPublished.exists || tableDone(centBase)
     // frozen centroids: train them from THIS batch iff none exist yet
-    // (the reference-corpus batch), else read the published table
-    val cent =
-      if (centPublished.exists) s.read.parquet(centPublished.toString)
-      else EmbeddingOps.lloydCentroids(batch,
-        EmbeddingOps.KmeansK, EmbeddingOps.KmeansIters)
-    val labels = EmbeddingOps.assignEmbeddings(batch, cent)
+    // (the reference-corpus batch), else assign against the published
+    // table, collected once per publish
+    val trained =
+      if (centPublished.exists) None
+      else Some(EmbeddingOps.lloydCentroids(batch,
+        EmbeddingOps.KmeansK, EmbeddingOps.KmeansIters))
+    val labels = trained
+      .fold(EmbeddingOps.assignFrozen(batch, centPublished.toString))(
+        EmbeddingOps.assignEmbeddings(batch, _))
       .dropDuplicates("vec_id")
     checkAudit(labBase, Sources.bucketedUpsertStaged(s, labels, labBase,
       Seq("vec_id"), stagedMarker = s"_batch_$batchId"))
-    if (isTraining && !tableDone(centBase))
+    trained.foreach(cent =>
       checkAudit(centBase, Sources.writeAuditPublishStaged(s, cent,
         centBase, Seq("cid", "dim"), false,
-        Some(s"_batch_$batchId")))
+        Some(s"_batch_$batchId"))))
     doneAll()
   }
 
@@ -1400,29 +1408,26 @@ object Streaming {
       checkAudit(tb, Sources.writeAuditPublishStaged(s, df, tb,
         keyCols, false, Some(s"_batch_$batchId")))
     val centPublished = new java.io.File(s"${tables("centroids")}/published")
-    val isTraining = !centPublished.exists || tableDone(tables("centroids"))
     // persisted: the Lloyd rounds (batch 0) and the two admission paths
     // (deltas) each re-read the batch several times, and at production
     // scale the reference batch is corpus-sized
     val e = LlmOps.persistCorpus(batch.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v")))
-    // (newCells (vec_id, cid), newCodes packed (vec_id, codes),
-    //  codebook long form, coarse centroids) — trained on batch 0,
-    // assignment-only against the frozen published models afterwards
-    val (newCells, newCodes, cb, cent) =
-      if (isTraining && !centPublished.exists) {
+    // (newCells (vec_id, cid), newCodes packed (vec_id, codes), the
+    // trained (codebook long form, coarse centroids)) — trained on
+    // batch 0, assignment-only against the frozen published models
+    // (collected once per publish) afterwards
+    val (newCells, newCodes, trained) =
+      if (!centPublished.exists) {
         val (cells, codes, cb0, cent0) = EmbeddingOps.pqIndexRelationsOver(e)
-        (cells, packCodes(codes), cb0, cent0)
+        (cells, packCodes(codes), Some((cb0, cent0)))
       } else {
-        val cent0 = s.read.parquet(centPublished.toString)
-        val cb0 = s.read.parquet(s"${tables("codebook")}/published")
-        val cells = EmbeddingOps.assignCellsOver(e, cent0)
+        val cells = EmbeddingOps.assignCellsFrozen(e, centPublished.toString)
           .select(col("vec_id"), col("cid"))
-        val codes = EmbeddingOps.pqAssignEmbeddings(e,
-          cb0.select(col("m"), col("code").as("cid"), col("pos").as("dim"),
-            col("c")))
+        val codes = EmbeddingOps.pqAssignFrozen(e,
+            s"${tables("codebook")}/published")
           .select(col("vec_id"), col("m"), col("cid").as("code"))
-        (cells, packCodes(codes), cb0, cent0)
+        (cells, packCodes(codes), None)
       }
     // corpus-sized data tables: O(Δ) bucketed upserts, insert-only —
     // a re-sent vec_id keeps its STORED row in BOTH tables (one merge
@@ -1434,11 +1439,10 @@ object Streaming {
     checkAudit(tables("codes"), Sources.bucketedUpsertStaged(s,
       newCodes.dropDuplicates("vec_id"), tables("codes"), Seq("vec_id"),
       stagedMarker = s"_batch_$batchId"))
-    if (isTraining) {
+    trained.foreach { case (cb, cent) =>
       if (!tableDone(tables("codebook")))
         publish(tables("codebook"), cb, Seq("m", "code", "pos"))
-      if (!tableDone(tables("centroids")))
-        publish(tables("centroids"), cent, Seq("cid"))
+      publish(tables("centroids"), cent, Seq("cid"))
     }
     doneAll()
   }
@@ -1580,7 +1584,6 @@ object Streaming {
           centB, Seq("cid"), false,
           Some(s"_batch_$batchId")))
     } else {
-      val cent = s.read.parquet(centPublished.toString)
       // decisions are derived for the WHOLE batch (the s18 delta
       // shape): the insert-only upsert keeps the STORED row for any
       // re-sent id, and — load-bearing for crash recovery — a
@@ -1591,7 +1594,7 @@ object Streaming {
       // the store already holds). Self-pairs are excluded at the
       // probe so a redelivered vector never matches itself.
       val assigned = LlmOps.persistCorpus(
-        EmbeddingOps.assignCellsOver(e, cent))
+        EmbeddingOps.assignCellsFrozen(e, centPublished.toString))
       val members = Sources.readBucketedStoreBuckets(s, vecB,
         FamVecSchema, Sources.touchedBucketIds(assigned, Seq("cid")))
       val best = assigned.as("b").join(members.as("a"),

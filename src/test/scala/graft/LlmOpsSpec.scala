@@ -953,6 +953,38 @@ class LlmOpsSpec extends SparkSpec {
     assert(want.exists(_._3 == 2L), "degenerate fixture: no distance-2 pairs")
   }
 
+  test("d58/d58b on low-entropy keys (runs of one letter) ≡ brute-force " +
+    "all-pairs levenshtein") {
+    // a 12-letter run reaches one delete-2 variant from 66 position
+    // pairs: the variant rows must collapse per (id, key, v) before the
+    // join, and the result must still be the unblocked one
+    def lev(a: String, b: String): Int = {
+      val dp = Array.tabulate(a.length + 1, b.length + 1) { (i, j) =>
+        if (i == 0) j else if (j == 0) i else 0
+      }
+      for (i <- 1 to a.length; j <- 1 to b.length)
+        dp(i)(j) = math.min(math.min(dp(i - 1)(j), dp(i)(j - 1)) + 1,
+          dp(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+      dp(a.length)(b.length)
+    }
+    val run = "a" * 12
+    val shapes = Seq(run, run.updated(5, 'b'), run.take(11), run.take(10),
+      run.updated(0, 'b').updated(11, 'b'), "b" * 12, run + "a", "")
+    val ls = (0L until 24L).map(i => (i, shapes((i % shapes.size).toInt)))
+    val rs = (0L until 24L).map(i => (100L + i, shapes(((i * 5 + 3) % shapes.size).toInt)))
+    def brute(d: Int): Set[(Long, Long, Long)] = (for {
+      (li, lk) <- ls; (ri, rk) <- rs
+      n = lev(lk, rk) if n <= d
+    } yield (li, ri, n.toLong)).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
+      df.select("l_id", "r_id", "lev").as[(Long, Long, Long)].collect().toSet
+    val left = ls.toDF("id", "key")
+    val right = rs.toDF("id", "key")
+    assert(pairs(DedupOps.fuzzyJoinOver(left, right)) === brute(1))
+    assert(pairs(DedupOps.fuzzyJoin2Over(left, right)) === brute(2))
+    assert(brute(2).exists(_._3 == 2L), "degenerate fixture: no distance-2 pairs")
+  }
+
   test("d45 edit verify: reference-DP recompute over every d02 pair") {
     def lev(a: String, b: String): Int = {
       val dp = Array.tabulate(b.length + 1)(identity)

@@ -531,6 +531,24 @@ class PlanSpec extends SparkSpec {
       "d50's offsets and rank subtrees must both read the persisted shards")
   }
 
+  test("p04 and d50 plan no unpartitioned Window — the shard offsets are " +
+    "a broadcast predecessor sum") {
+    // an empty partition spec pulls the whole window input into one
+    // partition (and logs `WindowExec: No Partition Defined`); the only
+    // window left in the shared globalRankByRange kernel is the
+    // within-shard row_number
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    Seq("p04_equidepth_bins", "d50_perplexity_buckets").foreach { name =>
+      val windows = SparkEntry.queries(name)(spark, Sf).queryExecution
+        .optimizedPlan.collect { case w: LWindow => w }
+      assert(windows.nonEmpty, s"$name: the within-shard rank window is gone")
+      assert(windows.forall(_.partitionSpec.nonEmpty),
+        s"$name plans an unpartitioned Window:\n" +
+          windows.filter(_.partitionSpec.isEmpty).mkString("\n").take(800))
+    }
+    spark.sharedState.cacheManager.clearCache()
+  }
+
   test("d76 output plan never re-scans the corpus — store-fed it reads " +
     "the published model; self-contained it reads the cached word table") {
     // the scaladoc's "ONE corpus scan ever happens" claim, structurally,
