@@ -18,12 +18,12 @@ import org.apache.spark.sql.types.StructType
   *     one JVM never share a table.
   *   - Lock: one monitor per (store, corpus) serializes publishers and
   *     publish-if-absent readers. Two interleaved publishes would
-  *     overwrite the SAME staging dir and double-run the rename swap.
+  *     overwrite the SAME staging dir and double-run the swap.
   *     Monitors are reentrant, so read → publish under one lock is fine.
   *   - Publish ([[publish]], the registry's publisher key): every table
   *     goes through [[Sources.writeAuditPublishStaged]] — stage, audit
   *     the staged files (rows vs the plan's own count, null keys,
-  *     duplicate keys), promote by rename only if all pass. The
+  *     duplicate keys), promote by [[Commit.swap]] only if all pass. The
   *     returned manifest is (check_name, observed, ok) for a one-table
   *     store and (tbl, check_name, observed, ok) ordered by (tbl,
   *     check_name) for a multi-table one. A manifest without exactly
@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.StructType
   *   - Re-run: publishing a corpus whose store is built serves the
   *     recorded manifest (a store trains once per snapshot) unless
   *     `spark.graft.forceRebuildStores` is set, which derives and
-  *     promotes afresh (the rename-aside swap keeps readers atomic).
+  *     promotes afresh ([[Commit.swap]] keeps readers atomic).
   *   - Read ([[read]]): publish-if-absent, then a plain parquet scan,
   *     so filters and column pruning reach the store. A publish whose
   *     audit refused the table throws an IllegalStateException naming

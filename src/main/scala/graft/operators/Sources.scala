@@ -469,10 +469,10 @@ object Sources {
     * derived table to a STAGING location, audit what was actually
     * written (re-read the staged files — not the source frame, so
     * writer bugs are caught too), and atomically promote to the
-    * published location only if every audit passes. On local FS the
-    * promote is one directory rename (the upsertBatch swap note: an
-    * object-store deployment swaps in a transactional table commit,
-    * same gate logic). The derived table here is the d01 exact-dedup
+    * published location only if every audit passes. The promote is
+    * [[Commit.swap]] (an object-store deployment swaps in a
+    * transactional table commit, same gate logic). The derived table
+    * here is the d01 exact-dedup
     * survivor set of `documents` — deterministic, so the audit
     * manifest is DuckDB-oracle-checkable end to end.
     *
@@ -607,11 +607,18 @@ object Sources {
     * version (0 if nothing has ever published). Max-based, not
     * count-based: after [[purgeVersions]] removes old `v<K>/`
     * directories the numbering must not slide — version ids are
-    * forever. */
+    * forever. Completes an interrupted swap first ([[Commit.recover]]). */
   private[graft] def currentVersion(base: String): Int = {
+    Commit.recover(base)
     val hasPublished = new java.io.File(s"$base/published").exists
     if (!hasPublished) 0 else archivedVersions(base).lastOption.getOrElse(0) + 1
   }
+
+  /** Where a promote archives the replaced `published/`: the next
+    * version directory, max-based like [[currentVersion]] so a publish
+    * after a purge mints a fresh number. */
+  private def nextArchive(base: String): java.io.File =
+    new java.io.File(s"$base/v${archivedVersions(base).lastOption.getOrElse(0) + 1}")
 
   /** f14 — snapshot AS-OF read (time travel): scan the table as it was
     * at `version`. Version n < current reads the retained `v<n>/`
@@ -622,9 +629,8 @@ object Sources {
     * must never have).
     *
     * Retention layout: [[writeAuditPublishStaged]] with
-    * `retainVersions = true` renames the replaced `published/` to the
-    * next `v<N>/` during promote — O(1) metadata on any real
-    * filesystem, atomic for readers like the promote itself. Each
+    * `retainVersions = true` parks the replaced `published/` at the
+    * next `v<N>/` during the promote's [[Commit.swap]]. Each
     * retained version is a FULL directory here (the local-FS manifest
     * layout); a 100 TB table format (Iceberg/Delta) gets the same API
     * from snapshot manifests that SHARE unchanged data files across
@@ -908,10 +914,12 @@ object Sources {
     * and the `_batch_<id>` marker). Every publish writes part files with
     * fresh names, so a table re-published at the same path never serves
     * a stale model. `label` names the table read and separates two
-    * collected forms of one directory. */
+    * collected forms of one directory. An interrupted swap of the table
+    * completes first ([[Commit.recover]] on its base). */
   private[graft] def readFrozen[T](s: SparkSession, dir: String, label: String)(
       collect: DataFrame => T): T = {
     val d = new java.io.File(dir)
+    Commit.recover(d.getAbsoluteFile.getParent)
     val identity = Option(d.listFiles()).getOrElse(Array.empty)
       .map(f => s"${f.getName}:${f.length}").sorted.toSeq
     val key = s"$label@${d.getCanonicalPath}"
@@ -971,6 +979,7 @@ object Sources {
       retainVersions: Boolean,
       stagedMarker: Option[String]): DataFrame = {
     import s.implicits._
+    Commit.recover(base)
     val staging = new java.io.File(s"$base/staging")
     val published = new java.io.File(s"$base/published")
     val tbl = base.split('/').filter(_.nonEmpty).takeRight(2).mkString("/")
@@ -1002,36 +1011,17 @@ object Sources {
       ("dup_keys", audit.dupKeys, audit.dupKeys == 0L))
     val allOk = checks.forall(_._3)
     if (allOk) {
-      // promote via two renames, never delete-then-copy: any previous
-      // published table is renamed ASIDE (not deleted in place), then
-      // staging renames into the published path. java.nio ATOMIC_MOVE
-      // throws rather than silently degrading to copy+delete, so a
-      // cross-filesystem deployment fails loudly instead of exposing a
-      // half-copied table; readers observe the old table or the new
-      // one. The instant between the two renames (path briefly absent)
-      // is the residual local-FS gap — production object stores close
-      // it with a transactional table commit, per the scaladoc.
-      import java.nio.file.{Files => NioFiles, StandardCopyOption}
-      // retainVersions: the replaced table becomes the next archived
-      // version (f14's history); otherwise it parks at published.old
-      // (single-slot undo) as before
-      val aside =
-        if (retainVersions)
-          // max-based (the currentVersion rule): a post-purge publish
-          // must mint a FRESH version number, never reuse a purged one
-          new java.io.File(s"$base/v${archivedVersions(base).lastOption.getOrElse(0) + 1}")
-        else new java.io.File(s"$base/published.old")
-      if (!retainVersions) org.apache.commons.io.FileUtils.deleteQuietly(aside)
       // stagedMarker (underscore-prefixed, so parquet readers ignore it)
-      // is dropped into staging BEFORE the promote rename: the rename
-      // carries it atomically with the data, so a caller can detect an
+      // travels with the promoted data, so a caller can detect an
       // already-promoted payload (e.g. a streaming batch id) even if it
       // crashed before writing any side-channel marker — see
       // Streaming.versionedSink's effectively-once contract.
       stagedMarker.foreach(m => new java.io.File(staging, m).createNewFile(): Unit)
-      if (published.exists)
-        NioFiles.move(published.toPath, aside.toPath, StandardCopyOption.ATOMIC_MOVE)
-      NioFiles.move(staging.toPath, published.toPath, StandardCopyOption.ATOMIC_MOVE)
+      // the replaced table becomes the next archived version (f14's
+      // history) or parks at published.old (single-slot undo)
+      Commit.swap(Some(staging), published,
+        if (retainVersions) nextArchive(base) else new java.io.File(s"$base/published.old"),
+        keepAside = true)
     }
     val nPublished =
       if (allOk) labeled(s, s"wap-recount:$tbl") {
@@ -1064,62 +1054,12 @@ object Sources {
   private[graft] def bucketOf(nBuckets: Int, keyCols: Seq[String]): Column =
     pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets.toLong)).cast("int")
 
-  /** Crash recovery for [[bucketedUpsertStaged]]'s per-bucket rename
-    * swap — the [[recoverDvSwap]] discipline at bucket grain. The gap:
-    * between `published/bucket=<b> → aside_bucket_<b>` and
-    * `staging/bucket=<b> → published/bucket=<b>` the bucket is absent;
-    * a crash there must heal FORWARD from the surviving staged dir
-    * (complete at swap time by construction — the staging write and
-    * audit both finished before any rename). If the staged dir is
-    * somehow gone too, the aside restores (backward) — either way the
-    * bucket is never silently empty. A stale aside WITH the bucket
-    * present (crash after the swap, before cleanup) just deletes. */
-  private[graft] def recoverBucketSwaps(base: String): Unit = {
-    import java.nio.file.{Files => NioFiles, StandardCopyOption}
-    val dir = new java.io.File(base)
-    val asides = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("aside_bucket_"))
-    asides.foreach { aside =>
-      val b = aside.getName.stripPrefix("aside_bucket_")
-      val pub = new java.io.File(s"$base/published/bucket=$b")
-      val staged = new java.io.File(s"$base/staging/bucket=$b")
-      if (!pub.exists) {
-        pub.getParentFile.mkdirs()
-        if (staged.exists)
-          NioFiles.move(staged.toPath, pub.toPath, StandardCopyOption.ATOMIC_MOVE)
-        else
-          NioFiles.move(aside.toPath, pub.toPath, StandardCopyOption.ATOMIC_MOVE)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(aside): Unit
-    }
-  }
-
-  /** Crash recovery for [[rebucketStore]]'s whole-layout swap: the
-    * `_rescaled` marker is dropped into the restaged layout only AFTER
-    * its audit passes, so `published` absent + a marker-carrying
-    * `restage` ⟹ the swap was interrupted between its two renames —
-    * complete it forward. A markerless restage with `published` intact
-    * is an aborted stage write and is cleared. */
-  private def recoverRescale(base: String): Unit = {
-    import java.nio.file.{Files => NioFiles, StandardCopyOption}
-    val pub = new java.io.File(s"$base/published")
-    val restage = new java.io.File(s"$base/restage")
-    if (!pub.exists && new java.io.File(restage, "_rescaled").exists) {
-      NioFiles.move(restage.toPath, pub.toPath, StandardCopyOption.ATOMIC_MOVE)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$base/published.old")): Unit
-    } else if (pub.exists && restage.exists)
-      org.apache.commons.io.FileUtils.deleteQuietly(restage): Unit
-  }
-
   /** Read a bucketed store's published table (Hive `bucket=<b>` dirs),
     * dropping the routing column; an empty `schema`-typed frame when
-    * nothing has published yet. Runs [[recoverBucketSwaps]] first so
-    * every reader self-heals a crash caught mid-swap. */
+    * nothing has published yet. Runs [[Commit.recover]] first. */
   private[graft] def readBucketedStore(s: SparkSession, base: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    recoverRescale(base)
-    recoverBucketSwaps(base)
+    Commit.recover(base)
     val pub = new java.io.File(s"$base/published")
     val hasData = pub.exists &&
       Option(pub.list()).exists(_.exists(_.startsWith("bucket=")))
@@ -1141,12 +1081,11 @@ object Sources {
     * "probe a published index" shape s17's incremental maintenance
     * rides on. Missing dirs (nothing ever routed there) read as empty;
     * an empty id set (or an unborn store) yields a typed empty frame.
-    * Runs the same crash healing as [[readBucketedStore]]. */
+    * Runs [[Commit.recover]] first. */
   private[graft] def readBucketedStoreBuckets(s: SparkSession, base: String,
       schema: org.apache.spark.sql.types.StructType,
       buckets: Seq[Int]): DataFrame = {
-    recoverRescale(base)
-    recoverBucketSwaps(base)
+    Commit.recover(base)
     val pubRoot = s"$base/published"
     val paths = buckets.map(b => s"$pubRoot/bucket=$b")
       .filter(p => new java.io.File(p).exists)
@@ -1182,21 +1121,19 @@ object Sources {
     *      audit (expected rows, null/dup keys, misrouted keys — bucket
     *      = f(key) makes per-bucket dup-freedom store-wide);
     *   5. on a clean audit, drop the marker into each staged bucket
-    *      (it travels atomically with the rename) and swap each
-    *      pending bucket with the two-rename discipline. A bucket
-    *      whose merged content is EMPTY (every row deleted) promotes
-    *      as a removal.
+    *      and [[Commit.swap]] each pending bucket in. A bucket whose
+    *      merged content is EMPTY (every row deleted) promotes as a
+    *      removal.
     *
     * Untouched buckets are never read, never written, byte-identical
     * across the batch (StorageSpec pins this). Crash anywhere:
     * re-running the batch is idempotent — promoted buckets skip via
     * their marker, unpromoted buckets re-merge to identical content
     * (both merge rules are pure functions of (published bucket, delta)
-    * and re-applying a delta already absorbed is a no-op); the
-    * mid-swap gap heals via [[recoverBucketSwaps]]. The residual
-    * torn-read window (a reader between two bucket swaps) is the same
-    * local-FS gap the single-table promote documents — a production
-    * object store closes it with a transactional table commit.
+    * and re-applying a delta already absorbed is a no-op); a swap a
+    * crash interrupted completes in [[Commit.recover]]. A reader
+    * between two bucket swaps sees some buckets new and some old — the
+    * local-FS gap a transactional table commit closes.
     * Returns the (check_name, observed, ok) audit manifest.
     *
     * Jobs per call, by label (`<phase>:<table>`; PublishBudgetSpec pins
@@ -1220,7 +1157,6 @@ object Sources {
       deleteKeys: Option[DataFrame] = None,
       bucketCols: Seq[String] = Nil, sumCols: Seq[String] = Nil): DataFrame = {
     import s.implicits._
-    import java.nio.file.{Files => NioFiles, StandardCopyOption}
     require(!(newWins && sumCols.nonEmpty),
       "newWins and sumCols are distinct merge rules — pick one")
     require(bucketCols.isEmpty || bucketCols.forall(keyCols.contains),
@@ -1231,8 +1167,7 @@ object Sources {
     require(sumCols.forall(c =>
         delta.schema(c).dataType == org.apache.spark.sql.types.LongType),
       "sumCols must be BIGINT counters")
-    recoverRescale(base)
-    recoverBucketSwaps(base)
+    Commit.recover(base)
     val pubRoot = new java.io.File(s"$base/published")
     // routing on a key-column SUBSET (e.g. a posting index keyed
     // (shingle, doc_id) but bucketed by shingle alone) keeps a probe
@@ -1329,27 +1264,12 @@ object Sources {
       ("dup_keys", audit.dupKeys, audit.dupKeys == 0L),
       ("misrouted_keys", audit.misrouted, audit.misrouted == 0L))
     val allOk = checks.forall(_._3)
-    if (allOk) {
-      pubRoot.mkdirs()
-      pending.foreach { b =>
-        val stagedDir = new java.io.File(staging, s"bucket=$b")
-        val pubDir = new java.io.File(pubRoot, s"bucket=$b")
-        val aside = new java.io.File(s"$base/aside_bucket_$b")
-        org.apache.commons.io.FileUtils.deleteQuietly(aside)
-        if (stagedDir.exists) {
-          // marker BEFORE the rename: it travels atomically with the data
-          new java.io.File(stagedDir, stagedMarker).createNewFile(): Unit
-          if (pubDir.exists)
-            NioFiles.move(pubDir.toPath, aside.toPath,
-              StandardCopyOption.ATOMIC_MOVE)
-          NioFiles.move(stagedDir.toPath, pubDir.toPath,
-            StandardCopyOption.ATOMIC_MOVE)
-        } else if (pubDir.exists)
-          // every row deleted: the promote IS the removal
-          NioFiles.move(pubDir.toPath, aside.toPath,
-            StandardCopyOption.ATOMIC_MOVE)
-        org.apache.commons.io.FileUtils.deleteQuietly(aside): Unit
-      }
+    if (allOk) pending.foreach { b =>
+      // no staged dir: every row deleted, and the swap is the removal
+      val stagedDir = Some(new java.io.File(staging, s"bucket=$b")).filter(_.exists)
+      stagedDir.foreach(new java.io.File(_, stagedMarker).createNewFile(): Unit)
+      Commit.swap(stagedDir, new java.io.File(pubRoot, s"bucket=$b"),
+        new java.io.File(s"$base/aside_bucket_$b"))
     }
     val nTouchedPublished =
       if (allOk) {
@@ -1382,10 +1302,7 @@ object Sources {
     *
     * Protocol: restage the whole store partitioned by the NEW modulus,
     * audit (rows preserved, null/dup keys, every row routed to its
-    * new-modulus bucket), drop the `_rescaled` marker into the restaged
-    * layout (it travels with the rename), then swap the layouts with
-    * the two-rename discipline. The mid-swap gap heals FORWARD via
-    * [[recoverRescale]], run by every reader and upsert. Old per-bucket
+    * new-modulus bucket), then [[Commit.swap]] the layouts. Old per-bucket
     * `_batch_<id>` markers do not survive the rewrite — a batch
     * redelivered from before the rescale RE-APPLIES (idempotently, by
     * the merge rules) instead of skipping; the effectively-once side
@@ -1393,16 +1310,15 @@ object Sources {
   private[graft] def rebucketStore(s: SparkSession, base: String,
       keyCols: Seq[String], newBuckets: Int): DataFrame = {
     import s.implicits._
-    import java.nio.file.{Files => NioFiles, StandardCopyOption}
-    recoverRescale(base)
-    recoverBucketSwaps(base)
+    Commit.recover(base)
     val pub = new java.io.File(s"$base/published")
     require(pub.exists, s"rebucketStore: nothing published at $base")
     val bCol = bucketOf(newBuckets, keyCols)
+    // the one inferred read: the store's schema is not passed in
     val cur = s.read.parquet(pub.toString)
-    val expected = cur.count()
+    val expected = countRows(cur)
     val df = cur.drop("bucket").withColumn("bucket", bCol)
-    val restage = new java.io.File(s"$base/restage")
+    val restage = new java.io.File(s"$base/staging_rescale")
     org.apache.commons.io.FileUtils.deleteQuietly(restage)
     df.write.partitionBy("bucket").mode("overwrite").parquet(restage.toString)
     val audit = auditKeys(readParquet(s, df.schema, Seq(restage.toString)),
@@ -1413,17 +1329,10 @@ object Sources {
       ("dup_keys", audit.dupKeys, audit.dupKeys == 0L),
       ("misrouted_keys", audit.misrouted, audit.misrouted == 0L))
     val allOk = checks.forall(_._3)
-    if (allOk) {
-      // marker BEFORE the swap: published absent + marker-carrying
-      // restage is the recoverable forward state
-      new java.io.File(restage, "_rescaled").createNewFile(): Unit
-      val old = new java.io.File(s"$base/published.old")
-      org.apache.commons.io.FileUtils.deleteQuietly(old)
-      NioFiles.move(pub.toPath, old.toPath, StandardCopyOption.ATOMIC_MOVE)
-      NioFiles.move(restage.toPath, pub.toPath, StandardCopyOption.ATOMIC_MOVE)
-      org.apache.commons.io.FileUtils.deleteQuietly(old): Unit
-    }
-    val nPublished = if (allOk) s.read.parquet(pub.toString).count() else 0L
+    if (allOk)
+      Commit.swap(Some(restage), pub, new java.io.File(s"$base/published.old"))
+    val nPublished =
+      if (allOk) countRows(readParquet(s, df.schema, Seq(pub.toString))) else 0L
     (checks :+ (("published_rows", nPublished, allOk)))
       .toDF("check_name", "observed", "ok")
       .orderBy("check_name")
@@ -1473,11 +1382,12 @@ object Sources {
     * must agree with each other and with the source count), then
     * promote ALL tables or NONE — a failed audit on any table leaves
     * every published table untouched (StorageSpec pins byte-identical
-    * survivors). Promotion is the f09 rename pair per table; the
-    * residual local-FS gap (a reader between two tables' renames) is
-    * the documented gap a production catalog closes with a single
-    * multi-table transactional commit (Iceberg/Nessie-style) — the
-    * AUDIT-level all-or-nothing is what this operator adds over f09.
+    * survivors). Promotion is one [[Commit.swap]] per table
+    * ([[swapAll]]); a reader between two tables' swaps, or a JVM killed
+    * there, sees a torn snapshot of whole tables — the local-FS gap a
+    * production catalog closes with a single multi-table transactional
+    * commit (Iceberg/Nessie-style). The AUDIT-level all-or-nothing is
+    * what this operator adds over f09.
     *
     * The registry instance publishes the per-lang and per-source
     * document rollups; output = the audit manifest (one row per check
@@ -1494,22 +1404,18 @@ object Sources {
 
   private[graft] def atomicPublishStaged(s: SparkSession,
       tables: Seq[(String, DataFrame, String)], expectedTotal: Long,
-      base: String,
-      // test-only fault injection: throw just before promoting the named
-      // table, so StorageSpec can pin the partial-promote rollback
-      crashBeforePromoteOf: Option[String] = None): DataFrame = {
+      base: String): DataFrame = {
     import s.implicits._
-    import java.nio.file.{Files => NioFiles, StandardCopyOption}
+    def at(name: String, leaf: String) = new java.io.File(s"$base/$name/$leaf")
     tables.foreach { case (name, df, _) =>
-      df.write.mode("overwrite").parquet(s"$base/$name/staging")
+      Commit.recover(s"$base/$name")
+      df.write.mode("overwrite").parquet(at(name, "staging").toString)
     }
-    val per = tables.map { case (name, _, key) =>
-      val st = s.read.parquet(s"$base/$name/staging")
-      val n = st.count()
-      val nNull = st.filter(col(key).isNull).count()
-      val nDup = n - st.select(key).distinct().count()
+    val per = tables.map { case (name, df, key) =>
+      val st = readParquet(s, df.schema, Seq(at(name, "staging").toString))
+      val audit = auditKeys(st, Seq(key))
       val r = st.agg(sum(col("n"))).head()
-      (name, nNull, nDup, if (r.isNullAt(0)) 0L else r.getLong(0))
+      (name, audit.nullKeys, audit.dupKeys, if (r.isNullAt(0)) 0L else r.getLong(0))
     }
     val totalsOk = per.forall(_._4 == expectedTotal)
     val checks = per.flatMap { case (name, nNull, nDup, total) => Seq(
@@ -1518,47 +1424,35 @@ object Sources {
       (s"${name}_total_rows", total, total == expectedTotal))
     } :+ (("totals_consistent", expectedTotal, totalsOk))
     val allOk = checks.forall(_._3)
-    if (allOk) {
-      // Promote with failure-path rollback: if any table's rename pair
-      // throws mid-loop (missing staging, FS error), already-promoted
-      // tables are restored from their published.old before rethrowing —
-      // the snapshot stays all-or-nothing even on a partial-promote
-      // crash, not just on a failed audit.
-      val done = scala.collection.mutable.ArrayBuffer.empty[String]
-      try tables.foreach { case (name, _, _) =>
-        if (crashBeforePromoteOf.contains(name))
-          throw new IllegalStateException(s"injected promote crash at $name")
-        val published = new java.io.File(s"$base/$name/published")
-        val aside = new java.io.File(s"$base/$name/published.old")
-        org.apache.commons.io.FileUtils.deleteQuietly(aside)
-        if (published.exists)
-          NioFiles.move(published.toPath, aside.toPath,
-            StandardCopyOption.ATOMIC_MOVE)
-        NioFiles.move(new java.io.File(s"$base/$name/staging").toPath,
-          published.toPath, StandardCopyOption.ATOMIC_MOVE)
-        done += name
-      } catch { case e: Throwable =>
-        done.foreach { name =>
-          val published = new java.io.File(s"$base/$name/published")
-          val aside = new java.io.File(s"$base/$name/published.old")
-          if (published.exists)
-            NioFiles.move(published.toPath,
-              new java.io.File(s"$base/$name/staging").toPath,
-              StandardCopyOption.ATOMIC_MOVE)
-          if (aside.exists) // first-ever publish has no prior to restore
-            NioFiles.move(aside.toPath, published.toPath,
-              StandardCopyOption.ATOMIC_MOVE)
-        }
-        throw e
-      }
-    }
-    val pubRows = tables.map { case (name, _, _) =>
+    if (allOk) swapAll(tables.map { case (name, _, _) =>
+      (at(name, "staging"), at(name, "published"), at(name, "published.old")) })
+    val pubRows = tables.map { case (name, df, _) =>
       (s"${name}_published_rows",
-        if (allOk) s.read.parquet(s"$base/$name/published").count() else 0L,
+        if (allOk) countRows(readParquet(s, df.schema, Seq(at(name, "published").toString)))
+        else 0L,
         allOk)
     }
     (checks ++ pubRows).toDF("check_name", "observed", "ok")
       .orderBy("check_name")
+  }
+
+  /** The multi-table promote of f19 and f22: [[Commit.swap]] each
+    * (staged, target, aside) in order, keeping the asides. If a swap
+    * throws, the targets already promoted swap back to their asides
+    * (a first publish, with no aside, is removed) before rethrowing, so
+    * a failure mid-promote leaves the snapshot it found. */
+  private def swapAll(swaps: Seq[(java.io.File, java.io.File, java.io.File)]): Unit = {
+    val done = scala.collection.mutable.ArrayBuffer.empty[(java.io.File, java.io.File)]
+    try swaps.foreach { case (staged, target, aside) =>
+      Commit.swap(Some(staged), target, aside, keepAside = true)
+      done += target -> aside
+    } catch { case e: Throwable =>
+      done.foreach { case (target, aside) =>
+        Commit.swap(Some(aside).filter(_.exists), target,
+          new java.io.File(target.getParentFile, "rolledback"))
+      }
+      throw e
+    }
   }
 
   // ———— f21: optimistic concurrency for WAP publishers ————
@@ -1573,8 +1467,8 @@ object Sources {
     * its later promote succeeds only if the table is still there. */
   private[graft] def readForUpdate(s: SparkSession, base: String,
       schema: org.apache.spark.sql.types.StructType): (Int, DataFrame) = {
-    val pub = new java.io.File(s"$base/published")
-    if (pub.exists) (currentVersion(base), s.read.parquet(pub.toString))
+    val v = currentVersion(base)
+    if (v > 0) (v, s.read.parquet(s"$base/published"))
     else (0, s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
   }
@@ -1588,7 +1482,7 @@ object Sources {
     * catalog runs the same compare-and-swap on its table pointer;
     * Iceberg/Delta commit protocols are exactly this shape). A promoted
     * version carries its lineage as an atomic `_base_v<n>` marker staged
-    * BEFORE the rename (the s16 marker discipline), so the version
+    * BEFORE the swap (the s16 marker discipline), so the version
     * graph is reconstructable from disk alone. Audit (null/dup keys)
     * runs before the lock — stale work never holds it. */
   private[graft] def promoteOptimistic(s: SparkSession, base: String,
@@ -1606,6 +1500,7 @@ object Sources {
     * each job its own name, as the registry race does. */
   private[graft] def stageOptimistic(s: SparkSession, base: String,
       name: String, derived: DataFrame, keyCols: Seq[String]): String = {
+    Commit.recover(base)
     val dir = s"$base/staging_$name"
     labeled(s, s"cas-stage:$name") {
       derived.write.mode("overwrite").parquet(dir)
@@ -1634,7 +1529,6 @@ object Sources {
     * returns false. */
   private[graft] def casPromote(base: String, stagingDir: String,
       baseVersion: Int): Boolean = {
-    import java.nio.file.{Files => NioFiles, StandardCopyOption}
     val dir = new java.io.File(stagingDir)
     publishLockFor(base).synchronized {
       if (currentVersion(base) != baseVersion) {
@@ -1642,13 +1536,8 @@ object Sources {
         false
       } else {
         new java.io.File(dir, s"_base_v$baseVersion").createNewFile(): Unit
-        val published = new java.io.File(s"$base/published")
-        if (published.exists)
-          NioFiles.move(published.toPath,
-            new java.io.File(s"$base/v${archivedVersions(base).lastOption.getOrElse(0) + 1}").toPath,
-            StandardCopyOption.ATOMIC_MOVE)
-        NioFiles.move(dir.toPath, published.toPath,
-          StandardCopyOption.ATOMIC_MOVE)
+        Commit.swap(Some(dir), new java.io.File(s"$base/published"),
+          nextArchive(base), keepAside = true)
         true
       }
     }
@@ -1708,8 +1597,12 @@ object Sources {
     * compaction rewrites live rows as a fresh version (f14 history
     * intact) and clears it. Deletes are idempotent — a re-delete of an
     * already-deleted row adds nothing (hits are computed against the
-    * DV-applied read). Sidecar updates swap via the two-rename
-    * discipline (never delete-then-write live state).
+    * DV-applied read). Sidecar updates go through [[Commit.swap]]
+    * (never delete-then-write live state): a crash mid-swap completes
+    * to the NEW vector, never to an empty one (which would silently
+    * resurrect every tombstoned row), and a replaced `dv_old` is never
+    * restored (after [[dvCompact]] clears the vector it would
+    * resurrect pre-compaction tombstones against rewritten files).
     *
     * StorageSpec pins the merge-on-read CLAIM itself: the data files
     * are byte-identical after a DV delete, the DV read equals the
@@ -1721,37 +1614,10 @@ object Sources {
     org.apache.spark.sql.types.StructField("pos",
       org.apache.spark.sql.types.LongType)))
 
-  /** Crash recovery for [[dvDelete]]'s two-rename swap: between the
-    * `dv → dv_old` and `dv_staging → dv` moves the vector path is
-    * ABSENT, and an unrecovered crash there would make [[readDv]]
-    * return an EMPTY vector — silently resurrecting every tombstoned
-    * row, the worst direction for a GDPR-style delete. The recovery
-    * key is `dv_staging`: that dir survives to the gap ONLY as the
-    * already-complete new vector (the swap's first rename runs after
-    * staging is fully written and counted), so `dv` absent + staging
-    * present ⟹ complete the swap forward. `dv_old` alone is NEVER
-    * restored — after [[dvCompact]] clears the vector, a stale
-    * `dv_old` with `dv` legitimately absent means "no deletes", and
-    * restoring it would resurrect pre-compaction tombstones against
-    * the rewritten files. ([[dvCompact]] deletes both leftovers when
-    * it clears the vector, so the ambiguity never arises with live
-    * state.) */
-  private def recoverDvSwap(base: String): Unit = {
-    import java.nio.file.{Files => NioFiles, StandardCopyOption}
-    val dir = new java.io.File(s"$base/dv")
-    val staging = new java.io.File(s"$base/dv_staging")
-    val old = new java.io.File(s"$base/dv_old")
-    if (!dir.exists && staging.exists) {
-      NioFiles.move(staging.toPath, dir.toPath, StandardCopyOption.ATOMIC_MOVE)
-      org.apache.commons.io.FileUtils.deleteQuietly(old): Unit
-    }
-  }
-
   /** The current deletion vector — (file, pos) — empty if none.
-    * Runs [[recoverDvSwap]] first, so every reader self-heals a crash
-    * caught between [[dvDelete]]'s two renames. */
+    * Runs [[Commit.recover]] first. */
   private[graft] def readDv(s: SparkSession, base: String): DataFrame = {
-    recoverDvSwap(base)
+    Commit.recover(base)
     val dir = new java.io.File(s"$base/dv")
     if (dir.exists) s.read.parquet(dir.toString)
     else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1787,7 +1653,7 @@ object Sources {
     * streaming shape: a micro-batch of delete keys semi-joins the
     * tagged scan (never a driver-side `isin`, so a wide delta batch
     * stays distributed), and the sidecar append is the same
-    * stage-then-two-rename swap. Idempotent like dvDelete: already-
+    * stage-then-swap. Idempotent like dvDelete: already-
     * tombstoned coordinates are anti-joined away, so a redelivered
     * batch appends nothing. */
   private[graft] def dvDeleteMatching(s: SparkSession, base: String,
@@ -1805,23 +1671,13 @@ object Sources {
     * swap it in. Returns the newly tombstoned row count. */
   private def dvAppend(s: SparkSession, base: String,
       existing: DataFrame, hits: DataFrame): Long = {
-    import java.nio.file.{Files => NioFiles, StandardCopyOption}
-    // stage the UNIONED vector first (the plan reads the old dv dir),
-    // then swap with two renames. The instant between the renames has
-    // NO dv dir — [[recoverDvSwap]] (run by every readDv) completes
-    // the swap from the surviving staging dir, so a crash there heals
-    // to the NEW vector instead of silently reading an empty one
-    val staging = new java.io.File(s"$base/dv_staging")
+    // stage the UNIONED vector first (the plan reads the old dv dir)
+    val staging = new java.io.File(s"$base/staging_dv")
     val merged = existing.unionByName(hits)
     merged.write.mode("overwrite").parquet(staging.toString)
     val nNew = s.read.parquet(staging.toString).count() - existing.count()
-    val dir = new java.io.File(s"$base/dv")
-    val old = new java.io.File(s"$base/dv_old")
-    org.apache.commons.io.FileUtils.deleteQuietly(old)
-    if (dir.exists)
-      NioFiles.move(dir.toPath, old.toPath, StandardCopyOption.ATOMIC_MOVE)
-    NioFiles.move(staging.toPath, dir.toPath, StandardCopyOption.ATOMIC_MOVE)
-    org.apache.commons.io.FileUtils.deleteQuietly(old)
+    Commit.swap(Some(staging), new java.io.File(s"$base/dv"),
+      new java.io.File(s"$base/dv_old"))
     nNew
   }
 
@@ -1834,18 +1690,11 @@ object Sources {
     val live = readWithDv(s, base)
     val audit = writeAuditPublishStaged(s, live, base,
       keyCols, true, None)
-    if (audit.filter(!col("ok")).isEmpty) {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"$base/dv"))
-      // clear any stale swap leftovers WITH the vector: a leftover
-      // dv_staging from a pre-compaction crash state (a) would
-      // otherwise be "completed" by recoverDvSwap into a stale vector
-      // over the rewritten files
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$base/dv_staging"))
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$base/dv_old")): Unit
-    }
+    // clear the vector WITH any swap leftovers: an unmarked staging_dv
+    // from a crashed stage write, a discarded dv_old
+    if (audit.filter(!col("ok")).isEmpty)
+      Seq("dv", "staging_dv", "dv_old").foreach(n =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$base/$n")))
     audit
   }
 
@@ -1925,6 +1774,7 @@ object Sources {
   private[graft] def readBranch(s: SparkSession, main: String,
       name: String): DataFrame = {
     val bBase = s"$main/branches/$name"
+    Commit.recover(bBase)
     if (new java.io.File(s"$bBase/published").exists)
       s.read.parquet(s"$bBase/published")
     else readAsOf(s, main, forkVersionOf(main, name))
@@ -2012,14 +1862,10 @@ object Sources {
     * EVERY table's version still equals the base it read: any advanced
     * table rejects the WHOLE commit (all stagings discarded — a
     * half-stale snapshot must not half-promote), otherwise all tables
-    * promote with lineage markers and the f19 mid-promote rollback.
-    * Returns true iff the snapshot committed. */
+    * promote with lineage markers and the f19 mid-promote rollback
+    * ([[swapAll]]). Returns true iff the snapshot committed. */
   private[graft] def atomicCasPublish(base: String,
-      staged: Seq[(String, String)], baseVersions: Map[String, Int],
-      // test-only fault injection: throw just before promoting the named
-      // table, so StorageSpec can pin the mid-commit rollback
-      crashBeforePromoteOf: Option[String] = None): Boolean = {
-    import java.nio.file.{Files => NioFiles, StandardCopyOption}
+      staged: Seq[(String, String)], baseVersions: Map[String, Int]): Boolean =
     publishLockFor(base).synchronized {
       val stale = staged.exists { case (name, _) =>
         currentVersion(s"$base/$name") != baseVersions(name)
@@ -2030,52 +1876,14 @@ object Sources {
         }
         false
       } else {
-        val done = scala.collection.mutable.ArrayBuffer.empty[String]
-        try staged.foreach { case (name, dir) =>
-          if (crashBeforePromoteOf.contains(name))
-            throw new IllegalStateException(s"injected commit crash at $name")
-          val tb = s"$base/$name"
-          new java.io.File(dir, s"_base_v${baseVersions(name)}")
-            .createNewFile(): Unit
-          val published = new java.io.File(s"$tb/published")
-          if (published.exists)
-            NioFiles.move(published.toPath,
-              new java.io.File(s"$tb/v${archivedVersions(tb).lastOption.getOrElse(0) + 1}").toPath,
-              StandardCopyOption.ATOMIC_MOVE)
-          NioFiles.move(new java.io.File(dir).toPath, published.toPath,
-            StandardCopyOption.ATOMIC_MOVE)
-          done += name
-        } catch { case e: Throwable =>
-          // f19's rollback: un-promote what landed, restore the archived
-          // version — a crash mid-commit must not leave a torn snapshot
-          done.foreach { name =>
-            val tb = s"$base/$name"
-            val published = new java.io.File(s"$tb/published")
-            val arch = archivedVersions(tb).lastOption
-              .map(v => new java.io.File(s"$tb/v$v"))
-            if (published.exists) {
-              // versioned + delete-first: a leftover rolled-back dir
-              // from an earlier aborted commit must not make this
-              // ATOMIC_MOVE throw inside the catch — that would mask
-              // the original error and leave exactly the torn snapshot
-              // the rollback exists to prevent
-              val rb = new java.io.File(
-                s"$tb/staging_rolledback_v${baseVersions(name)}")
-              if (rb.exists)
-                org.apache.commons.io.FileUtils.deleteDirectory(rb)
-              NioFiles.move(published.toPath, rb.toPath,
-                StandardCopyOption.ATOMIC_MOVE)
-            }
-            arch.filter(_.exists).foreach(a =>
-              NioFiles.move(a.toPath, published.toPath,
-                StandardCopyOption.ATOMIC_MOVE))
-          }
-          throw e
-        }
+        swapAll(staged.map { case (name, dir) =>
+          new java.io.File(dir, s"_base_v${baseVersions(name)}").createNewFile()
+          (new java.io.File(dir), new java.io.File(s"$base/$name/published"),
+            nextArchive(s"$base/$name"))
+        })
         true
       }
     }
-  }
 
   /** f22 registry instance — a deterministic two-publisher race on a
     * TWO-table snapshot (the per-lang and per-source document rollups):

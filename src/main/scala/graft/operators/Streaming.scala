@@ -827,10 +827,10 @@ object Streaming {
     * nothing.
     *
     * Merge rule: last write wins per user_id, within a batch by
-    * (ts, event_id) order. The state swap here is
-    * write-next/rename (single-writer; a production deployment puts a
-    * transactional table format under the same foreachBatch body —
-    * the idempotence logic is unchanged). Scale: the anti-join is keyed
+    * (ts, event_id) order. The state swap is [[Commit.swap]]
+    * (single-writer; a production deployment puts a transactional
+    * table format under the same foreachBatch body — the idempotence
+    * logic is unchanged). Scale: the anti-join is keyed
     * on user_id and the batch side is one micro-batch — broadcast-sized
     * against a state table of any size.
     *
@@ -860,23 +860,21 @@ object Streaming {
     if (marker.exists()) return // redelivered batch: effectively once
     // The batch id is ALSO recorded atomically with the promote itself:
     // writeAuditPublishStaged drops `_batch_<id>` (underscore-prefixed —
-    // invisible to parquet readers) into staging before the rename, so
-    // the promoted version carries its batch id. A crash BETWEEN promote
-    // and the side marker below therefore can't mint a duplicate
-    // version on redelivery: the promoted-marker check catches it, we
-    // backfill the side marker and no-op.
+    // invisible to parquet readers) into staging, so the promoted
+    // version carries its batch id. A crash after the promote's first
+    // rename (completed here by Commit.recover) or before the side
+    // marker below therefore can't mint a duplicate version on
+    // redelivery: the promoted-marker check catches it, we backfill the
+    // side marker and no-op.
+    Commit.recover(base)
     if (new java.io.File(s"$base/published/_batch_$batchId").exists()) {
       markApplied(marker)
       return
     }
     val s = batch.sparkSession
-    val pubDir = new java.io.File(s"$base/published")
     val payload = org.apache.spark.sql.types.StructType(
       batch.schema.filterNot(_.name == "op"))
-    val target =
-      if (pubDir.exists()) s.read.parquet(pubDir.toString)
-      else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        payload)
+    val (_, target) = Sources.readForUpdate(s, base, payload)
     val merged = Sources.mergeUpsertOver(target, batch, key).drop("action")
     val audit = Sources.writeAuditPublishStaged(s, merged, base,
       Seq(key), true, Some(s"_batch_$batchId"))
@@ -1787,9 +1785,8 @@ object Streaming {
     * marker skips a redelivered batch outright, and underneath,
     * dvDeleteMatching is idempotent anyway (already-tombstoned
     * coordinates anti-join away — a half-applied crash redelivery
-    * appends nothing twice). A crash between the sidecar's two renames
-    * heals FORWARD in every reader (the f23 recoverDvSwap discipline,
-    * inherited verbatim). */
+    * appends nothing twice). A crash mid-swap of the sidecar completes
+    * forward in every reader ([[Commit.recover]]). */
   def indexDeleteSink(base: String)(batch: DataFrame, batchId: Long): Unit = {
     val marker = new java.io.File(s"$base/_applied/$batchId")
     if (marker.exists()) return // redelivered batch: effectively once
@@ -1826,27 +1823,21 @@ object Streaming {
   }
 
   def upsertBatch(stateDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    // the marker/rename protocol below uses local-FS atomic renames; a
-    // production deployment on an object store puts a transactional
-    // table format in this body instead (the idempotence logic is
-    // identical). Guard so a URI path can't silently void the markers.
+    // Commit.swap renames on the local filesystem; a production
+    // deployment on an object store puts a transactional table format
+    // in this body instead (the idempotence logic is identical). Guard
+    // so a URI path can't silently void the markers.
     require(!stateDir.matches("^[a-zA-Z][a-zA-Z0-9+.-]*://.*") || stateDir.startsWith("file:"),
       s"upsertBatch state swap is local-filesystem only, got: $stateDir")
-    import org.apache.commons.io.FileUtils
     val marker = new java.io.File(s"$stateDir/_applied/$batchId")
     if (marker.exists()) return // redelivered batch: effectively once
     val s = batch.sparkSession
     val curDir = new java.io.File(s"$stateDir/current")
-    val nextDir = new java.io.File(s"$stateDir/next")
-    val prevDir = new java.io.File(s"$stateDir/prev")
-    // crash recovery, in swap order: an orphaned `next` is an incomplete
-    // write (discard); a missing `current` with a surviving `prev` means
-    // the crash hit between the two renames (restore — the interrupted
-    // batch has no marker and will re-apply, which re-merges to the same
-    // state: the merge is idempotent on identical input)
-    FileUtils.deleteQuietly(nextDir)
-    if (!curDir.exists() && prevDir.exists()) FileUtils.moveDirectory(prevDir, curDir)
-    FileUtils.deleteQuietly(prevDir)
+    val nextDir = new java.io.File(s"$stateDir/staging")
+    // a batch a crash interrupted mid-swap completes first; one that
+    // had not reached the swap has no marker and re-applies, which
+    // re-merges to the same state (the merge is idempotent)
+    Commit.recover(stateDir)
     val lastPerKey = lastEventPerUser(batch)
     val cur =
       if (curDir.exists()) s.read.parquet(curDir.toString)
@@ -1856,12 +1847,25 @@ object Streaming {
       .select(batch.columns.map(col).toIndexedSeq: _*)
       .unionByName(lastPerKey)
     next.write.mode("overwrite").parquet(nextDir.toString)
-    // swap via two renames, never a delete of live state: current → prev,
-    // next → current, then drop prev — every crash point above restores
-    if (curDir.exists()) FileUtils.moveDirectory(curDir, prevDir)
-    FileUtils.moveDirectory(nextDir, curDir)
-    FileUtils.deleteQuietly(prevDir)
+    Commit.swap(Some(nextDir), curDir, new java.io.File(s"$stateDir/prev"))
     markApplied(marker)
+  }
+
+  /** The s24/s25 reference freeze: `hist` becomes the frozen model at
+    * `base/ref` through [[Commit.swap]]. Two markers travel with it:
+    * `_ready` gates the frozen-reference branch, and `_batch_<id>`
+    * records WHICH batch froze it — a crash before the side marker
+    * must redeliver as a no-op, never as a monitored batch (the
+    * reference scoring PSI against itself would read as "no drift"
+    * forever). */
+  private def freezeReference(base: String, hist: DataFrame, batchId: Long): Unit = {
+    val staging = new java.io.File(s"$base/staging_ref")
+    org.apache.commons.io.FileUtils.deleteQuietly(staging)
+    hist.coalesce(1).write.parquet(staging.toString)
+    markApplied(new java.io.File(staging, "_ready"))
+    markApplied(new java.io.File(staging, s"_batch_$batchId"))
+    Commit.swap(Some(staging), new java.io.File(s"$base/ref"),
+      new java.io.File(s"$base/ref.old"))
   }
 
   /** s24 — STREAMING DRIFT MONITOR: p05's PSI brought to the ingest
@@ -1896,6 +1900,7 @@ object Streaming {
   def driftMonitorSink(base: String)(batch: DataFrame, batchId: Long): Unit = {
     val marker = new java.io.File(s"$base/_applied/$batchId")
     if (marker.exists()) return // redelivered batch: effectively once
+    Commit.recover(base)
     val s = batch.sparkSession
     import s.implicits._
     val nBins = 10L
@@ -1924,20 +1929,7 @@ object Streaming {
             Seq("bucket"), "left")
           .select(col("bucket"), coalesce(col("n_ref"), lit(0L)).as("n_ref"),
             lit(lo).as("lo"), lit(rng).as("rng"))
-        val staging = new java.io.File(s"$base/ref_staging")
-        org.apache.commons.io.FileUtils.deleteQuietly(staging)
-        hist.coalesce(1).write.parquet(staging.toString)
-        // markers travel atomically with the rename: _ready gates the
-        // frozen-reference branch, _batch_<id> records WHICH batch
-        // froze it (a crash between this rename and the side marker
-        // must redeliver as a no-op, never as a monitored batch — the
-        // reference scoring PSI against itself would read as "no
-        // drift" forever)
-        markApplied(new java.io.File(staging, "_ready"))
-        markApplied(new java.io.File(staging, s"_batch_$batchId"))
-        org.apache.commons.io.FileUtils.deleteQuietly(refDir)
-        java.nio.file.Files.move(staging.toPath, refDir.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        freezeReference(base, hist, batchId)
       }
       markApplied(marker)
       return
@@ -2048,6 +2040,7 @@ object Streaming {
   def driftMultiSink(base: String)(batch: DataFrame, batchId: Long): Unit = {
     val marker = new java.io.File(s"$base/_applied/$batchId")
     if (marker.exists()) return // redelivered batch: effectively once
+    Commit.recover(base)
     val s = batch.sparkSession
     import s.implicits._
     val nBins = 10L
@@ -2077,16 +2070,7 @@ object Streaming {
           .select(col("feature"), col("bucket"),
             coalesce(col("n_ref"), lit(0L)).as("n_ref"),
             col("lo"), col("rng"))
-        val staging = new java.io.File(s"$base/ref_staging")
-        org.apache.commons.io.FileUtils.deleteQuietly(staging)
-        hist.coalesce(1).write.parquet(staging.toString)
-        // the s24 marker protocol verbatim: _ready gates the frozen
-        // branch, _batch_<id> records which batch froze it
-        markApplied(new java.io.File(staging, "_ready"))
-        markApplied(new java.io.File(staging, s"_batch_$batchId"))
-        org.apache.commons.io.FileUtils.deleteQuietly(refDir)
-        java.nio.file.Files.move(staging.toPath, refDir.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        freezeReference(base, hist, batchId)
       }
       markApplied(marker)
       return

@@ -198,6 +198,20 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  test("directory renames under src/main: only in the commit module") {
+    // one swap and one recovery for every publish protocol: a
+    // hand-written rename elsewhere is a swap without the marker
+    // discipline, and a crash between its renames loses the table
+    val rename = "Files\\.move|ATOMIC_MOVE|moveDirectory|renameTo".r
+    val found = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.filter(f => rename.findFirstIn(java.nio.file.Files.readString(f)).isDefined)
+      .map(_.getFileName.toString).toSet
+    assert(found === Set("Commit.scala"))
+  }
+
   test("BASELINE.md budget table ↔ query registry closure") {
     // round-11 lesson: d59 shipped registry-green but budget-less, so
     // the 2× bench gate silently didn't cover the suite's most

@@ -255,9 +255,10 @@ class StorageSpec extends SparkSpec {
     assert(spark.read.parquet(s"$base/by_source/published")
       .collect().map(_.toString).sorted.toSeq === bSnap)
     // round-13 advice pin: a crash MID-promote (audit green, first table
-    // already promoted, second table's rename throws) must roll the
-    // already-promoted tables back from published.old before rethrowing —
-    // no persistently torn snapshot beyond the documented rename window.
+    // already promoted, second table's swap throws at the commit
+    // failpoint) must roll the already-promoted tables back from
+    // published.old before rethrowing — no persistently torn snapshot
+    // beyond the documented rename window.
     // the staged content must differ from the published snapshot (else a
     // missing rollback would be invisible) while still passing the audit:
     // move one document's count between two langs — totals unchanged
@@ -267,9 +268,10 @@ class StorageSpec extends SparkSpec {
         .when(col("lang") === langs.last, col("n") + 1)
         .otherwise(col("n")))
     val thrown = intercept[IllegalStateException] {
-      operators.Sources.atomicPublishStaged(spark,
-        Seq(("by_lang", aShift, "lang"), ("by_source", b, "source")), total, base,
-        crashBeforePromoteOf = Some("by_source"))
+      CrashStates.withFailpoint(crashAt("by_source", "injected promote crash")) {
+        operators.Sources.atomicPublishStaged(spark,
+          Seq(("by_lang", aShift, "lang"), ("by_source", b, "source")), total, base)
+      }
     }
     assert(thrown.getMessage.contains("injected promote crash"))
     assert(spark.read.parquet(s"$base/by_lang/published")
@@ -278,6 +280,14 @@ class StorageSpec extends SparkSpec {
     assert(spark.read.parquet(s"$base/by_source/published")
       .collect().map(_.toString).sorted.toSeq === bSnap)
   }
+
+  /** A commit failpoint that throws before the renames of the swap
+    * into `<table>/published`. */
+  private def crashAt(table: String, msg: String)(
+      p: operators.Commit.Point, target: java.io.File): Unit =
+    if (p == operators.Commit.BeforeRenames &&
+        target.toString.endsWith(s"$table/published"))
+      throw new IllegalStateException(s"$msg at $table")
 
   test("f21 race: one publisher wins, the stale loser is rejected and its retry includes the winner's rows") {
     import operators.Sources
@@ -366,22 +376,24 @@ class StorageSpec extends SparkSpec {
     // must restore the first table byte-identically
     val (l2, s2) = (snap("by_lang"), snap("by_source"))
     val ex = intercept[IllegalStateException] {
-      Sources.atomicCasPublish(base,
-        stage("pubC"), Map("by_lang" -> 2, "by_source" -> 1),
-        crashBeforePromoteOf = Some("by_source"))
+      CrashStates.withFailpoint(crashAt("by_source", "injected commit crash")) {
+        Sources.atomicCasPublish(base,
+          stage("pubC"), Map("by_lang" -> 2, "by_source" -> 1))
+      }
     }
     assert(ex.getMessage.contains("injected commit crash"))
     assert(snap("by_lang") === l2, "mid-commit crash left a torn snapshot")
     assert(snap("by_source") === s2)
     // round-13 advice pin: a SECOND crash at the same base versions
-    // finds the first crash's staging_rolledback_v* dir still on disk —
-    // the rollback's own move must not throw on the leftover (that
-    // would mask the injected error inside the catch and leave exactly
-    // the torn snapshot the rollback exists to prevent)
+    // runs after the first crash's rollback — the rollback must leave
+    // nothing that makes the second one throw inside its catch (that
+    // would mask the injected error and leave exactly the torn
+    // snapshot the rollback exists to prevent)
     val ex2 = intercept[IllegalStateException] {
-      Sources.atomicCasPublish(base,
-        stage("pubD"), Map("by_lang" -> 2, "by_source" -> 1),
-        crashBeforePromoteOf = Some("by_source"))
+      CrashStates.withFailpoint(crashAt("by_source", "injected commit crash")) {
+        Sources.atomicCasPublish(base,
+          stage("pubD"), Map("by_lang" -> 2, "by_source" -> 1))
+      }
     }
     assert(ex2.getMessage.contains("injected commit crash"),
       s"rollback masked the original error: ${ex2.getMessage}")
@@ -436,9 +448,7 @@ class StorageSpec extends SparkSpec {
 
   test("f23 DV swap crash recovery: the between-renames gap heals FORWARD " +
     "(never an empty vector), and a post-compaction stale dv_old is never restored") {
-    import operators.Sources
-    import org.apache.commons.io.FileUtils
-    import java.nio.file.{Files => NioFiles, StandardCopyOption}
+    import operators.{Commit, Sources}
     val base = s"$wh/dv_crash"
     val cust = Tables.customer(spark, Sf)
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
@@ -449,19 +459,18 @@ class StorageSpec extends SparkSpec {
     val b = pmod(col("c_custkey"), lit(10L))
     Sources.dvDelete(spark, base, b === 5)
     val v1 = rows(Sources.readDv(spark, base))
-    Sources.dvDelete(spark, base, b === 7)
+    // the killed-JVM state BETWEEN the second dvDelete's two renames,
+    // captured at the commit failpoint: dv absent, dv_old = the older
+    // vector, staging_dv = the complete newer vector
+    val gap = CrashStates.at(base, Commit.BetweenRenames, "dv") {
+      Sources.dvDelete(spark, base, b === 7) }
     val v2 = rows(Sources.readDv(spark, base))
     assert(v2.size > v1.size)
-    // manufacture the killed-JVM state BETWEEN dvDelete's two renames
-    // (unreachable in-process): dv absent, dv_old = the older vector,
-    // dv_staging = the complete newer vector
+    CrashStates.restore(gap, base)
     val dv = new java.io.File(s"$base/dv")
     val dvOld = new java.io.File(s"$base/dv_old")
-    val dvStaging = new java.io.File(s"$base/dv_staging")
-    FileUtils.deleteQuietly(dvOld); FileUtils.deleteQuietly(dvStaging)
-    NioFiles.move(dv.toPath, dvStaging.toPath, StandardCopyOption.ATOMIC_MOVE)
-    // (any older content works as dv_old — the point is it must LOSE)
-    dvOld.mkdirs()
+    val dvStaging = new java.io.File(s"$base/staging_dv")
+    assert(!dv.exists && dvOld.exists && dvStaging.exists)
     // the recovery: readDv completes the swap forward to the NEW vector
     assert(rows(Sources.readDv(spark, base)) === v2,
       "the between-renames crash must heal to the new vector, not empty")
@@ -1096,9 +1105,7 @@ class StorageSpec extends SparkSpec {
 
   test("f25 bucket rescale: content identical at the new modulus, routing " +
     "exact, upserts continue at the new width, crash heals forward") {
-    import operators.Sources
-    import org.apache.commons.io.FileUtils
-    import java.nio.file.{Files => NioFiles, StandardCopyOption}
+    import operators.{Commit, Sources}
     val base = s"$wh/rescale"
     val a = (1L to 300L).map(k => (k, s"v_$k")).toDF("k", "v")
     Sources.bucketedUpsertStaged(spark, a, base, Seq("k"), "_batch_0")
@@ -1120,48 +1127,45 @@ class StorageSpec extends SparkSpec {
     Sources.bucketedUpsertStaged(spark, Seq((9001L, "new")).toDF("k", "v"),
       base, Seq("k"), "_batch_1", nBuckets = 32)
     assert(content() === (before :+ ((9001L, "new"))).sorted)
-    // killed-JVM state BETWEEN the layout swap's renames: published
-    // absent, restage = the complete audited layout with its marker —
-    // the next reader completes the swap forward
+    // killed-JVM states of a second rescale's layout swap, captured at
+    // the commit failpoint. BETWEEN the renames: published absent,
+    // restage = the complete audited layout with its marker — the next
+    // reader completes the swap forward
     val pub = new java.io.File(s"$base/published")
-    val restage = new java.io.File(s"$base/restage")
-    FileUtils.deleteQuietly(restage)
+    val restage = new java.io.File(s"$base/staging_rescale")
     val want = content()
-    NioFiles.move(pub.toPath, restage.toPath, StandardCopyOption.ATOMIC_MOVE)
-    new java.io.File(restage, "_rescaled").createNewFile()
+    val states = CrashStates.capture(base) {
+      Sources.rebucketStore(spark, base, Seq("k"), 32) }.toMap
+    CrashStates.restore(states(s"${Commit.BetweenRenames}@published"), base)
     assert(content() === want, "the mid-swap crash must heal forward")
     assert(pub.exists && !restage.exists)
-    // a markerless restage with published intact is an aborted stage
-    // write — cleared, never promoted
-    restage.mkdirs()
+    // BEFORE the renames: published intact, restage complete and marked
+    // — completed forward too, never left behind for a later reader
+    CrashStates.restore(states(s"${Commit.BeforeRenames}@published"), base)
     assert(content() === want)
-    assert(!restage.exists, "an unaudited restage must be cleared, not kept")
+    assert(!restage.exists, "a complete restage must not be left behind")
   }
 
   test("bucketed upsert crash recovery: the mid-swap gap heals forward " +
     "(killed-JVM state), and readers self-heal") {
-    import operators.Sources
-    import org.apache.commons.io.FileUtils
-    import java.nio.file.{Files => NioFiles, StandardCopyOption}
+    import operators.{Commit, Sources}
     val base = s"$wh/bup_crash"
     val a = (1L to 100L).map(k => (k, s"v0_$k")).toDF("k", "v")
     Sources.bucketedUpsertStaged(spark, a, base, Seq("k"), "_batch_0")
     val delta = Seq((2001L, "new")).toDF("k", "v")
-    Sources.bucketedUpsertStaged(spark, delta, base, Seq("k"), "_batch_1")
-    val want = Sources.readBucketedStore(spark, base, a.schema)
-      .as[(Long, String)].collect().map(_.toString()).sorted.toSeq
-    // manufacture the killed-JVM state BETWEEN a bucket's two renames:
-    // published/bucket=b absent, aside_bucket_b = the old bucket,
-    // staging/bucket=b = the complete new bucket
     val b = delta.select(Sources.bucketOf(Sources.MaintBuckets, Seq("k")).as("b"))
       .as[Int].head()
+    // the killed-JVM state BETWEEN a bucket's two renames, captured at
+    // the commit failpoint: published/bucket=b absent, aside_bucket_b =
+    // the old bucket, staging/bucket=b = the complete new bucket
+    val gap = CrashStates.at(base, Commit.BetweenRenames, s"bucket=$b") {
+      Sources.bucketedUpsertStaged(spark, delta, base, Seq("k"), "_batch_1") }
+    val want = Sources.readBucketedStore(spark, base, a.schema)
+      .as[(Long, String)].collect().map(_.toString()).sorted.toSeq
+    CrashStates.restore(gap, base)
     val pub = new java.io.File(s"$base/published/bucket=$b")
     val aside = new java.io.File(s"$base/aside_bucket_$b")
-    val staged = new java.io.File(s"$base/staging/bucket=$b")
-    FileUtils.deleteQuietly(staged); staged.getParentFile.mkdirs()
-    FileUtils.copyDirectory(pub, staged)
-    FileUtils.deleteQuietly(aside)
-    NioFiles.move(pub.toPath, aside.toPath, StandardCopyOption.ATOMIC_MOVE)
+    assert(!pub.exists && aside.exists)
     // the reader heals forward from the staged dir and clears the aside
     assert(Sources.readBucketedStore(spark, base, a.schema)
       .as[(Long, String)].collect().map(_.toString()).sorted.toSeq === want,

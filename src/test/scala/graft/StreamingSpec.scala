@@ -1142,11 +1142,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("upsert crash recovery: every on-disk crash state restores (killed-JVM shapes)") {
-    // constructs the states a kill can leave BETWEEN the swap's renames
-    // (not reachable by in-process calls) and asserts the recovery
-    // preamble restores each — the load-bearing proof for the
-    // "every crash point above restores" comment in upsertBatch
-    import org.apache.commons.io.FileUtils
+    // the states a kill can leave around the state swap — an orphaned
+    // stage write, and the commit failpoint's captures between and
+    // after the renames — each followed by the redelivery
+    import operators.Commit
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
     val evs = Tables.events(spark, Sf).select(cols.map(col): _*)
       .filter(col("event_type") =!= "sentinel")
@@ -1167,40 +1166,42 @@ class StreamingSpec extends SparkSpec {
     def current(s: String) =
       spark.read.parquet(s"$s/current").select(cols.map(col): _*)
 
-    // crash shape 1: orphaned `next` (kill after the next-write, before
-    // any rename) — possibly CORRUPT (partial parquet): must be
-    // discarded, then the redelivered batch applies cleanly
+    // crash shape 1: orphaned, unmarked staging (kill after the stage
+    // write, before the swap) — possibly CORRUPT (partial parquet):
+    // never promoted, overwritten by the redelivered batch
     val s1 = mkState()
-    val next1 = new java.io.File(s"$s1/next")
+    val next1 = new java.io.File(s"$s1/staging")
     next1.mkdirs()
     java.nio.file.Files.writeString(
       new java.io.File(next1, "part-00000.parquet").toPath, "truncated garbage")
     Streaming.upsertBatch(s1)(b1, 1L)
-    assert(sortedRows(current(s1)) === expected(), "orphaned next")
-    assert(!new java.io.File(s"$s1/next").exists() &&
+    assert(sortedRows(current(s1)) === expected(), "orphaned staging")
+    assert(!new java.io.File(s"$s1/staging").exists() &&
       !new java.io.File(s"$s1/prev").exists())
 
     // crash shape 2: `prev` without `current` (kill between the two
-    // renames) — prev must be restored before the batch re-applies
+    // renames, at the failpoint) — the marked staging completes the
+    // swap forward before the batch re-applies
     val s2 = mkState()
-    FileUtils.moveDirectory(new java.io.File(s"$s2/current"),
-      new java.io.File(s"$s2/prev"))
-    // the interrupted batch's next also survives on disk at this point
-    Streaming.lastEventPerUser(b1).select(cols.map(col): _*)
-      .write.parquet(s"$s2/next")
+    val gap = CrashStates.at(s2, Commit.BetweenRenames, "current") {
+      Streaming.upsertBatch(s2)(b1, 1L) }
+    CrashStates.restore(gap, s2)
+    assert(!new java.io.File(s"$s2/current").exists() &&
+      new java.io.File(s"$s2/prev").exists())
     Streaming.upsertBatch(s2)(b1, 1L)
     assert(sortedRows(current(s2)) === expected(), "prev without current")
 
     // crash shape 3: `prev` AND `current` both present (kill after the
-    // swap completed, before prev cleanup / marker write) — current is
-    // already the post-batch state; the unmarked redelivery must merge
-    // idempotently and just clean up
+    // swap completed, before prev cleanup / marker write, at the
+    // failpoint) — current is already the post-batch state; the
+    // unmarked redelivery must merge idempotently and just clean up
     val s3 = mkState()
-    Streaming.upsertBatch(s3)(b1, 1L)
+    val after = CrashStates.at(s3, Commit.AfterRenames, "current") {
+      Streaming.upsertBatch(s3)(b1, 1L) }
     val postSwap = sortedRows(current(s3))
-    FileUtils.copyDirectory(new java.io.File(s"$s3/current"),
-      new java.io.File(s"$s3/prev"))
-    FileUtils.deleteQuietly(new java.io.File(s"$s3/_applied/1"))
+    CrashStates.restore(after, s3)
+    assert(new java.io.File(s"$s3/prev").exists() &&
+      !new java.io.File(s"$s3/_applied/1").exists())
     Streaming.upsertBatch(s3)(b1, 1L)
     assert(sortedRows(current(s3)) === postSwap, "post-swap redelivery")
     assert(postSwap === expected())
