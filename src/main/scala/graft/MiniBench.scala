@@ -34,7 +34,7 @@ object MiniBench {
       // bench-shaped passes: every query once per pass, repeated — the
       // cross-query state-accumulation diagnosis mode. Reports leaked
       // block-manager state after each query: persisted RDDs that
-      // clearCache() did NOT reclaim (localCheckpoint blocks).
+      // clearCache() did NOT reclaim (eager round-checkpoint blocks).
       (1 to reps).foreach { p =>
         qs.foreach { n =>
           val t = run(n)

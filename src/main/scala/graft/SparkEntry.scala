@@ -383,15 +383,14 @@ object SparkEntry {
   private def dsum(x: String) = s"CAST(SUM(CAST(($x) AS DECIMAL(30,6))) AS DOUBLE)"
   private def davg(x: String) = s"${dsum(x)} / COUNT($x)"
 
-  private val refDir = "/root/reference/phoenixLab"
   private def textCtes(file: String) =
     s"""toks AS (
        |  SELECT unnest(regexp_extract_all(lower(content), '[a-z][a-z'']*')) AS word
-       |  FROM read_text('$refDir/$file')),
+       |  FROM read_text('${RefQueries.RefDir}/$file')),
        |stop AS (
        |  SELECT DISTINCT w AS word FROM (
        |    SELECT unnest(string_split_regex(trim(content), '\\s+')) AS w
-       |    FROM read_text('$refDir/Stop_Words.txt')) WHERE w <> '')""".stripMargin
+       |    FROM read_text('${RefQueries.StopWordsPath}')) WHERE w <> '')""".stripMargin
 
   private def wordCountSql(file: String) =
     s"""WITH ${textCtes(file)}
@@ -407,14 +406,14 @@ object SparkEntry {
 
   private def invertedIndexSql(file: String) =
     s"""WITH f AS (SELECT string_split(content, chr(10)) AS ls
-       |           FROM read_text('$refDir/$file')),
+       |           FROM read_text('${RefQueries.RefDir}/$file')),
        |lines AS (SELECT unnest(range(len(ls))) AS line, unnest(ls) AS text FROM f),
        |toks AS (SELECT line, unnest(regexp_extract_all(lower(text), '[a-z][a-z'']*')) AS word
        |         FROM lines),
        |stop AS (
        |  SELECT DISTINCT w AS word FROM (
        |    SELECT unnest(string_split_regex(trim(content), '\\s+')) AS w
-       |    FROM read_text('$refDir/Stop_Words.txt')) WHERE w <> '')
+       |    FROM read_text('${RefQueries.StopWordsPath}')) WHERE w <> '')
        |SELECT word,
        |  array_to_string(list_sort(list_distinct(list(line))), ',') AS postings,
        |  count(DISTINCT line) AS n_lines

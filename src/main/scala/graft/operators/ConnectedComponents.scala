@@ -8,62 +8,14 @@ import org.apache.spark.sql.functions._
   * keeps one representative per duplicate GROUP, and groups are the
   * transitive closure of the pair relation).
   *
-  * Two interchangeable algorithms, both returning (node, component) with
-  * component = the smallest node id reachable from the node; every node
-  * that appears in an edge is labeled (callers add singletons):
-  *
-  *  - [[minLabelPropagation]]: each round every node takes the min of its
-  *    own and its neighbors' labels. Rounds = component DIAMETER — tiny
-  *    for near-dup families (dense, diameter ≤3) but unbounded in
-  *    general: a pathological chain-shaped corpus (serially edited
-  *    boilerplate) would need O(n) shuffles.
-  *  - [[largeSmallStar]]: alternating large-star/small-star rewrites
-  *    (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii, "Connected
-  *    Components in MapReduce and Beyond", SoCC'14). Each round is two
-  *    equi-join + aggregate passes over the EDGE set, and the edge set
-  *    converges to a star forest in O(log n) rounds regardless of
-  *    diameter — the 100 TB-safe choice, and what [[PairGraph.neardupClusters]]
-  *    ships. ConnectedComponentsSpec proves both agree on the real pair
-  *    graph and that large/small-star converges on a planted
-  *    high-diameter chain far beyond label-propagation's round bound.
-  *
-  * Both loops localCheckpoint per round so the plan does not grow with
-  * iterations, and both do only edge-proportional work per round — no
-  * driver-side collect beyond the convergence `isEmpty`.
-  *
-  * Checkpoint lifecycle: `Dataset.localCheckpoint()` (eager) materializes
-  * MEMORY_AND_DISK blocks that `CacheManager.clearCache()` never touches —
-  * only a full GC (via ContextCleaner weak refs) reclaims them. Left
-  * alone, every round of every clustering query pins another edge-set's
-  * worth of storage memory for the rest of the JVM's life, squeezing the
-  * unified pool out from under LATER queries (diagnosed round 7: d34's
-  * cold time rose 1.55→2.43→4.09 s across bench passes while its isolated
-  * time sat at 1.0 s — the leaked blocks were upstream queries' round
-  * checkpoints). Both loops therefore [[dropCheckpoint]] round N−1's
-  * blocks as soon as round N's checkpoint is materialized and the
-  * convergence test has read the old frame; only the FINAL round's blocks
-  * survive into the returned (lazy) frame, which the session reclaims at
-  * the next GC.
+  * [[largeSmallStar]] returns (node, component) with component = the
+  * smallest node id reachable from the node; every node that appears in
+  * an edge is labeled (callers add singletons). It runs on the
+  * [[Fixpoint]] driver, whose scaladoc holds the round discipline and
+  * the checkpoint lifecycle; each round does only edge-proportional work,
+  * with no driver-side collect beyond the convergence probe.
   */
 object ConnectedComponents {
-  /** Frees the block-manager state behind a superseded eager
-    * [[org.apache.spark.sql.Dataset.localCheckpoint]]. The checkpointed
-    * data lives in the `LogicalRDD` leaf of the analyzed plan; because
-    * the checkpoint was EAGER, no downstream plan can ever need to
-    * recompute through it once the next round's checkpoint exists, so
-    * unpersisting is safe. Non-blocking: removal proceeds while the next
-    * round's jobs run. */
-  private[operators] def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-  /** Round guard: large/small-star needs O(log n) rounds (≈2 log₂ n in
-    * the paper's bound), so 60 covers any graph that fits in an exabyte;
-    * label propagation hitting it means the graph's diameter is
-    * pathological — switch to [[largeSmallStar]]. */
-  val MaxRounds = 60
-
   /** Normalize an (i, j) edge list to distinct (u, v) with u > v,
     * self-loops dropped. */
   private def orient(edges: DataFrame): DataFrame =
@@ -72,7 +24,12 @@ object ConnectedComponents {
       .filter(col("u") =!= col("v"))
       .distinct()
 
-  /** Alternating large-star/small-star to a fixpoint.
+  /** Alternating large-star/small-star rewrites to a fixpoint (Kiveris,
+    * Lattanzi, Mirrokni, Rastogi, Vassilvitskii, "Connected Components in
+    * MapReduce and Beyond", SoCC'14). Each round is two equi-join +
+    * aggregate passes over the EDGE set, and the edge set converges to a
+    * star forest in O(log n) rounds regardless of diameter — a
+    * chain-shaped corpus (serially edited boilerplate) included.
     *
     * large-star: for every node u, every strictly-larger neighbor is
     * re-pointed at m(u) = min(Γ(u) ∪ {u}).
@@ -80,16 +37,13 @@ object ConnectedComponents {
     * neighbors are re-pointed at m(u) = min(Γ(u)).
     * At the fixpoint the edge set is a star forest (child, root) with
     * root = component min; labels are the stars plus the roots
-    * themselves.
+    * themselves. An edge with a null endpoint orients to a self-loop (or
+    * a null pair) and is dropped.
     */
-  def largeSmallStar(edges0: DataFrame): DataFrame = {
-    var edges = orient(edges0).localCheckpoint()
-    var converged = false
-    var round = 0
-    while (!converged) {
-      round += 1
-      require(round <= MaxRounds,
-        s"connected components did not converge in $MaxRounds rounds")
+  def largeSmallStar(edges0: DataFrame): DataFrame = starLabels(
+    Fixpoint.iterate("cc", "large/small-star converges in O(log n) rounds, so this is no size limit",
+        orient(edges0)) { prev =>
+      val edges = prev.state
       // large-star over the symmetric adjacency
       val adj = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
       val largeMins = adj.groupBy("u").agg(min(col("v")).as("mn"))
@@ -99,62 +53,24 @@ object ConnectedComponents {
       // shuffle per round. (v, m) is already (u > v)-oriented: v > u ≥ m.
       // cached: BOTH small-star inputs (smallMins and the join) read it —
       // without the cache the dominant large-star join runs twice per
-      // round; unpersisted once `small` is materialized below
-      val large = adj.join(largeMins, "u").filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .cache()
+      // round
+      val large = prev.cached(adj.join(largeMins, "u").filter(col("v") > col("u"))
+        .select(col("v").as("u"), col("m").as("v")))
       // small-star over the (u > v)-oriented output: every smaller
       // neighbor AND u itself link to the smallest neighbor.
-      val small = try {
-        val smallMins = large.groupBy("u").agg(min(col("v")).as("m"))
-        large.join(smallMins, "u")
-          .select(col("v").as("u"), col("m").as("v"))
-          .union(smallMins.select(col("u"), col("m").as("v")))
-          .filter(col("u") =!= col("v"))
-          .distinct()
-          .localCheckpoint()
-      } finally large.unpersist(blocking = false) // even on abnormal exit
-      // fixpoint: the round left the edge set unchanged. Both sides are
-      // distinct sets, so symmetric difference = rows seen exactly once
-      // in the union — ONE aggregation job, edge-proportional.
-      converged = Sources.labeled(edges.sparkSession, s"cc-round-$round") {
-        small.union(edges).groupBy("u", "v")
-          .agg(count(lit(1)).as("c")).filter(col("c") === 1).isEmpty }
-      dropCheckpoint(edges) // convergence test was the last reader
-      edges = small
-    }
-    starLabels(edges)
-  }
-
-  /** Iterative min-label propagation (rounds = component diameter).
-    * Kept as the simple variant for known-dense graphs and as the
-    * differential check for [[largeSmallStar]]. */
-  def minLabelPropagation(edges0: DataFrame): DataFrame = {
-    val edges = orient(edges0)
-    val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v"))).cache()
-    var labels = sym.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("component")).localCheckpoint()
-    try {
-      var converged = false
-      var round = 0
-      while (!converged) {
-        round += 1
-        require(round <= MaxRounds,
-          s"label propagation exceeded $MaxRounds rounds — use largeSmallStar")
-        val nbrMin = sym.join(labels, sym("v") === labels("node"))
-          .groupBy(sym("u").as("nd")).agg(min(col("component")).as("nmin"))
-        val next = labels.join(nbrMin, labels("node") === col("nd"), "left")
-          .select(col("node"),
-            least(col("component"), coalesce(col("nmin"), col("component"))).as("component"),
-            (col("nmin") < col("component")).as("chg"))
-          .localCheckpoint()
-        converged = next.filter(col("chg")).isEmpty
-        dropCheckpoint(labels) // `next` is materialized; old round done
-        labels = next.select("node", "component")
-      }
-    } finally sym.unpersist() // even on abnormal exit — don't pin blocks
-    labels
-  }
+      val smallMins = large.groupBy("u").agg(min(col("v")).as("m"))
+      large.join(smallMins, "u")
+        .select(col("v").as("u"), col("m").as("v"))
+        .union(smallMins.select(col("u"), col("m").as("v")))
+        .filter(col("u") =!= col("v"))
+        .distinct()
+    } { (prev, cur) =>
+      // the round left the edge set unchanged. Both sides are distinct
+      // sets, so symmetric difference = rows seen exactly once in the
+      // union — ONE aggregation job, edge-proportional.
+      cur.state.union(prev.state).groupBy("u", "v")
+        .agg(count(lit(1)).as("c")).filter(col("c") === 1).isEmpty
+    })
 
   /** A star forest (child, root) → (node, component) labels: the
     * children plus every root labeling itself. */

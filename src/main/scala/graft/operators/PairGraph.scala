@@ -495,8 +495,8 @@ object PairGraph {
     * (serially edited boilerplate) cannot blow the round count the way
     * diameter-bound label propagation would. Non-pair docs never enter
     * the loop and are labeled as singletons at the end by a left join;
-    * ConnectedComponentsSpec pins the algorithm against label
-    * propagation on the real pair graph and against planted
+    * ConnectedComponentsSpec pins the algorithm against a driver-side
+    * union-find on the real pair graph and against planted
     * high-diameter chains. */
   def neardupClusters(s: SparkSession, d: String): DataFrame =
     clusterAssign(s, d, jaccardPairs(s, d, 0.8).select(col("i"), col("j")))

@@ -13,29 +13,28 @@ import org.apache.spark.sql.functions._
   * contain, how many levels down?"), dependency resolution, org-chart
   * rollups, and lineage walks.
   *
-  * Algorithm: level-synchronous BFS — round k's frontier is exactly the
-  * nodes whose minimum hop count is k (first discovery = shortest path,
-  * the BFS invariant), so hop labels need no re-relaxation and each
-  * round is one frontier × edges equi-join plus an anti-join against
-  * the discovered set. Rounds = the REACHED graph's depth (longest
-  * shortest-path), not its size; the [[ConnectedComponents]] round
-  * discipline applies verbatim — localCheckpoint per round so the plan
-  * never grows, superseded checkpoint blocks dropped as soon as the
-  * next round materializes, no driver-side data beyond the `isEmpty`
-  * convergence probe.
+  * Two kernels behind one (roots, edges) → (root, node, hops) contract,
+  * both run on the [[Fixpoint]] driver (its scaladoc holds the round
+  * discipline and the checkpoint lifecycle):
   *
-  * Scale: work per round is frontier-edge-proportional (the equi-join
-  * shuffles on src; the anti-join on (root, node) — both keys
-  * partition; never a cross product). Depth is the honest cost driver:
-  * a BOM/dependency DAG is log-ish deep (this fixture: ≤ log₂ max key
-  * ≈ 15 rounds at any SF) and BFS is the right plan; a pathologically
-  * deep chain (depth ~ n) needs [[minHopClosureDoubling]] (e45b):
-  * O(log depth) rounds bought at O(Σ reach²) pair-relation work —
-  * the same rounds-vs-work trade as
-  * [[ConnectedComponents.largeSmallStar]], behind the same
-  * (roots, edges) → (root, node, hops) contract. Undirected closure WITHOUT hop labels should use
-  * large/small-star instead — star rewrites do not preserve path
-  * length, which is exactly why this kernel exists separately.
+  *  - [[minHopClosure]] (e45): level-synchronous BFS. Rounds = the
+  *    REACHED graph's depth (longest shortest-path); work per round is
+  *    frontier-edge-proportional. The right plan for log-ish-deep
+  *    BOM/dependency DAGs (this fixture: ≤ log₂ max key ≈ 15 rounds at
+  *    any SF).
+  *  - [[minCostClosureDoubling]] (e45b at unit weights, e45c weighted):
+  *    path doubling. O(log depth) rounds, bought at O(Σ reach²)
+  *    pair-relation work — the swap for pathologically deep chains
+  *    (depth ~ n), which BFS refuses past [[Fixpoint.MaxRounds]].
+  *
+  * Null edge endpoints: an edge with a null `src` or `dst` joins nothing
+  * under SQL equality, so both kernels drop it at entry — a null node is
+  * never reached and never reaches.
+  *
+  * Undirected closure WITHOUT hop labels should use
+  * [[ConnectedComponents.largeSmallStar]] instead — star rewrites do not
+  * preserve path length, which is exactly why these kernels exist
+  * separately.
   *
   * Reference analogue: the reference runtime has no iterative-job
   * surface at all (each app is one map→reduce→merge pass,
@@ -43,59 +42,47 @@ import org.apache.spark.sql.functions._
   * fixpoint is a capability the Spark engine adds.
   */
 object TransitiveClosure {
-  /** Generic kernel: `roots` = (root, node) seed rows (normally node =
-    * root), `edges` = directed (src, dst). Returns (root, node, hops)
-    * with hops = min edge-path length from `root`'s seed to `node`,
-    * seeds included at hops 0. Cycles are safe (a revisit loses the
-    * anti-join), but rounds scale with reached depth — see the
-    * scaladoc above for the deep-graph variant. */
-  def minHopClosure(roots: DataFrame, edges0: DataFrame,
-      maxRounds: Int = ConnectedComponents.MaxRounds): DataFrame = {
-    val edges = edges0.select(col("src"), col("dst")).distinct().cache()
-    try {
-      var dist = roots.select(col("root"), col("node"), lit(0L).as("hops"))
-        .distinct().localCheckpoint()
-      var frontier = dist
-      var round = 0
-      while (!frontier.isEmpty) {
-        round += 1
-        require(round <= maxRounds,
-          s"closure depth exceeded $maxRounds rounds — " +
-            "graph too deep for BFS; use a path-doubling variant")
-        val next = frontier.join(edges, frontier("node") === edges("src"))
-          .select(col("root"), col("dst").as("node")).distinct()
-          .join(dist, Seq("root", "node"), "left_anti")
-          .select(col("root"), col("node"), lit(round.toLong).as("hops"))
-          .localCheckpoint()
-        val grown = dist.union(next).localCheckpoint()
-        // grown and next are materialized: the previous round's blocks
-        // have no remaining readers
-        if (!(frontier eq dist)) ConnectedComponents.dropCheckpoint(frontier)
-        ConnectedComponents.dropCheckpoint(dist)
-        dist = grown
-        frontier = next
-      }
-      // the final (empty) frontier's checkpoint has no readers either
-      if (!(frontier eq dist)) ConnectedComponents.dropCheckpoint(frontier)
-      dist
-    } finally edges.unpersist(blocking = false)
+  /** Edges with both endpoints non-null. */
+  private def endpoints(edges: DataFrame): DataFrame =
+    edges.filter(col("src").isNotNull && col("dst").isNotNull)
+
+  /** Generic BFS kernel: `roots` = (root, node) seed rows (normally
+    * node = root), `edges` = directed (src, dst). Returns (root, node,
+    * hops) with hops = min edge-path length from `root`'s seed to
+    * `node`, seeds included at hops 0.
+    *
+    * The state is the discovered (root, node, hops) set. Round k's
+    * frontier is its hops = k−1 rows — first discovery is the shortest
+    * path (the BFS invariant), so hop labels need no re-relaxation —
+    * and the round adds the frontier × edges equi-join's targets not
+    * yet discovered (an anti-join on (root, node)) at hops = k. It
+    * converges when a round discovers nothing: the count of hops = k
+    * rows, observed on the round's own checkpoint. Both shuffles key on
+    * node ids, never a cross product. Cycles are safe (a revisit loses
+    * the anti-join). */
+  def minHopClosure(roots: DataFrame, edges0: DataFrame): DataFrame = {
+    val edges = endpoints(edges0).select(col("src"), col("dst")).distinct().cache()
+    try Fixpoint.iterate("bfs",
+        "graph too deep for BFS; use a path-doubling variant",
+        roots.select(col("root"), col("node"), lit(0L).as("hops")).distinct(),
+        k => Seq(count(when(col("hops") === k, 1)).as("found"))) { prev =>
+      val k = prev.k + 1
+      val frontier = prev.state.filter(col("hops") === k - 1)
+      prev.state.unionByName(frontier.join(edges, frontier("node") === edges("src"))
+        .select(col("root"), col("dst").as("node")).distinct()
+        .join(prev.state, Seq("root", "node"), "left_anti")
+        .select(col("root"), col("node"), lit(k.toLong).as("hops")))
+    }((_, cur) => cur.stats("found") == 0L)
+    finally edges.unpersist(blocking = false)
   }
 
   /** e45b — min-hop closure by PATH DOUBLING: the documented deep-graph
-    * swap behind the same (roots, edges) → (root, node, hops) contract.
-    * [[minHopClosure]]'s BFS runs depth-many rounds and `require`-fails
-    * past [[ConnectedComponents.MaxRounds]]; a chain-shaped graph
-    * (event sequences, linked revisions, blockchain-style parent
-    * pointers) has depth ~ n and needs the logarithmic-round variant.
-    *
-    * Algorithm: min-plus squaring of the distance relation. `r` holds
-    * (u, v, d) = the MINIMUM path length from u to v among paths of
-    * length ≤ 2^k after k rounds; each round composes r with itself
-    * (one equi-join on the middle node + a min aggregate) and stops at
-    * the first round that neither adds a pair nor shortens one.
-    * ceil(log₂ depth) rounds regardless of depth; cycles are safe (a
-    * lap around a cycle never shortens a path, so min() discards it
-    * and the fixpoint test converges).
+    * swap behind the same (roots, edges) → (root, node, hops) contract,
+    * [[minCostClosureDoubling]] at unit weights. [[minHopClosure]]'s BFS
+    * runs depth-many rounds and refuses past [[Fixpoint.MaxRounds]]; a
+    * chain-shaped graph (event sequences, linked revisions,
+    * blockchain-style parent pointers) has depth ~ n and needs the
+    * logarithmic-round variant.
     *
     * The honest cost tradeoff vs BFS — why BOTH kernels exist: the
     * relation materializes EVERY reachable (u, v) pair from every
@@ -103,20 +90,28 @@ object TransitiveClosure {
     * O(roots-reached edges) per round. Doubling wins when depth ≫ the
     * round budget AND per-node reach sets are bounded (segmented
     * chains, bounded-window sequence graphs — the registry fixture);
-    * BFS wins on shallow-wide DAGs (e45's BOM). Both shuffles key on
-    * node ids — no cross product, AQE splits a skewed middle node. */
-  def minHopClosureDoubling(roots: DataFrame, edges0: DataFrame,
-      maxRounds: Int = 40): DataFrame =
+    * BFS wins on shallow-wide DAGs (e45's BOM). */
+  def minHopClosureDoubling(roots: DataFrame, edges0: DataFrame): DataFrame =
     minCostClosureDoubling(roots,
-      edges0.select(col("src"), col("dst")).withColumn("w", lit(1L)), maxRounds)
+      edges0.select(col("src"), col("dst")).withColumn("w", lit(1L)))
       .withColumnRenamed("cost", "hops")
 
   /** e45c — WEIGHTED min-cost closure: the doubling kernel with edge
-    * weights, min-plus squaring over (u, v, d) where d₀ = w instead of
-    * 1. This is the cost-rollup/critical-path question users ask right
-    * after reachability ("what is the CHEAPEST way this assembly
+    * weights. This is the cost-rollup/critical-path question users ask
+    * right after reachability ("what is the CHEAPEST way this assembly
     * contains that part?"); min-hop (e45b) is exactly this kernel at
-    * w ≡ 1, so both run the one shared loop and can't drift.
+    * w ≡ 1, so both run the one kernel and can't drift.
+    *
+    * Algorithm: min-plus squaring of the distance relation. The state
+    * holds (u, v, d) = the MINIMUM path cost from u to v among paths of
+    * at most 2^k edges after round k; each round composes it with
+    * itself (one equi-join on the middle node + a min aggregate) and it
+    * converges at the first round that neither adds a pair nor shortens
+    * one: the (pair count, Σd) probe, observed on the round's own
+    * checkpoint, is unchanged. The state only grows pairwise and only
+    * shrinks distances, so an equal count means no pair was added and an
+    * equal sum then forces pointwise-equal distances (the sum is
+    * decimal: immune to overflow at any pair volume).
     *
     * Semantics: returns, per (root, node), the minimum total edge
     * weight over all directed paths, seeds at cost 0. Weights must be
@@ -126,81 +121,45 @@ object TransitiveClosure {
     * would silently truncate; the kernel REFUSES all three with a
     * diagnostic instead of spinning to the round cap or corrupting
     * costs (the d65 refuse-loudly discipline). The check rides the
-    * seeding aggregate itself — flagged per edge, max-reduced alongside
-    * the parallel-edge min-collapse — so validation adds no extra scan
-    * of the edge relation. Non-negative cycles are safe: a lap adds
-    * ≥ 0, min() keeps the lap-free cost, and the (count, Σd) fixpoint
-    * probe converges.
+    * seeding round itself — flagged per edge, max-reduced alongside
+    * the parallel-edge min-collapse, observed on the seed's checkpoint
+    * — so validation adds no job and no extra scan of the edges.
+    * Non-negative cycles are safe: a lap adds ≥ 0 and min() keeps the
+    * lap-free cost.
     *
-    * Scale posture is e45b's, unchanged: O(log depth) rounds, each one
-    * middle-node equi-join + min aggregate + localCheckpoint; the
-    * O(Σ reach²) pair materialization is the documented trade vs BFS
-    * and wants block-bounded reach sets (the BOM fixture's div-chain
-    * reach is O(log² key)). Parallel edges collapse to their min
-    * weight in the seeding aggregate. */
-  def minCostClosureDoubling(roots: DataFrame, wEdges: DataFrame,
-      maxRounds: Int = 40): DataFrame = {
-    // fixpoint probe: (pair count, Σd). r ⊆ next pairwise with
-    // d_next ≤ d_r, so equal count means no pair added and equal sum
-    // then forces pointwise-equal distances. Round 19: the probe rides
-    // the checkpoint materialization itself (`observe` on the
-    // localCheckpoint action — the publish-gate observed-count
-    // discipline), so each round runs ONE job instead of checkpoint +
-    // a separate scalar-aggregate pass over the checkpointed pairs.
-    // Decimal sum: immune to Σd overflow at any pair volume.
-    // Weight-validity guard FOLDED into the seeding aggregate: invalid
-    // weights (negative, null, or non-integral — `d` is long arithmetic,
-    // so a fractional weight would otherwise silently truncate, 0.9 → 0,
-    // and corrupt every min-cost through its edge) are flagged per edge
-    // and max-reduced in the SAME pass that min-collapses parallel
-    // edges; the refusal fires off a scalar aggregate over the already-
-    // reduced pair relation, so validation costs zero extra scans of
-    // the edge relation. A null weight flags via the isNull arm (min()
-    // alone would silently skip it).
+    * Scale: O(log depth) rounds; the O(Σ reach²) pair materialization is
+    * the documented trade vs BFS and wants block-bounded reach sets (the
+    * BOM fixture's div-chain reach is O(log² key)). Both shuffles key on
+    * node ids — no cross product, AQE splits a skewed middle node. */
+  def minCostClosureDoubling(roots: DataFrame, wEdges: DataFrame): DataFrame = {
+    // a null weight flags via the isNull arm (min() alone would skip it)
     val badW = col("w").isNull || col("w") < 0 ||
       col("w") =!= col("w").cast("long")
-    def sdOf(m: Any): java.math.BigDecimal =
-      Option(m).map(_.asInstanceOf[java.math.BigDecimal])
-        .getOrElse(java.math.BigDecimal.ZERO)
-    // ONE job serves the seeding checkpoint, the weight-validity gate
-    // AND the round-0 fixpoint stats (observed on the materialization)
-    val obs0 = new org.apache.spark.sql.Observation()
-    val r0 = wEdges.select(col("src").as("u"), col("dst").as("v"), col("w"))
+    val seed = endpoints(wEdges)
+      .select(col("src").as("u"), col("dst").as("v"), col("w"))
       .groupBy("u", "v")
       .agg(min(col("w").cast("long")).as("d"),
         max(when(badW, 1).otherwise(0)).as("bad"))
-      .observe(obs0, coalesce(max(col("bad")), lit(0)).as("bad"),
-        count(lit(1)).as("n"), sum(col("d").cast("decimal(38,0)")).as("sd"))
-      .localCheckpoint()
-    require(obs0.get("bad").asInstanceOf[Int] == 0,
-      "minCostClosureDoubling requires non-negative, non-null, integral " +
-        "edge weights — a negative-weight cycle has no min-cost fixpoint, " +
-        "a null weight would silently null every path through its edge, " +
-        "and a fractional weight would silently truncate in the long-cost " +
-        "arithmetic")
-    var r = r0.select(col("u"), col("v"), col("d"))
-    var last = (obs0.get("n").asInstanceOf[Long], sdOf(obs0.get("sd")))
-    var round = 0
-    var converged = false
-    while (!converged) {
-      round += 1
-      require(round <= maxRounds,
-        s"path doubling exceeded $maxRounds rounds (depth > 2^$maxRounds?)")
+    val fixpoint = Seq(count(lit(1)).as("n"),
+      sum(col("d").cast("decimal(38,0)")).as("sd"))
+    val r = Fixpoint.iterate("doubling", s"depth > 2^${Fixpoint.MaxRounds}?",
+        seed, {
+          case 0 => coalesce(max(col("bad")), lit(0)).as("bad") +: fixpoint
+          case _ => fixpoint
+        }) { prev =>
+      // the seed's weight guard, read before any round builds on it
+      if (prev.k == 0) require(prev.stats("bad") == 0,
+        "minCostClosureDoubling requires non-negative, non-null, integral " +
+          "edge weights — a negative-weight cycle has no min-cost fixpoint, " +
+          "a null weight would silently null every path through its edge, " +
+          "and a fractional weight would silently truncate in the long-cost " +
+          "arithmetic")
+      val r = prev.state.select(col("u"), col("v"), col("d"))
       val comp = r.as("a").join(r.as("b"), col("a.v") === col("b.u"))
         .select(col("a.u").as("u"), col("b.v").as("v"),
           (col("a.d") + col("b.d")).as("d"))
-      val obs = new org.apache.spark.sql.Observation()
-      val next = r.unionByName(comp).groupBy("u", "v")
-        .agg(min(col("d")).as("d"))
-        .observe(obs, count(lit(1)).as("n"),
-          sum(col("d").cast("decimal(38,0)")).as("sd"))
-        .localCheckpoint()
-      val cur = (obs.get("n").asInstanceOf[Long], sdOf(obs.get("sd")))
-      converged = cur._1 == last._1 && cur._2.compareTo(last._2) == 0
-      last = cur
-      ConnectedComponents.dropCheckpoint(r)
-      r = next
-    }
+      r.unionByName(comp).groupBy("u", "v").agg(min(col("d")).as("d"))
+    }((prev, cur) => Seq("n", "sd").forall(c => cur.stats(c) == prev.stats(c)))
     val reached = roots.join(r, roots("node") === r("u"))
       .select(col("root"), col("v").as("node"), col("d").as("cost"))
     roots.select(col("root"), col("node"), lit(0L).as("cost"))
@@ -212,7 +171,7 @@ object TransitiveClosure {
     * `part` — each 64-key block [64k, 64k+63] is a descending chain
     * (p → p−1 within the block), roots are the block tops (≡ 63 mod
     * 64), so reached depth is 63: past the BFS round budget
-    * ([[ConnectedComponents.MaxRounds]] = 60 — [[minHopClosure]]
+    * ([[Fixpoint.MaxRounds]] = 60 — [[minHopClosure]]
     * refuses this graph by contract; the boundary spec pins that) and
     * the shape where doubling's pair relation stays block-bounded. */
   def deepChainReachability(s: SparkSession, d: String): DataFrame = {

@@ -3,10 +3,9 @@ package graft
 import graft.operators.{ConnectedComponents, LlmOps, PairGraph}
 import org.apache.spark.sql.DataFrame
 
-/** The two CC algorithms must agree with each other (and with a local
-  * union-find) on every graph shape — and large/small-star must converge
-  * on a chain whose diameter is far beyond what diameter-bound label
-  * propagation could finish inside the round guard. */
+/** Large/small-star must agree with a driver-side union-find on every
+  * graph shape — synthetic, degenerate and the real pair graph — and
+  * must converge on a chain whose diameter is far beyond the round cap. */
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -30,8 +29,8 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("large/small-star labels a high-diameter chain (diameter 119) to its min") {
-    // label propagation needs `diameter` rounds — 119 would blow the
-    // round guard; large/small-star must do it in O(log n).
+    // a diameter-bound algorithm needs 119 rounds — past the round cap;
+    // large/small-star must do it in O(log n).
     val chain = (0L until 119L).map(i => (i, i + 1))
     val got = labelsOf(ConnectedComponents.largeSmallStar(edgesDf(chain)))
     assert(got.size === 120)
@@ -44,31 +43,36 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got === Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 20L -> 20L, 21L -> 20L))
   }
 
-  test("both algorithms agree with union-find on a deterministic pseudo-random graph") {
+  test("large/small-star ≡ union-find: pseudo-random graph, null endpoints") {
     // splitmix-ish arithmetic graph: deterministic, no RNG state.
-    val es = (0 until 200).map { k =>
+    val random = (0 until 200).map { k =>
       val a = (k * 2654435761L) % 97
       val b = (k * 40503L + 7) % 97
-      (math.min(a, b), math.max(a, b))
+      (java.lang.Long.valueOf(math.min(a, b)), java.lang.Long.valueOf(math.max(a, b)))
     }.filter { case (a, b) => a != b }
-    val expected = unionFind(es)
-    val ls = labelsOf(ConnectedComponents.largeSmallStar(edgesDf(es)))
-    val lp = labelsOf(ConnectedComponents.minLabelPropagation(edgesDf(es)))
-    assert(ls === expected)
-    assert(lp === expected)
+    // the closure kernels' null-endpoint case, (r,a), (r,null), (a,null),
+    // plus a null source and an all-null edge: edges touching a null node
+    // are dropped
+    val nulls = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (1L, null),
+      (2L, null), (null, 3L), (null, null))
+    for (es <- Seq(random, nulls)) {
+      val kept = es.collect { case (a, b) if a != null && b != null =>
+        (a.longValue, b.longValue) }
+      assert(labelsOf(ConnectedComponents.largeSmallStar(es.toDF("i", "j"))) ===
+        unionFind(kept))
+    }
   }
 
-  test("both algorithms agree on the real near-dup pair graph") {
+  test("large/small-star ≡ union-find on the real near-dup pair graph") {
     val edges = PairGraph.ngramJaccard(spark, Sf).select("i", "j")
     val ls = labelsOf(ConnectedComponents.largeSmallStar(edges))
-    val lp = labelsOf(ConnectedComponents.minLabelPropagation(edges))
     assert(ls.nonEmpty, "corpus should contain planted near-dup pairs")
-    assert(ls === lp)
+    assert(ls === unionFind(edges.as[(Long, Long)].collect().toSeq))
   }
 
   test("empty edge set yields empty labels") {
-    val empty = edgesDf(Seq.empty)
-    assert(ConnectedComponents.largeSmallStar(empty).isEmpty)
-    assert(ConnectedComponents.minLabelPropagation(empty).isEmpty)
+    assert(labelsOf(ConnectedComponents.largeSmallStar(edgesDf(Seq.empty))) ===
+      unionFind(Nil))
+    assert(unionFind(Nil).isEmpty)
   }
 }

@@ -7,6 +7,18 @@ import scala.jdk.CollectionConverters._
   * the correctness gate or break the bench tail parse. */
 class ContractSpec extends SparkSpec {
 
+  /** The Scala sources under src/main. */
+  private def mainSources: List[java.nio.file.Path] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally files.close()
+  }
+
+  /** The names of the src/main sources in which `re` occurs. */
+  private def mainFilesMatching(re: scala.util.matching.Regex): Set[String] =
+    mainSources.filter(f => re.findFirstIn(java.nio.file.Files.readString(f)).isDefined)
+      .map(_.getFileName.toString).toSet
+
   /** Queries intentionally WITHOUT a DuckDB oracle (rows-only check):
     * d06's hyperplane-LSH recall is probabilistic by design, e09b's HLL
     * sketch is engine-specific; both carry spec-based checks instead
@@ -183,11 +195,7 @@ class ContractSpec extends SparkSpec {
     // a user can flip, so the set is pinned here AND in the README —
     // a new conf must update both
     val literal = "\"spark\\.graft\\.([A-Za-z0-9_.]+)\"".r
-    val found = {
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally files.close()
-    }.flatMap(f => literal.findAllMatchIn(java.nio.file.Files.readString(f))
+    val found = mainSources.flatMap(f => literal.findAllMatchIn(java.nio.file.Files.readString(f))
       .map(_.group(1))).toSet
     val documented = Set("approxPercentile", "approxPercentile.accuracy",
       "corpusPersistLevel", "forceRebuildStores", "kmeansPlusPlus")
@@ -203,13 +211,15 @@ class ContractSpec extends SparkSpec {
     // hand-written rename elsewhere is a swap without the marker
     // discipline, and a crash between its renames loses the table
     val rename = "Files\\.move|ATOMIC_MOVE|moveDirectory|renameTo".r
-    val found = {
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally files.close()
-    }.filter(f => rename.findFirstIn(java.nio.file.Files.readString(f)).isDefined)
-      .map(_.getFileName.toString).toSet
-    assert(found === Set("Commit.scala"))
+    assert(mainFilesMatching(rename) === Set("Commit.scala"))
+  }
+
+  test("round checkpoints under src/main: only in the fixpoint driver") {
+    // one round discipline for every iterate-to-fixpoint kernel: a
+    // hand-rolled loop elsewhere owns its own checkpoint lifecycle, and
+    // the blocks of a round it forgets to drop stay pinned
+    val checkpoint = "localCheckpoint|dropCheckpoint".r
+    assert(mainFilesMatching(checkpoint) === Set("Fixpoint.scala"))
   }
 
   test("BASELINE.md budget table ↔ query registry closure") {

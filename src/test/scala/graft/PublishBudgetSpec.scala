@@ -3,7 +3,6 @@ package graft
 import graft.operators.{Sources, Streaming}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
@@ -30,23 +29,6 @@ class LoseOneFileCommitProtocol(jobId: String, path: String, dynamic: Boolean)
   * audit still refuses the publish. */
 class PublishBudgetSpec extends SparkSpec {
   import spark.implicits._
-
-  /** The descriptions of the jobs `body` starts. */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("(unlabeled)"))
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; org.apache.spark.ListenerBusDrain(sc) }
-    finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq
-  }
 
   private def tmp(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toFile

@@ -112,6 +112,28 @@ class TransitiveClosureSpec extends SparkSpec {
     assert(got === (0L to 79L).map(q => (79L, q, 79L - q)).toSet)
   }
 
+  test("null edge endpoints are dropped: BFS ≡ doubling ≡ reference BFS") {
+    // (r,a), (r,null), (a,null): an anti-join on (root, node) never
+    // matches a null node, so a BFS that kept these edges reached
+    // (r, null) at hops 1 AND at hops 2, while doubling's groupBy
+    // reached it once; a null source reaches nothing either way
+    val es = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (1L, null),
+      (2L, null), (null, 1L))
+    val roots = Seq((1L, 1L)).toDF("root", "node")
+    def rows(out: DataFrame): Seq[(Long, Long, Long)] =
+      out.as[(Long, Long, Long)].collect().toSeq.sorted
+    val want = bfs(Seq(1L), es.collect { case (a, b) if a != null && b != null =>
+      (a.longValue, b.longValue) }).toSeq.sorted
+    assert(want === Seq((1L, 1L, 0L), (1L, 2L, 1L)))
+    assert(rows(TransitiveClosure.minHopClosure(roots, es.toDF("src", "dst"))) === want)
+    assert(rows(TransitiveClosure.minHopClosureDoubling(roots,
+      es.toDF("src", "dst"))) === want)
+    // weighted: a null ENDPOINT drops like the others; a null WEIGHT on
+    // a whole edge still refuses (the e45c guard below)
+    assert(rows(TransitiveClosure.minCostClosureDoubling(roots,
+      es.map { case (a, b) => (a, b, 1L) }.toDF("src", "dst", "w"))) === want)
+  }
+
   private def runWeighted(roots: Seq[Long],
       edges: Seq[(Long, Long, Long)]): Set[(Long, Long, Long)] =
     TransitiveClosure.minCostClosureDoubling(
