@@ -17,6 +17,18 @@ import org.apache.spark.sql.SparkSession
   *  - AQE + shuffle partitions sized for the local[N] box: at cluster
   *    scale, shuffle partitions come from cluster config and AQE coalesces;
   *    locally 200 partitions over ~32 cores is pure scheduling overhead.
+  *  - `fs.file.impl` and `fs.AbstractFileSystem.file.impl` name the
+  *    fork-free local file system ([[ForkFreeLocalFileSystem]],
+  *    [[ForkFreeLocalFs]]). Without the native `libhadoop`, the stock
+  *    classes fork a `chmod` per file and directory created and four
+  *    `readlink`s per FileContext rename: a JFR recording of one
+  *    `trickle_publish` bench run counts 2,723 process starts with the
+  *    stock classes and 24 with these (Spark's own `rm -rf`s remain).
+  *    Sticky, setuid and setgid bits, symlinks, non-POSIX file systems
+  *    and errors still take Hadoop's own path. The FileSystem is cached
+  *    JVM-wide: the first `file:` FileSystem created without these
+  *    settings (any code that touches `file:` before the session) would
+  *    be the stock one for the rest of the JVM.
   */
 object SparkEnv {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -68,6 +80,8 @@ object SparkEnv {
       // RpcEndpointNotFoundException. The report is telemetry, not state.
       .config("spark.sql.streaming.stateStore.coordinatorReportSnapshotUploadLag",
         "false")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

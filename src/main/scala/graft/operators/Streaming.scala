@@ -1285,8 +1285,6 @@ object Streaming {
     val s = batch.sparkSession
     val centBase = s"$base/centroids"
     val labBase = s"$base/labels"
-    def tableDone(tb: String): Boolean =
-      new java.io.File(s"$tb/published/_batch_$batchId").exists
     def doneAll(): Unit = markApplied(marker)
     def checkAudit(tb: String, audit: DataFrame): Unit = {
       val failed = audit.filter(!col("ok"))

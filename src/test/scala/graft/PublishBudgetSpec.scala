@@ -22,11 +22,17 @@ class LoseOneFileCommitProtocol(jobId: String, path: String, dynamic: Boolean)
   }
 }
 
-/** The fixed cost of the O(Δ) publish path, in Spark jobs: one s18
-  * maintenance trigger and one bucketed upsert of a 2-row delta each
-  * stay within a job budget, the frozen model a trigger assigns against
-  * follows a re-published table, and a staged file lost before the
-  * audit still refuses the publish. */
+/** Marks the end of a [[PublishBudgetSpec]] process recording: JFR
+  * delivers events in time order, so once the stream sees this event it
+  * has seen every process started before it. */
+class ForkProbeEnd extends jdk.jfr.Event
+
+/** The fixed cost of the O(Δ) publish path, in Spark jobs and in forked
+  * processes: one s18 maintenance trigger and one bucketed upsert of a
+  * 2-row delta each stay within a job budget and start no Hadoop shell
+  * command, the frozen model a trigger assigns against follows a
+  * re-published table, and a staged file lost before the audit still
+  * refuses the publish. */
 class PublishBudgetSpec extends SparkSpec {
   import spark.implicits._
 
@@ -110,6 +116,54 @@ class PublishBudgetSpec extends SparkSpec {
     assert(got.filter(_._1 >= 4) === want)
     assert(got.filter(_._1 < 4).map(_._2).forall(_ < 100L))
     assert(got.filter(_._1 >= 4).map(_._2).forall(_ >= 100L))
+  }
+
+  /** The command lines of the processes `body` starts, from JFR's
+    * `jdk.ProcessStart` event. */
+  private def processesOf(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val end = new java.util.concurrent.CountDownLatch(1)
+    val rs = new jdk.jfr.consumer.RecordingStream()
+    try {
+      rs.enable("jdk.ProcessStart")
+      rs.enable(classOf[ForkProbeEnd])
+      rs.onEvent("jdk.ProcessStart", e => seen.add(e.getString("command")): Unit)
+      rs.onEvent(classOf[ForkProbeEnd].getName, _ => end.countDown())
+      rs.startAsync()
+      body
+      new ForkProbeEnd().commit()
+      assert(end.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the JFR stream did not deliver its end mark")
+    } finally rs.close()
+    seen.asScala.toSeq
+  }
+
+  test("a checkpointed s18 trigger and a 2-row bucketed upsert fork no " +
+    "Hadoop shell command") {
+    val base = s18Base
+    val src = tmp("graft-s18-src")
+    embeddings.filter(col("vec_id").between(6, 7)).write.mode("overwrite").parquet(src)
+    val bup = s"${tmp("graft-bup-forks")}/store"
+    Sources.bucketedUpsertStaged(spark,
+      (1L to 200L).map(k => (k, s"v$k")).toDF("k", "v"), bup, Seq("k"), "_batch_0")
+    val delta = fileBatch(Seq((1001L, "a"), (1002L, "b")).toDF("k", "v"))
+    var audit: DataFrame = null
+    val started = processesOf {
+      spark.readStream.schema(embeddings.schema).parquet(src).writeStream
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          Streaming.labelMaintSink(base)(df, id + 4L)
+        }
+        .option("checkpointLocation", s"${tmp("graft-s18-ckpt")}/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      audit = Sources.bucketedUpsertStaged(spark, delta, bup, Seq("k"), "_batch_1")
+    }
+    assert(new java.io.File(s"$base/_applied/4").exists)
+    assert(audit.filter(!col("ok")).isEmpty)
+    val shell = started.filter(c =>
+      Set("chmod", "readlink", "ls", "stat")(c.trim.split("\\s+").head.split('/').last))
+    assert(shell.size === 0, s"Hadoop shell forks; all ${started.size} " +
+      s"process starts:\n${started.mkString("\n")}")
   }
 
   /** Runs `body` with every write committed by [[LoseOneFileCommitProtocol]]. */
