@@ -26,8 +26,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       BloomFunctions.aggInfo, BloomFunctions.aggBuilder))
     ext.injectFunction((FunctionIdentifier(BloomFunctions.MightContainName),
       BloomFunctions.mightContainInfo, BloomFunctions.mightContainBuilder))
-    // conf-gated exact→approx percentile rewrite (off by default) —
-    // the library's one optimizer rule; see its scaladoc
-    ext.injectOptimizerRule(graft.plans.ApproxPercentileRewrite.apply)
   }
 }

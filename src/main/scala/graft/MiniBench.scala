@@ -1,4 +1,8 @@
 package graft
+
+import graft.operators.{LabelStore, PairStore, TokenizerStore, VectorIndexStore}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object MiniBench {
   /** Dev-only micro-bench: median-of-N per named query under the Bench
     * protocol (caches persist across runs; pass --cold to clear,
@@ -8,12 +12,16 @@ object MiniBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkEnv.session("mini")
     val cold = args.contains("--cold")
-    // --rebuild: force the published stores (d46 pairs, d61 labels, d74
-    // vector index, d85 tokenizer models) to re-derive on EVERY publisher
+    // --rebuild: the publisher keys re-derive their store (d46 pairs,
+    // d61 labels, d74 vector index, d85 tokenizer models) on EVERY
     // sample — the cold-publish regression measurement the idempotent
     // production path hides
-    if (args.contains("--rebuild"))
-      spark.conf.set("spark.graft.forceRebuildStores", "true")
+    val rebuilds: Map[String, (SparkSession, String) => DataFrame] =
+      if (!args.contains("--rebuild")) Map.empty
+      else Map("d46_pair_store_publish" -> (PairStore.rebuild _),
+        "d61_label_store_publish" -> (LabelStore.rebuild _),
+        "d74_index_publish" -> (VectorIndexStore.rebuild _),
+        "d85_tokenizer_store" -> (TokenizerStore.rebuild _))
     val gc = args.contains("--gc")
     val each = args.contains("--each")
     val reps = args.collectFirst { case a if a.startsWith("--reps=") => a.drop(7).toInt }.getOrElse(3)
@@ -26,7 +34,8 @@ object MiniBench {
       if (cold) spark.sharedState.cacheManager.clearCache()
       if (gc) System.gc()
       val t0 = System.nanoTime()
-      SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      rebuilds.getOrElse(n, SparkEntry.queries(n))(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
     qs.foreach { n => SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save() }

@@ -52,8 +52,7 @@ object EmbeddingOps {
     *    partial-aggregation-order-dependent and could flip an argmin
     *    near a tie;
     *  - assignment ties break on cluster id; seeds are the k smallest
-    *    vec_ids (k-means++ is the quality swap, same kernel);
-    *    iteration count is FIXED ([[KmeansIters]]) — a convergence test
+    *    vec_ids; iteration count is FIXED ([[KmeansIters]]) — a convergence test
     *    would make the iteration count data-dependent and the oracle
     *    unmirrorable;
     *  - a centroid that loses all members simply vanishes (k shrinks) —
@@ -238,20 +237,12 @@ object EmbeddingOps {
   private def vectorSeeds(rows: Seq[Row]): Model =
     seedModel(rows, 1, rows.headOption.fold(0)(_.getSeq[Double](1).length))
 
-  /** The d59 model over a [[usable]] array frame. Seeding: the k
-    * smallest vec_ids by default — arbitrary but oracle-mirrorable (the
-    * DuckDB CTEs pin the same k ids). The quality swap is
-    * `spark.graft.kmeansPlusPlus` (off by default so every oracle keeps
-    * exact semantics — the approx-percentile rewrite's flag
-    * discipline). */
-  private def kmeansModel(ea: DataFrame, k: Int, iters: Int): Model = {
-    val plusPlus = ea.sparkSession.conf
-      .get("spark.graft.kmeansPlusPlus", "false").toBoolean
-    val seeds =
-      if (plusPlus) farthestPointSeeds(ea, k)
-      else vectorSeeds(ea.orderBy("vec_id").limit(k).collect().toSeq)
-    lloyd(ea, seeds, iters, "kmeans-lloyd-round")
-  }
+  /** The d59 model over a [[usable]] array frame, seeded with the k
+    * smallest vec_ids — arbitrary but oracle-mirrorable (the DuckDB
+    * CTEs pin the same k ids). */
+  private def kmeansModel(ea: DataFrame, k: Int, iters: Int): Model =
+    lloyd(ea, vectorSeeds(ea.orderBy("vec_id").limit(k).collect().toSeq),
+      iters, "kmeans-lloyd-round")
 
   /** Collects a model RELATION — a (cid, dim, c) centroid table (the
     * single sub-space 0) or an (m, cid, dim, c) codebook — into the
@@ -278,30 +269,6 @@ object EmbeddingOps {
           s"not ${model.head._3.length} like cid=${model.head._2}")
     }
     model
-  }
-
-  /** Greedy farthest-point seed selection (the deterministic k-means++
-    * variant behind `spark.graft.kmeansPlusPlus`): seed 1 = smallest
-    * vec_id; each next seed = the point with MAXIMUM decimal-exact
-    * min-distance to the chosen set (ties → smallest vec_id) instead of
-    * a D²-weighted random draw: the same spread-out seeds, no RNG to
-    * mirror. Each round assigns the not-yet-chosen vectors to the
-    * chosen seeds with [[assignArr]], then takes one global argmax; k−1
-    * sequential corpus passes; only the ≤ k chosen vectors are held in
-    * memory. */
-  private def farthestPointSeeds(ea: DataFrame, k: Int): Model = {
-    def firstOf(e: DataFrame) =
-      vectorSeeds(e.orderBy("vec_id").limit(1).collect().toSeq)
-    var chosen = firstOf(ea)
-    var done = chosen.isEmpty
-    while (chosen.size < k && !done) {
-      val next = assignArr(ea.filter(!col("vec_id").isin(chosen.map(_._2): _*)), chosen)
-        .agg(max_by(col("vec_id"), struct(col("dist2"), -col("vec_id"))))
-        .head()
-      if (next.isNullAt(0)) done = true // fewer than k distinct points
-      else chosen ++= firstOf(ea.filter(col("vec_id") === next.getLong(0)))
-    }
-    chosen
   }
 
   /** d60 — CLUSTER-scoped semantic dedup: what the SemDeDup paper

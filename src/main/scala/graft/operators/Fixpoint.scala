@@ -53,10 +53,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * upstream shuffle-map stage (which holds no observed operator)
   * therefore leaves the statistics exactly those of the materialized
   * rows. The checkpoint itself never recomputes: a lost local-checkpoint
-  * block fails its reader rather than re-running the plan. (The publish
-  * gate's observed count, `Sources.scala`'s stage write, is a different
-  * case: its observed operator may sit in a map stage below an
-  * exchange.)
+  * block fails its reader rather than re-running the plan. The publish
+  * gate's observed count (`Sources.writeAuditPublishStaged`) rests on
+  * the same argument: it observes the root of the staged frame, and
+  * the stage write adds no exchange above it.
   */
 object Fixpoint {
   /** Round cap for every kernel. Large/small-star converges in

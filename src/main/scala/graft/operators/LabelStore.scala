@@ -13,14 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (vec_id, cid) assignment, so d61 ([[publish]]) runs the labeler once
   * per corpus snapshot and the consumers read the published table.
   * LlmOpsSpec pins store-fed ≡ the `*Over` twins at
-  * [[EmbeddingOps.KmeansK]]/[[EmbeddingOps.KmeansIters]].
-  *
-  * The labeler conf `spark.graft.kmeansPlusPlus` is read at publish
-  * time: after flipping it mid-JVM, re-run [[publish]] under the
-  * forced-rebuild conf of [[PublishedStore]], the way a production
-  * label table is re-materialized when its job config changes. At
-  * 100 TB the table is bucketed on vec_id (or on cid for the
-  * per-cluster consumers). */
+  * [[EmbeddingOps.KmeansK]]/[[EmbeddingOps.KmeansIters]]. At 100 TB
+  * the table is bucketed on vec_id (or on cid for the per-cluster
+  * consumers). */
 object LabelStore extends PublishedStore("labelstore", Seq("labels" -> Seq("vec_id"))) {
   protected def derive(s: SparkSession, d: String): Map[String, DataFrame] =
     Map("labels" -> EmbeddingOps.kmeansLabelsFor(s, d))

@@ -31,7 +31,7 @@ import org.apache.spark.sql.types.DecimalType
   * This object keeps the ONE definition of the text primitives those
   * families share — the dedup identity ([[normText]]), the gram/shingle
   * stream ([[gramOccurrences]]/[[docShingles]]), tokenization, the
-  * MinHash coefficient family, and the corpus-persist knob — so the
+  * MinHash coefficient family, and the corpus-persist policy — so the
   * normalization and gram shapes can never drift between operators.
   */
 object LlmOps {
@@ -58,32 +58,19 @@ object LlmOps {
     (as, bs)
   }
 
-  /** Persist an O(corpus)-sized intermediate that multiple stages re-read.
-    *
-    * `Dataset.cache()` already defaults to MEMORY_AND_DISK, but a
-    * memory-first materialization of a corpus-sized table at 100 TB is
-    * eviction churn — so the level is explicit and conf-tunable:
-    * `spark.graft.corpusPersistLevel` = any `StorageLevel` name
-    * (DISK_ONLY for huge corpora) or NONE to recompute instead of
-    * materializing. Locally MEMORY_AND_DISK is a measured ~25% win on
-    * the shingle self-join (exchange reuse doesn't cover both branches);
-    * correctness never depends on it (LlmOpsSpec runs the near-dup ops
-    * under NONE and asserts identical results). Reduced-size tables
-    * (band signatures, centroids) keep plain `.cache()`.
+  /** Persist an O(corpus)-sized intermediate that multiple stages
+    * re-read, at MEMORY_AND_DISK — the one named place for the corpus
+    * persist policy. Locally it is a measured ~25% win on the shingle
+    * self-join (exchange reuse doesn't cover both branches). Reduced-size
+    * tables (band signatures, centroids) keep plain `.cache()`.
     *
     * Lifecycle: operators return LAZY frames, so they cannot unpersist
     * after "their" action — the SESSION owns cached-relation lifetime.
     * The harness paths clear between queries (Verify and Bench both
     * call `cacheManager.clearCache()`); a long-lived serving session
-    * should do the same between unrelated requests, or run with
-    * corpusPersistLevel=NONE and let each request recompute. */
-
-  private[graft] def persistCorpus(df: DataFrame): DataFrame = {
-    val lvl = df.sparkSession.conf.get("spark.graft.corpusPersistLevel", "MEMORY_AND_DISK")
-    if (lvl.equalsIgnoreCase("NONE")) df
-    else df.persist(org.apache.spark.storage.StorageLevel.fromString(
-      lvl.toUpperCase(java.util.Locale.ROOT)))
-  }
+    * should do the same between unrelated requests. */
+  private[graft] def persistCorpus(df: DataFrame): DataFrame =
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** The dedup identity (E18): Unicode NFC → whitespace collapse →
     * trim → lowercase. NFC first ([[graft.functions.NfcNormalize]], a

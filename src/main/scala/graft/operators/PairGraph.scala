@@ -127,7 +127,7 @@ object PairGraph {
     val sizes = shFlag.groupBy("doc_id")
       .agg(count(lit(1)).as("n_sh"),
         sum(coalesce(col("is_hot"), lit(0L))).as("n_hot"))
-    // corpus-sized (all rare shingles + sizes): honor the persist knob,
+    // corpus-sized (all rare shingles + sizes): the corpus persist policy,
     // not a memory-first cache. With a probe, each shingle row carries
     // an is_new flag so candidate generation can demand the pair TOUCH
     // the delta (probe = None leaves the plan byte-identical — the

@@ -408,17 +408,12 @@ object Profiling {
     * DIFFERENT boundaries and misalign offsets against partitions
     * (observed as ±1-bucket drift near boundaries when the offsets were
     * collected in a separate job). The sharded frame is therefore
-    * PERSISTED (honoring the same `spark.graft.corpusPersistLevel` knob
-    * as LlmOps): boundaries are drawn exactly once when the cache
-    * materializes, and both subtrees read the materialized shards — a
-    * structural guarantee that does not depend on the planner's
-    * ReuseExchange firing (which the previous version relied on, a
-    * correctness-by-planner-property coupling fragile across Spark
-    * upgrades). With `corpusPersistLevel=NONE` the query falls back to
-    * the one-query ReuseExchange unification (the pre-round-9 behavior
-    * — correct on current Spark, but planner-dependent). Scale: one
-    * range shuffle + one 32-key shuffle for the window; no global
-    * single-task sort; cache is 2 narrow columns + shard id. */
+    * PERSISTED ([[LlmOps.persistCorpus]]): boundaries are drawn exactly
+    * once when the cache materializes, and both subtrees read the
+    * materialized shards — a structural guarantee that does not depend
+    * on the planner's ReuseExchange firing. Scale: one range shuffle +
+    * one 32-key shuffle for the window; no global single-task sort;
+    * cache is 2 narrow columns + shard id. */
   def equidepthBins(s: SparkSession, d: String, nBuckets: Int = 10): DataFrame = {
     val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
     globalRankByRange(o, Seq(col("o_totalprice"), col("o_orderkey")))
@@ -432,14 +427,10 @@ object Profiling {
     * deterministic result) — the shared kernel behind [[equidepthBins]]
     * (p04) and [[QualityOps.perplexityBuckets]] (d50). Adds `rank0` (0-based
     * global rank) and `n` (total rows) to `df`'s columns; see the p04
-    * scaladoc above for the shard/offset construction, the persist-once
-    * boundary-stability argument, and the `corpusPersistLevel=NONE`
-    * ReuseExchange fallback semantics. */
+    * scaladoc above for the shard/offset construction and the
+    * persist-once boundary-stability argument. */
   private[graft] def globalRankByRange(df: DataFrame,
       sortExprs: Seq[Column], nShards: Int = 32): DataFrame = {
-    // ONE definition of the persist knob (LlmOps.persistCorpus) — with
-    // corpusPersistLevel=NONE this falls back to the one-query
-    // ReuseExchange unification, per the p04 scaladoc above
     val sharded = LlmOps.persistCorpus(df
       .repartitionByRange(nShards, sortExprs: _*)
       .withColumn("shard", spark_partition_id()))

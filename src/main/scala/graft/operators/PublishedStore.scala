@@ -35,19 +35,18 @@ import org.apache.spark.sql.types.StructType
   *     `EmbeddingOps.clonedCells`) key on that version, not on the
   *     mutable corpus path.
   *   - Re-run: publishing a corpus whose store is built serves the
-  *     recorded manifest (a store trains once per snapshot) unless
-  *     `spark.graft.forceRebuildStores` is set, which derives and
-  *     promotes afresh ([[Commit.swap]] keeps readers atomic).
+  *     recorded manifest (a store trains once per snapshot);
+  *     [[rebuild]] derives and promotes afresh ([[Commit.swap]] keeps
+  *     readers atomic).
   *   - Read ([[read]]): publish-if-absent, then a plain parquet scan,
   *     so filters and column pruning reach the store. A publish whose
   *     audit refused the table throws an IllegalStateException naming
   *     the store and the corpus instead of scanning a missing path.
   *
   * Relations the derivation persisted are released once the manifest is
-  * collected. The store is keyed by corpus dir only: a conf that changes
-  * the derivation mid-JVM takes effect on the next forced rebuild. At
-  * 100 TB the tables live bucketed on their keys under a transactional
-  * catalog commit; the composition is unchanged. */
+  * collected. The store is keyed by corpus dir only. At 100 TB the
+  * tables live bucketed on their keys under a transactional catalog
+  * commit; the composition is unchanged. */
 private[graft] abstract class PublishedStore(name: String,
     tables: Seq[(String, Seq[String])]) {
 
@@ -68,12 +67,17 @@ private[graft] abstract class PublishedStore(name: String,
   private[graft] def version(d: String): Long = versions.getOrElse(d, 0L)
 
   /** The publisher job: returns the audit manifest. */
-  def publish(s: SparkSession, d: String): DataFrame = lockFor(d).synchronized {
-    val force = s.conf.get("spark.graft.forceRebuildStores", "false").toBoolean
-    val (schema, rows) =
-      manifestCache.get(d).filterNot(_ => force).getOrElse(publishFresh(s, d))
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
+  def publish(s: SparkSession, d: String): DataFrame =
+    manifestOf(s, lockFor(d).synchronized(
+      manifestCache.getOrElse(d, publishFresh(s, d))))
+
+  /** Derives, audits and promotes corpus `d`'s store afresh even when it
+    * is built; returns the new audit manifest. */
+  def rebuild(s: SparkSession, d: String): DataFrame =
+    manifestOf(s, lockFor(d).synchronized(publishFresh(s, d)))
+
+  private def manifestOf(s: SparkSession, m: (StructType, Array[Row])): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(m._2: _*), m._1)
 
   private def publishFresh(s: SparkSession, d: String): (StructType, Array[Row]) = {
     val rels = derive(s, d)

@@ -998,14 +998,15 @@ object Sources {
     // cost of the model-table publishes
     val audit = labeled(s, s"wap-audit:$tbl")(auditKeys(staged, keyCols))
     val checks = Seq(
-      // NOTE (round-18 ADVICE, documented at the CHECK site): when the
-      // caller used the observe overload, `expectedRows` is the count
-      // the staging write's own plan produced — so this check compares
-      // plan-produced rows vs parquet read-back, and can no longer
-      // distinguish a nondeterministic derivation (or an observe-metric
-      // anomaly, e.g. a stage-retry double count) from real row loss.
-      // Callers asserting an EXTERNAL expectation must pick the
-      // explicit-count overload (the poisoned-stage spec does).
+      // Under the observe overload `expectedRows` is the count the
+      // staging write's own plan produced. The observe sits at the root
+      // of the staged frame and a plain `.write.parquet` adds no
+      // exchange above it, so it runs only in the write job's result
+      // tasks and counts each partition once under task or stage
+      // retries (the argument in Fixpoint's scaladoc; StorageSpec pins
+      // the plan shape). What it cannot tell from row loss is a
+      // nondeterministic derivation: callers asserting an EXTERNAL
+      // expectation pick the explicit-count overload.
       ("rows_match_expected", audit.rows, audit.rows == expectedRows),
       ("null_keys", audit.nullKeys, audit.nullKeys == 0L),
       ("dup_keys", audit.dupKeys, audit.dupKeys == 0L))

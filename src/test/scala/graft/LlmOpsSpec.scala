@@ -662,34 +662,6 @@ class LlmOpsSpec extends SparkSpec {
     assert(again === got)
   }
 
-  test("d59 k-means++ flag: bad default seeds recovered, inertia strictly improves") {
-    // adversarial fixture for the DEFAULT smallest-id seeding: the 3
-    // smallest ids all sit in one planted group, so default seeds start
-    // collapsed and 3 fixed Lloyd iterations keep two groups merged;
-    // farthest-point ++ seeds land one per group and recover exactly
-    def pt(base: Seq[Double], jit: Double): Seq[Float] =
-      base.map(x => (x + jit).toFloat)
-    val g0 = Seq(0.0, 0.0, 0.0, 0.0)
-    val g1 = Seq(10.0, 10.0, 0.0, 0.0)
-    val g2 = Seq(0.0, 0.0, 10.0, 10.0)
-    val rows = Seq(
-      (0L, pt(g0, 0.0)), (1L, pt(g0, 0.1)), (2L, pt(g0, -0.1)), (3L, pt(g0, 0.2)),
-      (10L, pt(g1, 0.0)), (11L, pt(g1, 0.1)), (12L, pt(g1, -0.2)),
-      (20L, pt(g2, 0.0)), (21L, pt(g2, 0.15)), (22L, pt(g2, -0.15)))
-    val df = rows.toDF("vec_id", "embedding")
-    def runK() = EmbeddingOps.kmeansOver(df, 3, 3)
-      .as[(Long, Long, Long, Double)].collect().toSeq
-    val off = runK()
-    spark.conf.set("spark.graft.kmeansPlusPlus", "true")
-    val on = try runK() finally spark.conf.unset("spark.graft.kmeansPlusPlus")
-    assert(on.map(r => (r._2, r._3)).toSet === Set((4L, 0L), (3L, 10L), (3L, 20L)),
-      s"++ seeds must recover the planted groups exactly: $on")
-    assert(on.map(_._4).sum < off.map(_._4).sum,
-      "the adversarial fixture must show a strict inertia win")
-    // flag restored: the default (oracle) path is untouched
-    assert(runK() === off)
-  }
-
   test("a malformed centroid relation is refused, naming the centroid") {
     val emb = Seq((0L, Seq(1f, 2f, 3f)), (1L, Seq(0f, 0f, 1f))).toDF("vec_id", "embedding")
     def refusal(assign: => Any): String =
@@ -1016,16 +988,6 @@ class LlmOpsSpec extends SparkSpec {
       assert(v === (sim >= 0.8))
     }
     assert(got.nonEmpty)
-  }
-
-  test("near-dup results do not depend on corpus persistence level") {
-    val defaults = (PairGraph.ngramJaccard(spark, Sf).collect().toSeq,
-      PairGraph.minhashNearDup(spark, Sf).collect().toSeq)
-    spark.conf.set("spark.graft.corpusPersistLevel", "NONE")
-    try {
-      assert(PairGraph.ngramJaccard(spark, Sf).collect().toSeq === defaults._1)
-      assert(PairGraph.minhashNearDup(spark, Sf).collect().toSeq === defaults._2)
-    } finally spark.conf.unset("spark.graft.corpusPersistLevel")
   }
 
   test("IVF multi-probe: nprobe=2 recall ≥ nprobe=1, same contract") {

@@ -65,12 +65,9 @@ class PairStoreSpec extends SparkSpec {
 
   test("re-publish is safe: second publish leaves a complete readable store") {
     val first = PairStore.publish(spark, Sf).collect().toSeq
-    // a plain re-run serves the recorded manifest; force the second
-    // publish so the rename-aside swap really runs
-    spark.conf.set("spark.graft.forceRebuildStores", "true")
-    val second =
-      try PairStore.publish(spark, Sf).collect().toSeq
-      finally spark.conf.set("spark.graft.forceRebuildStores", "false")
+    // a plain re-run serves the recorded manifest; rebuild so the
+    // rename-aside swap really runs
+    val second = PairStore.rebuild(spark, Sf).collect().toSeq
     // deterministic corpus ⇒ identical manifest, and the swapped-in
     // table still feeds consumers correctly
     assert(second === first)

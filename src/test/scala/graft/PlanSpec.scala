@@ -683,38 +683,6 @@ class PlanSpec extends SparkSpec {
         s"${exchanges.map(_.outputPartitioning).mkString(", ")}")
   }
 
-  test("approx-percentile rewrite: off by default, one conf flips every percentile") {
-    import graft.plans.ApproxPercentileRewrite
-    import graft.operators.Profiling
-    // default: exact percentile in the plan, no approx anywhere
-    // note: ApproximatePercentile prints as "percentile_approx"
-    val offPlan = planOf("p07_mad_outliers").toString
-    assert(offPlan.contains("percentile") && !offPlan.contains("percentile_approx"),
-      offPlan.take(800))
-    val exact = Profiling.madOutliers(spark, Sf)
-      .select("event_type", "med", "n").collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    ApproxPercentileRewrite.enabled(spark) {
-      val df = Profiling.madOutliers(spark, Sf)
-      val onPlan = df.queryExecution.sparkPlan.toString
-      assert(onPlan.contains("percentile_approx"),
-        "flag on must rewrite percentile → percentile_approx:\n" + onPlan.take(800))
-      val approx = df.select("event_type", "med", "n").collect()
-        .map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
-      assert(approx.keySet === exact.keySet)
-      approx.foreach { case (k, (amed, an)) =>
-        val (emed, en) = exact(k)
-        assert(an === en, s"$k row count changed under rewrite")
-        // approx returns a real element (no interpolation) — compare
-        // with a generous tolerance; counts are untouched
-        assert(math.abs(amed - emed) <= 0.05 * (math.abs(emed) + 1.0),
-          s"$k med approx=$amed exact=$emed")
-      }
-    }
-    // flag restored: the exact plan is back
-    assert(!planOf("p07_mad_outliers").toString.contains("percentile_approx"))
-  }
-
   test("store readers prune the published pair scan to the columns they use") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     // d47 projects (i, j, jac); the store also carries n_common/n_i/n_j.

@@ -713,6 +713,63 @@ class StorageSpec extends SparkSpec {
     assert(back === Set((1L, 5L), (2L, 3L), (3L, 9L)))
   }
 
+  test("f09 WAP observed row count sits above every exchange of the stage write") {
+    // the retry argument in Sources.writeAuditPublishImpl: an observe
+    // with no exchange above it runs only in the write job's result
+    // tasks, so a task or stage retry cannot count a partition twice
+    import graft.operators.Sources
+    import org.apache.spark.sql.execution.{CollectMetricsExec, CommandResultExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    // the ancestors of every CollectMetricsExec under p
+    def above(p: SparkPlan, anc: List[SparkPlan]): Seq[List[SparkPlan]] = p match {
+      case _: CollectMetricsExec => Seq(anc)
+      case _ => kids(p).flatMap(above(_, p :: anc))
+    }
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        if (nodes(qe.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec]))
+          writes.add(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val base = java.nio.file.Files.createTempDirectory("graft-wap-obs").toString
+    // an aggregate and a sort: two exchanges inside the staged frame
+    val derived = (1L to 200L).toDF("k")
+      .groupBy((col("k") % 37).as("doc_id")).agg(count(lit(1)).as("norm_len"))
+      .orderBy("doc_id")
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val manifest =
+      try {
+        val m = Sources.writeAuditPublishStaged(spark, derived, base, Seq("doc_id"),
+          false, None).collect()
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        m
+      } finally spark.listenerManager.unregister(listener)
+    assert(manifest.forall(_.getBoolean(2)), manifest.mkString(", "))
+    val stage = writes.asScala.filter(w => above(w, Nil).nonEmpty).toSeq
+    assert(stage.size === 1, s"one observed stage write: ${writes.asScala.mkString("\n")}")
+    val paths = above(stage.head, Nil)
+    assert(paths.size === 1, stage.head.toString)
+    assert(!paths.head.exists(_.isInstanceOf[ShuffleExchangeLike]),
+      s"an exchange sits above the observed count:\n${stage.head}")
+    assert(nodes(stage.head).count(_.isInstanceOf[ShuffleExchangeLike]) >= 2,
+      s"fixture must shuffle below the observe:\n${stage.head}")
+  }
+
   test("f10 compaction: file count hits the declared target, strictly fewer files") {
     // layout facts the SQL oracle cannot see: the compacted directory
     // holds exactly n_target_files parquet parts, strictly fewer than
@@ -1369,9 +1426,10 @@ class StorageSpec extends SparkSpec {
     import operators.Sources
     val layout = s"$wh/f17_layout"
     val store = s"$wh/f17_manifest"
+    // file_id lives in the directory name only, as the production
+    // writer's partitionBy("file_id") lays it out
     def bin(b: Long, keys: Seq[Long]): Unit =
-      keys.map(k => (k, b)).toDF("l_orderkey", "file_id")
-        .write.mode("overwrite").parquet(s"$layout/file_id=$b")
+      keys.toDF("l_orderkey").write.mode("overwrite").parquet(s"$layout/file_id=$b")
     (0L to 5L).foreach(b => bin(b, (b * 100 + 1) to (b * 100 + 50)))
     def fullRecompute(): Set[(Long, Long, Long, Long)] =
       spark.read.parquet(layout)

@@ -73,21 +73,18 @@ class TokenizerStoreSpec extends SparkSpec {
     val first = operators.EmbeddingOps.annDelete(spark, p).collect()
     assert(first.exists(_.getLong(1) >= 15L),
       "fixture too small to make staleness observable")
-    // regenerate at the SAME path, then force-rebuild
+    // regenerate at the SAME path, then rebuild
     emb.filter(col("vec_id") < 15).write.mode("overwrite")
       .parquet(s"$p/embeddings.parquet")
-    spark.conf.set("spark.graft.forceRebuildStores", "true")
-    try {
-      val man2 = operators.VectorIndexStore.publish(spark, p)
-        .as[(String, String, Long, Boolean)].collect().toSeq
-      assert(man2.forall(_._4))
-    } finally spark.conf.set("spark.graft.forceRebuildStores", "false")
+    val man2 = operators.VectorIndexStore.rebuild(spark, p)
+      .as[(String, String, Long, Boolean)].collect().toSeq
+    assert(man2.forall(_._4))
     assert(operators.VectorIndexStore.version(p) === v0 + 2)
     val second = operators.EmbeddingOps.annDelete(spark, p).collect()
     assert(second.nonEmpty && second.forall(_.getLong(1) < 15L),
       "d79 served a clone of the superseded store's cells")
     // tokenizer, pair and label stores: same version discipline — a
-    // plain re-run serves the recorded manifest, a forced one re-derives
+    // plain re-run serves the recorded manifest, a rebuild re-derives
     val docsP = java.nio.file.Files.createTempDirectory("graft-regen2").toString
     spark.read.parquet(s"$Sf/documents.parquet").limit(50)
       .write.mode("overwrite").parquet(s"$docsP/documents.parquet")
@@ -98,9 +95,7 @@ class TokenizerStoreSpec extends SparkSpec {
       assert(store.version(dir) === t0 + 1)
       assert(store.publish(spark, dir).collect().toSeq === man)
       assert(store.version(dir) === t0 + 1, s"$store re-run must not rebuild")
-      spark.conf.set("spark.graft.forceRebuildStores", "true")
-      try store.publish(spark, dir).collect()
-      finally spark.conf.set("spark.graft.forceRebuildStores", "false")
+      store.rebuild(spark, dir).collect()
       assert(store.version(dir) === t0 + 2, s"$store forced rebuild must mint a version")
     }
   }
