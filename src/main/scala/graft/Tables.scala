@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver-generated parquet tables (/root/repo/TESTDATA.md).
   *
@@ -43,13 +43,4 @@ object Tables {
       case _ => raw // future Spark versions may read nanos natively
     }
   }
-
-  /** Schema of events with `ts` already converted — for streaming reads. */
-  def eventsSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType), // raw nanos; converted after read
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
 }

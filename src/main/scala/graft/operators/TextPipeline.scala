@@ -48,10 +48,12 @@ object TextPipeline {
         .as("word"))
 
   /** The 182-word stop list, whitespace-tokenized, exact-match set.
-    * Tiny by construction → always broadcast in the anti-join. */
+    * Tiny by construction → always broadcast in the anti-join. Not
+    * deduplicated: every consumer anti-joins it or collects it into a
+    * `Set`, so a repeated word cannot change a result, and a `distinct`
+    * would cost each query a shuffle stage and a job. */
   def stopWords(spark: SparkSession, path: String): DataFrame =
     spark.read.text(path)
       .select(explode(split(trim(col("value")), "\\s+")).as("word"))
       .filter(length(col("word")) > 0)
-      .distinct()
 }

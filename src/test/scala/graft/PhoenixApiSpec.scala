@@ -42,6 +42,118 @@ class PhoenixApiSpec extends SparkSpec {
     assert(Set(1L, 2L).contains(out("a"))) // "any value" contract
   }
 
+  // Hermetic planted data: `rows` input rows over `parts` map tasks, no
+  // corpus. Row i emits three pairs, two of them on shared keys, so every
+  // task holds far fewer keys than it emits.
+  private def planted(rows: Long, parts: Int) = spark.range(0, rows, 1, parts).as[Long]
+  private val emits: Long => Seq[(String, Long)] =
+    i => Seq((s"k${i % 97}", i), (s"k${i % 13}", 1L), (s"k${i % 97}", 2L))
+  private val plantedPairs = (0L until 5000L).flatMap(emits)
+
+  /** Shuffle records the tasks of `body` write. */
+  private def shuffleRecordsOf(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val written = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => written.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerBusDrain(sc) }
+    finally sc.removeSparkListener(listener)
+    written.get
+  }
+
+  test("sum and one combiner (F6/F7) ≡ brute-force fold over planted pairs") {
+    val sum = PhoenixApi.mapReduce(planted(5000, 4))(emits)(_ + _).collect().toMap
+    val want = plantedPairs.groupMapReduce(_._1)(_._2)(_ + _)
+    assert(sum === want)
+    val one = PhoenixApi.mapReduce(planted(5000, 4))(emits)((a, _) => a).collect().toMap
+    val values = plantedPairs.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    assert(one.keySet === values.keySet)
+    assert(one.forall { case (k, v) => values(k)(v) }, "keep-first keeps an emitted value")
+  }
+
+  test("buffer combiner (F5): the reducer receives the full multiset, duplicates included") {
+    val got = PhoenixApi.mapReduceGroups(planted(5000, 4))(emits)(
+      (k, vs: Iterator[Long]) => (k, vs.toSeq.sorted)).collect().toMap
+    val want = plantedPairs.groupMap(_._1)(_._2).view.mapValues(_.sorted).toMap
+    assert(got === want)
+    assert(got("k0").count(_ == 2L) > 1, "duplicate values reach the reducer")
+  }
+
+  test("planted text: tokenize ≡ TextPipeline.tokens; word count and inverted index ≡ brute force") {
+    val text = Seq("Don't STOP the th' 42 o'er' x", "", "the the don't-stop y's 'quoted'",
+      "UPPER lower Upper", "x x x")
+    val lines = text.zipWithIndex.map { case (t, i) => (t, i.toLong) }
+    val native = TextPipeline.tokens(text.toDF("value"), "value").as[String].collect().toSeq
+    assert(text.flatMap(PhoenixApi.tokenize) === native)
+    val ds = lines.toDS().repartition(3)
+    val counts = PhoenixApi.mapReduce(ds)(
+      { case (t, _) => PhoenixApi.tokenize(t).map(w => (w, 1L)) })(_ + _).collect().toMap
+    assert(counts === native.groupMapReduce(identity)(_ => 1L)(_ + _))
+    val postings = PhoenixApi.mapReduceGroups(ds)(
+      { case (t, l) => PhoenixApi.tokenize(t).map(w => (w, l)) })(
+      (w, ls: Iterator[Long]) => (w, ls.toSeq.sorted)).collect().toMap
+    val want = lines.flatMap { case (t, l) => PhoenixApi.tokenize(t).map(w => (w, l)) }
+      .groupMap(_._1)(_._2).view.mapValues(_.sorted).toMap
+    assert(postings === want)
+    assert(postings("the") === Seq(0L, 2L, 2L), "a word twice on a line is two values")
+  }
+
+  test("null values are values: combined and buffered, never dropped") {
+    val data = Seq[(String, String)](("a", null), ("a", "x"), ("b", null), ("b", null),
+      ("c", "y"), ("c", "z"), ("a", null)).toDS().repartition(2)
+    // null-aware max; a key holding only nulls combines to null
+    val max: (String, String) => String = (a, b) =>
+      if (a == null) b else if (b == null) a else if (a > b) a else b
+    val combined = PhoenixApi.mapReduce(data)(Seq(_))(max).collect().toMap
+    assert(combined === Map("a" -> "x", "b" -> null, "c" -> "z"))
+    val buffered = PhoenixApi.mapReduceGroups(data)(Seq(_))(
+      (k, vs: Iterator[String]) => { val s = vs.toSeq; (k, s.count(_ == null), s.size) })
+      .collect().map { case (k, nulls, n) => k -> ((nulls, n)) }.toMap
+    assert(buffered === Map("a" -> ((2, 3)), "b" -> ((2, 2)), "c" -> ((0, 2))))
+  }
+
+  test("a task with more distinct keys than the flush bound flushes and stays exact") {
+    // two tasks, each emitting keys 0..n-1 twice, in two passes: the
+    // container flushes mid-task, so a key's values reach the shuffle in
+    // several records of one task and must be merged reduce-side
+    val n = PhoenixApi.FlushBound + 5000L
+    val cyclic = (i: Long) => Seq((i % n, 1L))
+    val sum = PhoenixApi.mapReduce(planted(4 * n, 2))(cyclic)(_ + _).collect()
+    assert(sum.length === n)
+    assert(sum.forall(_._2 == 4L))
+    var sizes = Array.empty[(Long, Int)]
+    val records = shuffleRecordsOf {
+      sizes = PhoenixApi.mapReduceGroups(planted(4 * n, 2))(cyclic)(
+        (k, vs: Iterator[Long]) => (k, vs.size)).collect()
+    }
+    assert(sizes.length === n)
+    assert(sizes.forall(_._2 == 4))
+    // one record per key per task would be 2n: the buffers flushed
+    assert(records > 2 * n, "the container flushed before the task ended")
+  }
+
+  test("the map stage shuffles at most one record per key per task, not one per emit") {
+    val parts = 4
+    val keys = 10
+    val emitsPerRow = 5
+    val many = (i: Long) => Seq.fill(emitsPerRow)((i % keys, i))
+    val rows = 20000L
+    val sumRecords = shuffleRecordsOf {
+      PhoenixApi.mapReduce(planted(rows, parts))(many)(_ + _).collect()
+    }
+    val groupRecords = shuffleRecordsOf {
+      PhoenixApi.mapReduceGroups(planted(rows, parts))(many)(
+        (k, vs: Iterator[Long]) => (k, vs.size)).collect()
+    }
+    // every task sees all `keys` keys: exactly one record each
+    assert(sumRecords === parts * keys, s"for ${rows * emitsPerRow} emits")
+    assert(groupRecords === parts * keys, s"for ${rows * emitsPerRow} emits")
+  }
+
   test("t03 typed cogroup ≡ relational left-join rollup, zero-order customers kept") {
     import org.apache.spark.sql.functions._
     val got = operators.TypedOps.typedCogroup(spark, Sf)
